@@ -194,10 +194,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with StagingTabl
           // registering EXISTING data: declared schema/partitioning/
           // properties must MATCH the log's or be omitted (silently
           // accepting contradictory DDL would lie about the table's shape)
-          val log = new graft.tables.GraftLog(loc)
-          // metadata prefix-scan, not a full snapshot fold — registering a
+          // the log head, not a full snapshot fold — registering a
           // 10^6-file table must not parse its whole log on the driver
-          val meta = graft.tables.DistributedSnapshot.metadataAt(log, log.latestVersion())
+          val meta = new graft.tables.GraftLog(loc).head().metadata
           val logSchema = org.apache.spark.sql.types.DataType
             .fromJson(meta.schemaJson).asInstanceOf[StructType]
           def matches: Boolean =
@@ -746,24 +745,14 @@ class GraftV2Table(val path: String, ident: Identifier,
   private def spark: SparkSession = SparkSession.active
 
   /** The Table contract needs only METADATA (schema / partitioning /
-    * properties) — served by the prefix-scan fold (O(log lines matched),
-    * no file accumulation), NOT a full snapshot: loadTable runs at every
+    * properties) — served by the log head (O(head lines), no file
+    * accumulation), NOT a full snapshot: loadTable runs at every
     * statement's analysis, and a 10⁶-file table must not pay an
     * O(live-files) driver fold just to resolve a name. The actual scan's
-    * snapshot (and its reader-feature gate) happens once, in the relation
-    * the resolution rule builds.
+    * snapshot happens once, in the relation the resolution rule builds.
     */
-  private val meta: graft.tables.Metadata = {
-    val log = new graft.tables.GraftLog(path)
-    val vs = log.versions()
-    require(vs.nonEmpty, s"$path is not a GraftTable (no committed log)")
-    val target = versionAsOf.getOrElse(vs.last)
-    require(vs.contains(target),
-      s"version $target does not exist for $path (have ${vs.headOption}..${vs.lastOption})")
-    if (log.store.filesystemBacked)
-      graft.tables.DistributedSnapshot.metadataAt(log, target)
-    else log.snapshot(target).metadata // non-filesystem stores: driver fold
-  }
+  private val meta: graft.tables.Metadata =
+    new graft.tables.GraftLog(path).head(versionAsOf.getOrElse(-1L)).metadata
 
   override def name(): String =
     versionAsOf.fold(ident.toString)(v => s"$ident@v$v")

@@ -246,7 +246,7 @@ object GraftMerge {
     // side (TableOps.dmlCandidates) and everything else the merge reads is
     // metadata-plane; by-source merges (below) still need the full file
     // list — every file is a rewrite candidate by construction
-    val (snap, lazyMode) = TableOps.dmlSnap(table)
+    val (snap, lazyHead) = TableOps.dmlSnap(table)
     val targetCols = snap.schema.fieldNames.toSeq
     // schema evolution: the OUTPUT schema appends source-only columns to the
     // target's (type conflicts rejected up front); without the flag the
@@ -333,11 +333,13 @@ object GraftMerge {
     // candidate (Delta's by-source merges scan the full table likewise)
     val candidates =
       if (bySourceN.nonEmpty) {
-        if (lazyMode) graft.tables.DistributedSnapshot.prunedFilesByExprs(
-          spark, table.path, snap, Nil) // full set — inherent to by-source
-        else snap.files
+        lazyHead match {
+          case Some(head) => graft.tables.DistributedSnapshot.prunedFilesByExprs(
+            spark, table.log, head, Nil) // full set — inherent to by-source
+          case None => snap.files
+        }
       }
-      else TableOps.dmlCandidates(table, snap, lazyMode, targetOnly ++ dynamicPreds)
+      else TableOps.dmlCandidates(table, snap, lazyHead, targetOnly ++ dynamicPreds)
     val scanTime = System.currentTimeMillis() - t0
 
     // source is always aliased so UpdateAll/InsertAll can reference its side

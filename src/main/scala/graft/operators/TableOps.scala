@@ -137,34 +137,34 @@ object TableOps {
     * properties, transactions, version) plus the candidate subset — never
     * the full file list.
     */
-  private[operators] def dmlSnap(table: GraftTable): (Snapshot, Boolean) = {
-    val v = table.version
-    if (GraftTable.lazyReadEligible(table.spark, table.log, v))
-      (graft.tables.DistributedSnapshot.snapshotHead(table.log, v), true)
-    else (table.snapshotAt(v), false)
-  }
+  private[operators] def dmlSnap(table: GraftTable): (Snapshot, Option[SegmentHead]) =
+    table.resolveRead(-1L) match {
+      case Right(head) => (head.snapshot, Some(head))
+      case Left(snap)  => (snap, None)
+    }
 
   /** Predicate-matched candidate files under the [[dmlSnap]] regime: the
     * driver walk with bloom probes below the limit, executor-side skipping
     * (no bloom — sidecar loads stay a driver-path feature) past it.
     */
   private[operators] def dmlCandidates(
-      table: GraftTable, snap: Snapshot, lazyMode: Boolean,
+      table: GraftTable, snap: Snapshot, lazyHead: Option[SegmentHead],
       preds: Seq[org.apache.spark.sql.catalyst.expressions.Expression]): Seq[AddFile] =
-    if (lazyMode)
-      graft.tables.DistributedSnapshot.prunedFilesByExprs(
-        table.spark, table.path, snap, preds)
-    else
-      FileSkipping.filesMatching(snap, preds,
-        Some(BloomIndex.ProbeContext(table.spark, table.path)))
+    lazyHead match {
+      case Some(head) =>
+        graft.tables.DistributedSnapshot.prunedFilesByExprs(table.spark, table.log, head, preds)
+      case None =>
+        FileSkipping.filesMatching(snap, preds,
+          Some(BloomIndex.ProbeContext(table.spark, table.path)))
+    }
 
   private def scanTouched(
       table: GraftTable, snap: Snapshot, cond: RowCond,
-      lazyMode: Boolean = false): TouchedScan = {
+      lazyHead: Option[SegmentHead] = None): TouchedScan = {
     val spark = table.spark
     val t0 = System.currentTimeMillis()
     val classified = FileSkipping.classify(spark, table.toDF, cond.skippingText)
-    val candidates = dmlCandidates(table, snap, lazyMode, classified.all)
+    val candidates = dmlCandidates(table, snap, lazyHead, classified.all)
     val scanTime = System.currentTimeMillis() - t0
     val candDf = table.dfForFiles(snap, candidates).withColumn("__graft_file", input_file_name())
     val touchedFiles = candDf.where(cond.column(candDf)).select("__graft_file")
@@ -194,10 +194,10 @@ object TableOps {
   private def deleteCond(table: GraftTable, rc: RowCond): Long = {
     val spark = table.spark
     val t0 = System.currentTimeMillis()
-    val (snap, lazyMode) = dmlSnap(table)
-    if (DeletionVectors.enabled(snap)) return dvDelete(table, snap, rc, t0, lazyMode)
+    val (snap, lazyHead) = dmlSnap(table)
+    if (DeletionVectors.enabled(snap)) return dvDelete(table, snap, rc, t0, lazyHead)
 
-    val TouchedScan(candidates, touched, scanTime) = scanTouched(table, snap, rc, lazyMode)
+    val TouchedScan(candidates, touched, scanTime) = scanTouched(table, snap, rc, lazyHead)
 
     // 3-valued logic: a NULL-evaluating predicate must NOT delete the row
     // (SQL DELETE semantics) — collapse NULL to false so those rows are
@@ -249,10 +249,10 @@ object TableOps {
     * stream semantics intact.
     */
   private def dvDelete(table: GraftTable, snap: Snapshot, rc: RowCond, t0: Long,
-      lazyMode: Boolean = false): Long = {
+      lazyHead: Option[SegmentHead] = None): Long = {
     val spark = table.spark
     val classified = FileSkipping.classify(spark, table.toDF, rc.skippingText)
-    val candidates = dmlCandidates(table, snap, lazyMode, classified.all)
+    val candidates = dmlCandidates(table, snap, lazyHead, classified.all)
     val scanTime = System.currentTimeMillis() - t0
 
     // candidate rows with (file, position) identity, existing DVs applied —
@@ -335,10 +335,10 @@ object TableOps {
     * plain adds). Unmatched rows are never read, copied or rewritten.
     */
   private def dvUpdate(table: GraftTable, snap: Snapshot, rc: RowCond,
-      set: Map[String, RowCond], t0: Long, lazyMode: Boolean = false): Long = {
+      set: Map[String, RowCond], t0: Long, lazyHead: Option[SegmentHead] = None): Long = {
     val spark = table.spark
     val classified = FileSkipping.classify(spark, table.toDF, rc.skippingText)
-    val candidates = dmlCandidates(table, snap, lazyMode, classified.all)
+    val candidates = dmlCandidates(table, snap, lazyHead, classified.all)
     val scanTime = System.currentTimeMillis() - t0
 
     val rowsBase = DeletionVectors.scanWithPositions(table, snap, candidates)
@@ -454,7 +454,7 @@ object TableOps {
   private def updateCond(table: GraftTable, rc: RowCond, set: Map[String, RowCond]): Long = {
     val spark = table.spark
     val t0 = System.currentTimeMillis()
-    val (snap, lazyMode) = dmlSnap(table)
+    val (snap, lazyHead) = dmlSnap(table)
     require(set.nonEmpty, "UPDATE needs at least one SET assignment")
     // a SET on an unknown column must fail, not silently no-op (SQL UPDATE
     // semantics — and the silent form reports numUpdatedRows > 0 for rows
@@ -462,9 +462,9 @@ object TableOps {
     val unknown = set.keys.filterNot(k => snap.schema.fieldNames.exists(_.equalsIgnoreCase(k)))
     require(unknown.isEmpty,
       s"UPDATE SET references column(s) not in the table schema: ${unknown.mkString(", ")}")
-    if (DeletionVectors.enabled(snap)) return dvUpdate(table, snap, rc, set, t0, lazyMode)
+    if (DeletionVectors.enabled(snap)) return dvUpdate(table, snap, rc, set, t0, lazyHead)
 
-    val TouchedScan(candidates, touched, scanTime) = scanTouched(table, snap, rc, lazyMode)
+    val TouchedScan(candidates, touched, scanTime) = scanTouched(table, snap, rc, lazyHead)
 
     // NULL predicate ⇒ not updated (3VL): copy the row through unmodified
     // and count it as copied, matching SQL UPDATE semantics
@@ -768,7 +768,7 @@ object TableOps {
       extraActions: Seq[Action] = Nil): Long = {
     val spark = table.spark
     val t0 = System.currentTimeMillis()
-    val (snap, lazyMode) = dmlSnap(table)
+    val (snap, lazyHead) = dmlSnap(table)
     val fields = snap.schema.fieldNames.toSeq
 
     // idempotent-write replay guard re-checked against THIS snapshot — the
@@ -794,7 +794,7 @@ object TableOps {
         "rename them explicitly")
 
     val TouchedScan(candidates, touched, scanTime) =
-      scanTouched(table, snap, TextCond(predicate), lazyMode)
+      scanTouched(table, snap, TextCond(predicate), lazyHead)
 
     val touchedRows = table.dfForFiles(snap, touched)
       .withColumn("__graft_del", coalesce(expr(predicate), lit(false)))

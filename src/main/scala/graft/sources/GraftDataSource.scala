@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions.{col, lit, not}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.StructType
 
-import graft.tables.{AddFile, FileSkipping, GraftTable, Snapshot, TableWriter}
+import graft.tables.{AddFile, FileSkipping, GraftLog, GraftTable, SegmentHead, Snapshot, TableWriter}
 
 /** `USING graft` — a Spark data-source binding for versioned graft tables, so
   * they live in the REAL Spark catalog like the reference's metastore tables
@@ -410,35 +410,21 @@ case class GraftRelation(sqlContext: SQLContext, path: String,
 
   private def table: GraftTable = GraftTable.forPath(sqlContext.sparkSession, path)
 
-  /** The read-time snapshot: pinned for time travel, latest otherwise. */
-  private[sources] def readSnapshot: Snapshot =
-    versionAsOf.map(table.snapshotAt).getOrElse(table.snapshot)
-
-  /** Whether reads of this relation take the Dataset-backed large-table
-    * path (live files past `spark.graft.snapshot.driverFileLimit`) —
-    * re-estimated per call because the scan rewrite runs per query and a
-    * compaction can move a table back across the limit.
+  /** The read-time resolution — pinned for time travel, latest otherwise:
+    * Right(head) when reads take the Dataset-backed large-table path (live
+    * files past `spark.graft.snapshot.driverFileLimit`), Left(snapshot)
+    * otherwise. Re-resolved per call because the scan rewrite runs per
+    * query and a compaction can move a table back across the limit.
     */
-  private[sources] def lazyRead: Boolean = {
-    val spark = sqlContext.sparkSession
-    val log = new graft.tables.GraftLog(path)
-    val target = versionAsOf.getOrElse(log.latestVersion())
-    GraftTable.lazyReadEligible(spark, log, target)
-  }
+  private[sources] def resolveRead: Either[Snapshot, SegmentHead] =
+    table.resolveRead(versionAsOf.getOrElse(-1L))
 
-  /** Schema from the metadata HEAD when the store allows the prefix scan —
-    * `val schema` runs at relation CREATION, and a full snapshot fold here
-    * would materialize a 10⁶-file list before any query even planned.
+  /** Schema from the log HEAD — `val schema` runs at relation CREATION, and
+    * a full snapshot fold here would materialize a 10⁶-file list before any
+    * query even planned.
     */
-  override val schema: StructType = {
-    val log = new graft.tables.GraftLog(path)
-    if (log.store.filesystemBacked) {
-      val target = versionAsOf.getOrElse(log.latestVersion())
-      org.apache.spark.sql.types.DataType
-        .fromJson(graft.tables.DistributedSnapshot.metadataAt(log, target).schemaJson)
-        .asInstanceOf[StructType]
-    } else readSnapshot.schema
-  }
+  override val schema: StructType =
+    new graft.tables.GraftLog(path).head(versionAsOf.getOrElse(-1L)).schema
 
   /** Rows are served as `InternalRow`s from the inner codegen'd parquet plan
     * (`needConversion=false` contract) — no per-row external conversion.
@@ -562,28 +548,27 @@ object GraftScanRewrite extends Rule[LogicalPlan] {
         }
         Project(aliases, sub)
       }
-      if (g.lazyRead) {
-        // LARGE table (past spark.graft.snapshot.driverFileLimit): never
-        // fold the file list on the driver — the Dataset-backed read
-        // (clean leg on LazyFileIndex, dv files on the masked leg)
-        val table = GraftTable.forPath(spark, g.path)
-        val target = g.versionAsOf.getOrElse(table.version)
-        graftUnder(table.lazyReadDF(target).queryExecution.optimizedPlan)
-      } else {
-        val snap = g.readSnapshot
-        if (snap.files.exists(_.dv.exists(_.cardinality > 0))) {
-          // deletion vectors present: the scan needs the masked two-leg
-          // plan (clean files plain, DV files anti-joined on row position)
-          // — built as a DataFrame, pre-optimized (this batch runs AFTER
-          // the pushdown batches)
+      g.resolveRead match {
+        case Right(head) =>
+          // LARGE table (past spark.graft.snapshot.driverFileLimit): never
+          // fold the file list on the driver — the Dataset-backed read
+          // (clean leg on LazyFileIndex, dv files on the masked leg)
           val table = GraftTable.forPath(spark, g.path)
-          graftUnder(table.dfForFiles(snap, snap.files).queryExecution.optimizedPlan)
-        } else {
-          // a time-travel relation pins its snapshot; the file index then
-          // never follows the log past the pinned version
-          l.copy(relation = nativeRelation(spark, g.path,
-            g.versionAsOf.map(_ => snap)))
-        }
+          graftUnder(table.lazyReadDF(head).queryExecution.optimizedPlan)
+        case Left(snap) =>
+          if (snap.files.exists(_.dv.exists(_.cardinality > 0))) {
+            // deletion vectors present: the scan needs the masked two-leg
+            // plan (clean files plain, DV files anti-joined on row position)
+            // — built as a DataFrame, pre-optimized (this batch runs AFTER
+            // the pushdown batches)
+            val table = GraftTable.forPath(spark, g.path)
+            graftUnder(table.dfForFiles(snap, snap.files).queryExecution.optimizedPlan)
+          } else {
+            // a time-travel relation pins its snapshot; the file index then
+            // never follows the log past the pinned version
+            l.copy(relation = nativeRelation(spark, g.path,
+              g.versionAsOf.map(_ => snap)))
+          }
       }
   }
 
@@ -613,23 +598,22 @@ object GraftScanRewrite extends Rule[LogicalPlan] {
   }
 
   /** [[nativeRelation]]'s Dataset-backed sibling: the file index is a
-    * [[LazyFileIndex]] pinned at `version`, built from the snapshot HEAD
-    * alone — no driver-resident file list anywhere in the relation.
+    * [[LazyFileIndex]] pinned at the head's version, built from the segment
+    * head alone — no driver-resident file list anywhere in the relation.
     */
   def lazyNativeRelation(
       spark: SparkSession,
-      path: String,
-      head: Snapshot,
-      version: Long): HadoopFsRelation = {
-    val schema = head.schema
-    val partCols = head.metadata.partitionColumns
+      log: GraftLog,
+      segHead: SegmentHead): HadoopFsRelation = {
+    val schema = segHead.snapshot.schema
+    val partCols = segHead.snapshot.metadata.partitionColumns
     val partitionSchema = StructType(partCols.flatMap(c => schema.fields.find(_.name == c)))
     val dataSchema = StructType(schema.fields.filterNot(f => partCols.contains(f.name)))
-    val index = new LazyFileIndex(spark, path, partitionSchema, version, head)
+    val index = new LazyFileIndex(spark, log, partitionSchema, segHead)
     val mapped =
       if (graft.tables.ColumnMapping.isMapped(schema)) Some(schema) else None
     HadoopFsRelation(index, partitionSchema, dataSchema, None,
-      new GraftParquetFileFormat(mapped), Map("path" -> path))(spark)
+      new GraftParquetFileFormat(mapped), Map("path" -> log.tablePath))(spark)
   }
 }
 
@@ -731,8 +715,10 @@ object GraftMetadataOnlyAggregate extends Rule[LogicalPlan] {
   private case class EagerSrc(snap: Snapshot) extends StatSource {
     def head: Snapshot = snap
   }
-  private case class LazySrc(spark: SparkSession, path: String, version: Long,
-      override val head: Snapshot) extends StatSource
+  private case class LazySrc(spark: SparkSession, log: GraftLog, segHead: SegmentHead)
+      extends StatSource {
+    def head: Snapshot = segHead.snapshot
+  }
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan transform {
     case agg: Aggregate
@@ -805,20 +791,17 @@ object GraftMetadataOnlyAggregate extends Rule[LogicalPlan] {
     case l: LogicalRelation =>
       val srcOpt: Option[StatSource] = l.relation match {
         case g: GraftRelation =>
-          val spark = g.sqlContext.sparkSession
-          if (g.lazyRead) {
-            // NEVER readSnapshot here — folding a limit-crossing table on
-            // the driver at optimize time is the cost this path removes
-            val log = new graft.tables.GraftLog(g.path)
-            val v = g.versionAsOf.getOrElse(log.latestVersion())
-            Some(LazySrc(spark, g.path, v,
-              graft.tables.DistributedSnapshot.snapshotHead(log, v)))
-          } else Some(EagerSrc(g.readSnapshot))
+          // a limit-crossing table resolves to its head — folding it on the
+          // driver at optimize time is the cost the lazy path removes
+          Some(g.resolveRead match {
+            case Right(head) => LazySrc(g.sqlContext.sparkSession, new GraftLog(g.path), head)
+            case Left(snap)  => EagerSrc(snap)
+          })
         case h: HadoopFsRelation =>
           h.location match {
             case gi: GraftFileIndex => Some(EagerSrc(gi.snapshotNow))
             case li: LazyFileIndex =>
-              Some(LazySrc(SparkSession.active, li.tablePath, li.version, li.head))
+              Some(LazySrc(SparkSession.active, li.log, li.segHead))
             case _ => None
           }
         case _ => None
@@ -952,7 +935,7 @@ object GraftMetadataOnlyAggregate extends Rule[LogicalPlan] {
 
     implicit val enc = org.apache.spark.sql.Encoders.product[AddFile]
     val partials: Array[(Boolean, Long, Seq[Option[Any]], Boolean)] =
-      graft.tables.DistributedSnapshot.addFilesDF(src.spark, src.path, src.version)
+      graft.tables.DistributedSnapshot.addFilesDF(src.spark, src.log, src.segHead)
         .as[AddFile].rdd.mapPartitions { it =>
           var bail = false
           var count = 0L

@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.{
 import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory}
 import org.apache.spark.sql.types.StructType
 
-import graft.tables.{AddFile, DistributedSnapshot, FileSkipping, GraftLog, GraftTable, Snapshot}
+import graft.tables.{AddFile, DistributedSnapshot, FileSkipping, GraftLog, GraftTable, SegmentHead}
 
 /** Dataset-backed [[FileIndex]] for tables whose LIVE FILE SET is too large
   * to hold on the driver — the read-path complement of
@@ -47,16 +47,17 @@ import graft.tables.{AddFile, DistributedSnapshot, FileSkipping, GraftLog, Graft
   */
 class LazyFileIndex(
     @transient private val spark: SparkSession,
-    val tablePath: String,
+    @transient private[sources] val log: GraftLog,
     override val partitionSchema: StructType,
-    val version: Long,
-    private[sources] val head: Snapshot)
+    private[sources] val segHead: SegmentHead)
   extends FileIndex {
 
+  val tablePath: String = log.tablePath
+  val version: Long = segHead.snapshot.version
   private val sessionTz = spark.sessionState.conf.sessionLocalTimeZone
   private val caseSensitive = spark.sessionState.conf.caseSensitiveAnalysis
-  private val tableSchema = head.schema
-  private val partCols = head.metadata.partitionColumns.toSet
+  private val tableSchema = segHead.snapshot.schema
+  private val partCols = segHead.snapshot.metadata.partitionColumns.toSet
 
   override def rootPaths: Seq[Path] = Seq(graft.tables.Fs.toHadoopPath(tablePath))
 
@@ -85,7 +86,7 @@ class LazyFileIndex(
 
   private def filesDS(): org.apache.spark.sql.Dataset[AddFile] = {
     implicit val enc = org.apache.spark.sql.Encoders.product[AddFile]
-    DistributedSnapshot.addFilesDF(spark, tablePath, version).as[AddFile]
+    DistributedSnapshot.addFilesDF(spark, log, segHead).as[AddFile]
   }
 
   override def listFiles(

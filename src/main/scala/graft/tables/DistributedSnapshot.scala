@@ -34,11 +34,10 @@ import org.apache.spark.sql.types._
   *    the files a scan of `condition` actually needs, O(matching), never
   *    O(live files).
   *
-  * Driver-side work stays metadata-bounded: listing version file NAMES
-  * (O(#versions)), and a prefix-scan of post-checkpoint commit files for
-  * metadata updates (no JSON parse of non-metadata lines; the checkpoint's
-  * metadata is its first line by [[GraftLog.writeCheckpoint]] construction,
-  * read alone).
+  * Driver-side work stays metadata-bounded: one listing of the log
+  * ([[GraftLog.segment]]) and the segment's head pass
+  * ([[GraftLog.replayHead]] — head lines only, never a data-file line),
+  * whose checkpoint-format decision the executor fold reads.
   */
 object DistributedSnapshot {
 
@@ -71,9 +70,6 @@ object DistributedSnapshot {
     StructField("remove", StructType(Seq(
       StructField("path", StringType))))))
 
-  /** The live [[AddFile]] set at `version` (default latest) as a DataFrame,
-    * log parsed and folded by executors. Columns: path, partitionValues,
-    * size, stats, dv — exactly [[AddFile]]'s shape (`.as[AddFile]` works). */
   /** This path deliberately BYPASSES the [[LogStore]] seam: executors read
     * log objects as splittable files through Spark's own readers — any
     * local path or hadoop-FS URI qualifies (the [[graft.tables.Fs]] path
@@ -88,23 +84,24 @@ object DistributedSnapshot {
         s"${log.tablePath}: executors read log objects directly — use " +
         "GraftLog.snapshot (driver fold) on this store")
 
+  /** The live [[AddFile]] set at `version` (default latest) as a DataFrame,
+    * log parsed and folded by executors. Columns: path, partitionValues,
+    * size, stats, dv — exactly [[AddFile]]'s shape (`.as[AddFile]` works). */
   def addFilesDF(spark: SparkSession, tablePath: String,
       version: Long = -1L): DataFrame = {
     val log = new GraftLog(tablePath)
+    addFilesDF(spark, log, log.replayHead(log.segment(version)))
+  }
+
+  /** [[addFilesDF]] over a segment whose head pass already ran — the head
+    * carries the reader-feature gate and the checkpoint-format decision, so
+    * nothing here lists or probes the log again.
+    */
+  private[graft] def addFilesDF(spark: SparkSession, log: GraftLog,
+      head: SegmentHead): DataFrame = {
     requireFilesystemLog(log)
-    val vs = log.versions()
-    require(vs.nonEmpty, s"$tablePath is not a GraftTable (empty log)")
-    val target = if (version < 0) vs.last else version
-    require(vs.contains(target),
-      s"version $target does not exist for $tablePath (have ${vs.headOption}..${vs.lastOption})")
-    // the same reader-feature gate GraftLog.snapshot applies — this is the
-    // designated large-table read path, and unknown features would make the
-    // returned file set silently wrong (protocol lines parse to null rows
-    // in the executor fold and vanish without this check)
-    gatedProtocolAt(log, target)
-    val ckpt = log.checkpointVersions().filter(_ <= target).lastOption
-    val deltaFiles = vs.filter(v => v <= target && ckpt.forall(v > _))
-      .map(v => log.versionFile(v))
+    val seg = head.segment
+    val deltaFiles = seg.commits.map { case (v, _) => log.versionFile(v) }
 
     def jsonFrame(sources: Seq[String]) =
       spark.read.schema(lineSchema).json(sources: _*)
@@ -131,35 +128,27 @@ object DistributedSnapshot {
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
 
-    // the checkpoint frame, flat AddFile columns, from exactly ONE source
-    // (the driver fold's format disambiguation, content-first): a head
-    // carrying adds is the JSON checkpoint — any dir alongside is ignored,
-    // reading both would duplicate every file; an add-less parquet-format
-    // head requires its dir LOUDLY (a reader racing a checkpoint deletion
-    // must fail, not silently fold a tiny subset). The parquet dir is
+    // the checkpoint frame, flat AddFile columns, from the ONE source the
+    // head pass chose (paths are unique within a checkpoint by
+    // construction: no dedup, no shuffle). The parquet dir is
     // column-prunable, so a projection of (path, size) never deserializes
-    // stats bytes. Paths are unique within a checkpoint by construction:
-    // no dedup, no shuffle.
-    val ckptFlat: Option[DataFrame] = ckpt.map { cv =>
-      if (log.checkpointIsParquetFormat(cv)) {
-        val pdir = log.checkpointParquetDir(cv)
-        if (!Fs.isDirectory(pdir))
-          throw new IllegalStateException(
-            s"checkpoint $cv of $tablePath is parquet-format but its file-actions " +
-              s"dir sidecar (${Fs.fileName(pdir)}) is missing — deleted concurrently; " +
-              "retry, or restore/rewrite the checkpoint")
-        spark.read.schema(checkpointPartSchema).parquet(pdir).select(
-          col("path"),
-          // absent map (a part written with no partition entries) must
-          // surface as the driver fold's Map.empty, not null
-          coalesce(col("partitionValues"),
-            map().cast(MapType(StringType, StringType))).as("partitionValues"),
-          col("size"),
-          col("stats"),
-          col("dv"))
-      } else
-        jsonFrame(Seq(log.checkpointFile(cv)))
-          .filter(col("add").isNotNull).select("add.*")
+    // stats bytes.
+    val ckptFlat: Option[DataFrame] = seg.checkpointVersion.map { cv =>
+      head.parquetCheckpoint match {
+        case Some(pdir) =>
+          spark.read.schema(checkpointPartSchema).parquet(pdir).select(
+            col("path"),
+            // absent map (a part written with no partition entries) must
+            // surface as the driver fold's Map.empty, not null
+            coalesce(col("partitionValues"),
+              map().cast(MapType(StringType, StringType))).as("partitionValues"),
+            col("size"),
+            col("stats"),
+            col("dv"))
+        case None =>
+          jsonFrame(Seq(log.checkpointFile(cv)))
+            .filter(col("add").isNotNull).select("add.*")
+      }
     }
 
     (ckptFlat, deltaFiles) match {
@@ -196,26 +185,15 @@ object DistributedSnapshot {
       version: Long = -1L): Seq[AddFile] = {
     val log = new GraftLog(tablePath)
     requireFilesystemLog(log)
-    val vs = log.versions()
-    require(vs.nonEmpty, s"$tablePath is not a GraftTable (empty log)")
-    val target = if (version < 0) vs.last else version
-    val meta: graft.tables.Metadata = metadataAt(log, target)
-    val schema = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
-    val partCols = meta.partitionColumns.toSet
+    val head = log.replayHead(log.segment(version))
+    val schema = head.snapshot.schema
 
     val emptyDf = spark.createDataFrame(
       new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
     val classified = FileSkipping.classify(spark, emptyDf, condition)
     require(classified.unresolvedColumns.isEmpty,
       s"condition references unknown columns: ${classified.unresolvedColumns.mkString(", ")}")
-    val preds = classified.all
-    // provably-empty range intersection: zero files, no job at all (same
-    // short-circuit as the driver path's filesMatching)
-    if (FileSkipping.contradictory(preds, schema)) return Nil
-
-    implicit val enc = org.apache.spark.sql.Encoders.product[AddFile]
-    filterByStats(addFilesDF(spark, tablePath, target).as[AddFile],
-      preds, schema, partCols).collect().toSeq
+    prunedFilesByExprs(spark, log, head, classified.all)
   }
 
   /** Write the checkpoint sidecar for `version` (default latest) with the
@@ -238,17 +216,13 @@ object DistributedSnapshot {
       version: Long = -1L): Unit = {
     val log = new GraftLog(tablePath)
     requireFilesystemLog(log)
-    val vs = log.versions()
-    require(vs.nonEmpty, s"$tablePath is not a GraftTable (empty log)")
-    val target = if (version < 0) vs.last else version
-    val meta: graft.tables.Metadata = metadataAt(log, target)
-    val proto = protocolAt(log, target)
-    val txns = transactionsAt(log, target)
-    val head = (Seq[Action](meta, proto) ++
-      txns.toSeq.sortBy(_._1).map { case (a, v) => SetTransaction(a, v) })
+    val segHead = log.replayHead(log.segment(version))
+    val snap = segHead.snapshot
+    val target = snap.version
+    val head = (Seq[Action](snap.metadata, snap.protocol) ++
+      snap.transactions.toSeq.sortBy(_._1).map { case (a, v) => SetTransaction(a, v) })
       .map(GraftLog.renderAction).mkString("", "\n", "\n")
-    val parquetFmt = meta.properties
-      .get(GraftLog.CheckpointFormatProperty).exists(_.equalsIgnoreCase("parquet"))
+    val parquetFmt = GraftLog.declaresParquetCheckpoints(snap.metadata)
 
     implicit val strEnc = org.apache.spark.sql.Encoders.STRING
     implicit val addEnc = org.apache.spark.sql.Encoders.product[AddFile]
@@ -267,7 +241,7 @@ object DistributedSnapshot {
         // missing-file-actions window to concurrent readers
         val pdir = log.checkpointParquetDir(target)
         if (!Fs.exists(pdir)) {
-          addFilesDF(spark, tablePath, target).as[AddFile].toDF()
+          addFilesDF(spark, log, segHead).as[AddFile].toDF()
             .write.parquet(partsDir)
           Fs.deleteIfExists(Fs.child(partsDir, "_SUCCESS"))
           try Fs.moveNoReplace(partsDir, pdir)
@@ -278,7 +252,7 @@ object DistributedSnapshot {
         log.store.overwrite(log.checkpointFile(target),
           head.getBytes(StandardCharsets.UTF_8))
       } else {
-        addFilesDF(spark, tablePath, target).as[AddFile]
+        addFilesDF(spark, log, segHead).as[AddFile]
           .mapPartitions(_.map(a => GraftLog.renderAction(a: Action)))
           .write.text(partsDir)
 
@@ -321,13 +295,16 @@ object DistributedSnapshot {
     */
   private[graft] def prunedFilesByExprs(
       spark: SparkSession,
-      tablePath: String,
-      head: Snapshot,
+      log: GraftLog,
+      head: SegmentHead,
       preds: Seq[org.apache.spark.sql.catalyst.expressions.Expression]): Seq[AddFile] = {
-    if (FileSkipping.contradictory(preds, head.schema)) return Nil
+    val snap = head.snapshot
+    // provably-empty range intersection: zero files, no job at all (same
+    // short-circuit as the driver path's filesMatching)
+    if (FileSkipping.contradictory(preds, snap.schema)) return Nil
     implicit val enc = org.apache.spark.sql.Encoders.product[AddFile]
-    filterByStats(addFilesDF(spark, tablePath, head.version).as[AddFile],
-      preds, head.schema, head.metadata.partitionColumns.toSet).collect().toSeq
+    filterByStats(addFilesDF(spark, log, head).as[AddFile],
+      preds, snap.schema, snap.metadata.partitionColumns.toSet).collect().toSeq
   }
 
   /** THE executor-side stats-skipping filter — one definition shared by
@@ -349,33 +326,6 @@ object DistributedSnapshot {
         FileSkipping.mightMatch(p, f, stats, schema, partCols, None))
     }
 
-  /** The snapshot HEAD at `target` — version, metadata, protocol and txn
-    * watermarks with `files = Nil` — via the prefix scans, never folding
-    * the file actions. The entry point of the Dataset-backed read path:
-    * at 10⁶–10⁷ live files the full driver fold is 0.5–5 GB of heap and
-    * O(files) CPU per plan, while everything a PLAN needs besides the
-    * file list (schema, partition columns, properties, feature gates) is
-    * O(head lines). Applies the same reader-feature gate as the driver
-    * fold — a head consumer is still a reader.
-    */
-  private[graft] def snapshotHead(log: GraftLog, target: Long): Snapshot =
-    Snapshot(target, metadataAt(log, target), Nil,
-      transactionsAt(log, target), gatedProtocolAt(log, target))
-
-  /** [[protocolAt]] behind THE reader-feature gate every head consumer
-    * must pass (a head consumer is still a reader) — one definition, used
-    * by [[addFilesDF]] and [[snapshotHead]] so the gate cannot diverge.
-    */
-  private def gatedProtocolAt(log: GraftLog, target: Long): graft.tables.Protocol = {
-    val proto = protocolAt(log, target)
-    val unknownReader = proto.readerFeatures.filterNot(GraftLog.SupportedReaderFeatures)
-    if (unknownReader.nonEmpty)
-      throw new IllegalStateException(
-        s"${log.tablePath} requires reader feature(s) ${unknownReader.mkString(", ")} this " +
-          "build does not implement; upgrade the library to read this table")
-    proto
-  }
-
   /** Conservative MINIMUM bytes one rendered `{"add":...}` log line can
     * occupy — the byte pre-gate divisor for [[exceedsFileLimit]]. Real
     * lines (path + size + stats JSON) run 200–1000 bytes; 64 makes the
@@ -384,22 +334,6 @@ object DistributedSnapshot {
     */
   private val MinAddLineBytes = 64L
 
-  /** Whether the live file set at `target` exceeds `limit` files — WITHOUT
-    * a snapshot fold. Three tiers, cheapest first:
-    *
-    *  1. byte pre-gate: if checkpoint + post-checkpoint delta bytes total
-    *     under `limit * MinAddLineBytes`, the answer is NO from the dir
-    *     listing alone (small tables — the overwhelmingly common case —
-    *     pay only O(#versions) stat calls they already paid to list);
-    *  2. parquet checkpoint: live count from part FOOTERS (row counts are
-    *     footer metadata — O(parts) opens, zero data read);
-    *  3. JSON checkpoint / deltas: prefix-count `{"add"` lines with EARLY
-    *     EXIT at `limit + 1` — no JSON parse, bounded read.
-    *
-    * The count is an UPPER bound (delta adds may re-add checkpointed paths
-    * or be net-removed) — over-estimating only moves a borderline table
-    * onto the Dataset-backed path, which stays correct.
-    */
   /** Memo for [[exceedsFileLimit]]: the live file count at a COMMITTED
     * version never changes (a later checkpoint changes the computation's
     * cost, not its answer), so the verdict is a pure function of
@@ -413,28 +347,37 @@ object DistributedSnapshot {
   private val limitVerdicts =
     new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), java.lang.Boolean]()
 
-  private[graft] def exceedsFileLimit(log: GraftLog, target: Long, limit: Long): Boolean = {
+  /** Whether the live file set at the head's target exceeds `limit` files —
+    * WITHOUT a snapshot fold, from the segment's sizes and the head pass's
+    * format decision. Three tiers, cheapest first:
+    *
+    *  1. byte pre-gate: if checkpoint + post-checkpoint delta bytes total
+    *     under `limit * MinAddLineBytes`, the answer is NO from the dir
+    *     listing alone (small tables — the overwhelmingly common case —
+    *     pay nothing beyond the listing their segment already made);
+    *  2. parquet checkpoint: live count from part FOOTERS (row counts are
+    *     footer metadata — O(parts) opens, zero data read);
+    *  3. JSON checkpoint / deltas: prefix-count `{"add"` lines with EARLY
+    *     EXIT at `limit + 1` — no JSON parse, bounded read.
+    *
+    * The count is an UPPER bound (delta adds may re-add checkpointed paths
+    * or be net-removed) — over-estimating only moves a borderline table
+    * onto the Dataset-backed path, which stays correct.
+    */
+  private[graft] def exceedsFileLimit(log: GraftLog, head: SegmentHead, limit: Long): Boolean = {
     if (!log.store.filesystemBacked) return false // lazy path needs executor-readable logs
-    val key = (log.tablePath, target, limit)
+    val key = (log.tablePath, head.segment.version, limit)
     val memo = limitVerdicts.get(key) // boxed: null = miss (a bare Boolean would unbox null to false)
     if (memo != null) return memo.booleanValue()
-    val verdict = computeExceedsFileLimit(log, target, limit)
+    val verdict = computeExceedsFileLimit(log, head, limit)
     if (limitVerdicts.size > 4096) limitVerdicts.clear()
     limitVerdicts.put(key, java.lang.Boolean.valueOf(verdict))
     verdict
   }
 
-  private def computeExceedsFileLimit(log: GraftLog, target: Long, limit: Long): Boolean = {
-    val listing = log.store.list(log.logDir) // ONE listing carries every size
-    val sizes = listing.toMap
-    val ckpt = listing.collect {
-      case (n, _) if n.matches("\\d+\\.checkpoint\\.json") =>
-        n.stripSuffix(".checkpoint.json").toLong
-    }.filter(_ <= target).sorted.lastOption
-    val deltaVs = listing.collect {
-      case (n, s) if s > 0L && n.matches("\\d+\\.json") => n.stripSuffix(".json").toLong
-    }.filter(v => v <= target && ckpt.forall(v > _)).sorted
-    val deltaBytes = deltaVs.map(v => sizes.getOrElse(f"$v%020d.json", 0L)).sum
+  private def computeExceedsFileLimit(log: GraftLog, head: SegmentHead, limit: Long): Boolean = {
+    val seg = head.segment
+    val deltaBytes = seg.commitBytes
     // saturating gate: limit * MinAddLineBytes overflows for sentinel
     // limits (Long.MaxValue disables the lazy path), and a negative gate
     // would silently skip the pre-gate and line-scan every read
@@ -449,28 +392,25 @@ object DistributedSnapshot {
           if (lines.next().startsWith("{\"add\"")) count += 1
         }
       }
-    ckpt match {
-      case Some(cv) if log.checkpointIsParquetFormat(cv) =>
+    (head.parquetCheckpoint, seg.checkpoint) match {
+      case (Some(pdir), _) =>
         // tier 2: exact live count at the checkpoint from part FOOTERS
         // (O(parts) opens, zero data read; no byte pre-gate here — parquet
         // compresses paths too well for a safe bytes-per-row divisor, and
         // a parquet checkpoint already marks the large-table configuration)
-        val pdir = log.checkpointParquetDir(cv)
-        if (Fs.isDirectory(pdir)) count += parquetRowCount(pdir)
-        else countAdds(log.checkpointFile(cv)) // self-contained fallback head
-      case Some(cv) =>
+        count += parquetRowCount(pdir)
+      case (None, Some((cv, headBytes))) =>
         // tier 1 pre-gate, then tier 3: prefix-count `{"add"` lines with
         // early exit — no JSON parse, bounded read
-        val headBytes = sizes.getOrElse(f"$cv%020d.checkpoint.json", 0L)
         if (headBytes + deltaBytes < byteGate) return false
         countAdds(log.checkpointFile(cv))
-      case None =>
+      case (None, None) =>
         if (deltaBytes < byteGate) return false
     }
     if (count > limit) return true
     // remaining deltas cannot push past the limit → done without reading them
     if (count + deltaBytes / MinAddLineBytes <= limit) return false
-    deltaVs.foreach(v => countAdds(log.versionFile(v)))
+    seg.commits.foreach { case (v, _) => countAdds(log.versionFile(v)) }
     count > limit
   }
 
@@ -483,65 +423,4 @@ object DistributedSnapshot {
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
         try r.getRecordCount finally r.close()
       }.sum
-
-  /** appId → newest version watermark in effect at `target`: same
-    * prefix-scan strategy as [[metadataAt]] (`{"txn"` lines only),
-    * last-wins in (checkpoint, version, line) order like the driver fold. */
-  private[graft] def transactionsAt(log: GraftLog, target: Long): Map[String, Long] = {
-    val txns = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    def scan(path: String): Unit =
-      Fs.scanLines(path)(_.filter(_.startsWith("{\"txn\"")).foreach { line =>
-        val t = GraftLog.parseAction(line).asInstanceOf[SetTransaction]
-        txns(t.appId) = t.version
-      })
-    val ckpt = log.checkpointVersions().filter(_ <= target).lastOption
-    ckpt.foreach(cv => scan(log.checkpointFile(cv)))
-    log.versions().filter(v => v <= target && ckpt.forall(v > _))
-      .foreach(v => scan(log.versionFile(v)))
-    txns.toMap
-  }
-
-  /** Metadata in effect at `target`, without JSON-parsing any data-file
-    * lines: the newest checkpoint's metadata is its FIRST line (read
-    * alone); later commit files are prefix-scanned (`{"metadata"`) and only
-    * matching lines parse. */
-  private[graft] def metadataAt(log: GraftLog, target: Long): graft.tables.Metadata = {
-    var meta: graft.tables.Metadata = null
-    val ckpt = log.checkpointVersions().filter(_ <= target).lastOption
-    ckpt.foreach { cv =>
-      Fs.scanLines(log.checkpointFile(cv)) { lines =>
-        lines.nextOption().foreach { first =>
-          if (first.startsWith("{\"metadata\""))
-            meta = GraftLog.parseAction(first).asInstanceOf[graft.tables.Metadata]
-        }
-      }
-    }
-    log.versions().filter(v => v <= target && ckpt.forall(v > _)).foreach { v =>
-      Fs.scanLines(log.versionFile(v))(_.filter(_.startsWith("{\"metadata\"")).foreach {
-        line => meta = GraftLog.parseAction(line).asInstanceOf[graft.tables.Metadata]
-      })
-    }
-    require(meta != null, s"no metadata action found in log of ${log.tablePath}")
-    meta
-  }
-
-  /** Last protocol action at-or-before `target` (default baseline when the
-    * log predates the protocol vocabulary) — same single-field line scan as
-    * [[metadataAt]], no full snapshot fold.
-    */
-  private[graft] def protocolAt(log: GraftLog, target: Long): graft.tables.Protocol = {
-    var proto: graft.tables.Protocol = graft.tables.Protocol()
-    val ckpt = log.checkpointVersions().filter(_ <= target).lastOption
-    ckpt.foreach { cv =>
-      Fs.scanLines(log.checkpointFile(cv))(_.filter(_.startsWith("{\"protocol\"")).foreach {
-        line => proto = GraftLog.parseAction(line).asInstanceOf[graft.tables.Protocol]
-      })
-    }
-    log.versions().filter(v => v <= target && ckpt.forall(v > _)).foreach { v =>
-      Fs.scanLines(log.versionFile(v))(_.filter(_.startsWith("{\"protocol\"")).foreach {
-        line => proto = GraftLog.parseAction(line).asInstanceOf[graft.tables.Protocol]
-      })
-    }
-    proto
-  }
 }

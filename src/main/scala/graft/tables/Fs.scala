@@ -433,8 +433,8 @@ object Fs {
       } finally in.close()
     } else Files.readAllLines(Paths.get(path), StandardCharsets.UTF_8).asScala.toSeq
 
-  /** Stream `path`'s lines through `f` with early exit — the prefix-scan
-    * primitive GraftLog/DistributedSnapshot head-scans use (checkpoint
+  /** Stream `path`'s lines through `f` with early exit — the primitive the
+    * GraftLog head pass and the file-limit estimate use (checkpoint
     * heads are O(1) lines; full reads of a GB JSON checkpoint to answer a
     * one-line question would be the driver bottleneck the scans avoid).
     */

@@ -30,23 +30,42 @@ class GraftLog(val tablePath: String, val store: LogStore) {
     */
   val logDir: String = Fs.child(tablePath, LogDirName)
 
-  /** Sorted list of committed versions (from log file names). Zero-length
-    * files are in-flight claims from the no-hard-link commit fallback, not
-    * commits — invisible until their content lands.
+  /** `_graft_log/` listed ONCE and parsed by the one file-name rule:
+    * (committed versions, checkpoint heads), each as ascending
+    * (version, bytes). Zero-length commit files are in-flight claims from
+    * the no-hard-link commit fallback, not commits — invisible until their
+    * content lands.
     */
-  def versions(): Seq[Long] =
-    store.list(logDir)
-      .filter { case (name, size) => size > 0L && name.matches("\\d+\\.json") }
-      .map(_._1.stripSuffix(".json").toLong)
-      .sorted
+  private def listing(): (Seq[(Long, Long)], Seq[(Long, Long)]) = {
+    val parsed = store.list(logDir).collect {
+      case (LogFileName(v, ckpt), size) => (v.toLong, size, ckpt != null)
+    }.sortBy(_._1)
+    (parsed.collect { case (v, size, false) if size > 0L => (v, size) },
+      parsed.collect { case (v, size, true) => (v, size) })
+  }
 
-  /** Sorted list of checkpoint versions (`<v>.checkpoint.json` sidecars). */
-  def checkpointVersions(): Seq[Long] =
-    store.list(logDir)
-      .map(_._1)
-      .filter(_.matches("\\d+\\.checkpoint\\.json"))
-      .map(_.stripSuffix(".checkpoint.json").toLong)
-      .sorted
+  /** Sorted list of committed versions (from log file names). */
+  def versions(): Seq[Long] = listing()._1.map(_._1)
+
+  /** Sorted list of checkpoint versions (`<v>.checkpoint.json` heads). */
+  def checkpointVersions(): Seq[Long] = listing()._2.map(_._1)
+
+  /** The segment a snapshot at `version` (default: latest) replays, from
+    * ONE listing: the newest checkpoint at or below the target plus the
+    * commits after it — the one place a checkpoint is picked for a target.
+    */
+  def segment(version: Long = -1L): LogSegment = {
+    val (commits, checkpoints) = listing()
+    if (commits.isEmpty)
+      throw new IllegalStateException(s"$tablePath is not a GraftTable (empty log)")
+    val target = if (version < 0) commits.last._1 else version
+    require(commits.exists(_._1 == target),
+      s"version $target does not exist for $tablePath " +
+        s"(have ${commits.headOption.map(_._1)}..${commits.lastOption.map(_._1)})")
+    val ckpt = checkpoints.takeWhile(_._1 <= target).lastOption
+    LogSegment(target, ckpt,
+      commits.filter { case (v, _) => v <= target && ckpt.forall(v > _._1) })
+  }
 
   def latestVersion(): Long =
     versions().lastOption.getOrElse(
@@ -92,9 +111,7 @@ class GraftLog(val tablePath: String, val store: LogStore) {
     val txnActions = snap.transactions.toSeq.sortBy(_._1)
       .map { case (app, v) => SetTransaction(app, v) }
     val head: Seq[Action] = Seq(snap.metadata, snap.protocol) ++ txnActions
-    val parquetFmt = snap.metadata.properties
-      .get(GraftLog.CheckpointFormatProperty).exists(_.equalsIgnoreCase("parquet")) &&
-      store.filesystemBacked
+    val parquetFmt = declaresParquetCheckpoints(snap.metadata) && store.filesystemBacked
     if (parquetFmt) {
       CheckpointParquet.write(checkpointParquetDir(version), snap.files)
       store.overwrite(checkpointFile(version),
@@ -110,8 +127,7 @@ class GraftLog(val tablePath: String, val store: LogStore) {
       // stamp-free — no ambiguity exists for them, and the driver and
       // executor writers remain byte-identical.
       val stamp: Seq[Action] =
-        if (snap.metadata.properties.get(GraftLog.CheckpointFormatProperty)
-              .exists(_.equalsIgnoreCase("parquet")))
+        if (declaresParquetCheckpoints(snap.metadata))
           Seq(CommitInfo(System.currentTimeMillis(), GraftLog.SelfContainedCheckpointOp))
         else Nil
       val body = (head ++ snap.files ++ stamp)
@@ -123,7 +139,7 @@ class GraftLog(val tablePath: String, val store: LogStore) {
   /** Delete a checkpoint: the parquet file-actions dir FIRST, then the
     * JSON head — deliberately the SAME dir-first order publication uses
     * (dir lands, then head), not its reverse. A crash between the two
-    * leaves a head whose missing dir READS LOUDLY (the snapshot fold's
+    * leaves a head whose missing dir READS LOUDLY (the head pass's
     * parquet guard) and which the next retention pass re-deletes;
     * head-first would orphan the dir invisibly forever, since
     * [[checkpointVersions]] lists only heads. Returns whether the head
@@ -135,34 +151,6 @@ class GraftLog(val tablePath: String, val store: LogStore) {
     store.delete(checkpointFile(cv))
   }
 
-  /** Whether checkpoint `cv`'s head JSON carries any add action — the
-    * CONTENT-first format probe (early-exit stream scan: parquet-format
-    * heads are O(1) lines; JSON heads hit their first add immediately).
-    */
-  private[graft] def checkpointHeadHasAdds(cv: Long): Boolean =
-    if (store.filesystemBacked)
-      Fs.scanLines(checkpointFile(cv))(_.exists(_.startsWith("{\"add\"")))
-    else store.read(checkpointFile(cv)).exists(_.startsWith("{\"add\""))
-
-  /** True when checkpoint `cv` stores its file actions in the parquet dir
-    * sidecar: an add-less head whose OWN metadata (first line by writer
-    * construction) declares the parquet format. Content-first — a head
-    * carrying adds is a JSON checkpoint regardless of the property.
-    */
-  private[graft] def checkpointIsParquetFormat(cv: Long): Boolean =
-    !checkpointHeadHasAdds(cv) && {
-      store.read(checkpointFile(cv)).headOption.exists { first =>
-        first.startsWith("{\"metadata\"") &&
-          (parseAction(first) match {
-            case m: Metadata =>
-              m.properties.get(GraftLog.CheckpointFormatProperty)
-                .exists(_.equalsIgnoreCase("parquet"))
-            case _ => false
-          })
-      }
-    }
-
-  /** Actions of a single committed version. */
   /** COPY INTO memory-sidecar ids referenced by surviving commits at or
     * above `fromVersion` — THE rule both GC paths (vacuum's orphan sweep
     * and the write path's log cleanup) key their `_copy_into` collection
@@ -175,6 +163,7 @@ class GraftLog(val tablePath: String, val store: LogStore) {
       }.flatten
     }.toSet
 
+  /** Actions of a single committed version. */
   def actionsAt(v: Long): Seq[Action] = {
     val f = versionFile(v)
     if (!store.exists(f))
@@ -191,102 +180,131 @@ class GraftLog(val tablePath: String, val store: LogStore) {
   def getChanges(from: Long): Seq[(Long, Seq[Action])] =
     versions().filter(_ >= from).map(v => v -> actionsAt(v))
 
-  /** Snapshot at `version` (default: latest): fold of metadata/add/remove,
-    * starting from the newest checkpoint sidecar ≤ target when one exists —
-    * replay cost is O(checkpoint size + versions since checkpoint), not
-    * O(total log lines), so thousand-version tables stay cheap to open.
+  /** Snapshot at `version` (default: latest): the segment's head pass plus
+    * the add/remove fold, starting from the newest checkpoint ≤ target when
+    * one exists — replay cost is O(checkpoint size + versions since
+    * checkpoint), not O(total log lines), so thousand-version tables stay
+    * cheap to open. One listing.
     */
-  def snapshot(version: Long = -1L): Snapshot = {
-    GraftLog.recordFold(tablePath)
-    val vs = versions()
-    if (vs.isEmpty)
-      throw new IllegalStateException(s"$tablePath is not a GraftTable (empty log)")
-    val target = if (version < 0) vs.last else version
-    require(vs.contains(target), s"version $target does not exist for $tablePath (have ${vs.headOption}..${vs.lastOption})")
+  def snapshot(version: Long = -1L): Snapshot = fold(replayHead(segment(version)))
+
+  /** The snapshot HEAD at `version` (default: latest) — version, metadata,
+    * protocol and txn watermarks with `files = Nil` — from the head pass
+    * alone, never folding the file actions: everything a PLAN needs besides
+    * the file list, O(head lines) at any table size. One listing; not a
+    * fold for [[GraftLog.foldCount]].
+    */
+  def head(version: Long = -1L): Snapshot = replayHead(segment(version)).snapshot
+
+  /** Streams a log object's lines: [[Fs.scanLines]] on filesystem stores,
+    * [[LogStore.read]] on the others.
+    */
+  private def scanLog[A](path: String)(f: Iterator[String] => A): A =
+    if (store.filesystemBacked) Fs.scanLines(path)(f) else f(store.read(path).iterator)
+
+  /** The HEAD PASS over `seg`: metadata, protocol and txn lines only — the
+    * checkpoint is read up to its first add (both writers put every head
+    * line before the file actions), later commits are prefix-filtered.
+    * Decides, once for every fold, where the checkpoint keeps its file
+    * actions, and applies THE reader-feature gate (a head consumer is
+    * still a reader).
+    */
+  private[graft] def replayHead(seg: LogSegment): SegmentHead = {
     var meta: Metadata = null
     var proto: Protocol = Protocol()
-    val files = scala.collection.mutable.LinkedHashMap.empty[String, AddFile]
     val txns = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    val ckpt = checkpointVersions().filter(_ <= target).lastOption
-    ckpt.foreach { cv =>
-      var headAdds = 0
-      var selfContained = false
-      store.read(checkpointFile(cv))
-        .filter(_.trim.nonEmpty).map(parseAction).foreach {
-          case m: Metadata       => meta = m
-          case p: Protocol       => proto = p
-          case a: AddFile        => files(a.path) = a; headAdds += 1
-          case t: SetTransaction => txns(t.appId) = t.version
-          case c: CommitInfo
-              if c.operation == GraftLog.SelfContainedCheckpointOp =>
-            selfContained = true
-          case _                 => ()
-        }
-      // format disambiguation, CONTENT-first: a head carrying adds IS the
-      // JSON checkpoint (any dir sidecar alongside is ignored — reading
-      // both would duplicate every file); an add-less head whose OWN
-      // metadata declares parquet format reads its dir sidecar whenever
-      // one exists (the dir is written with java.nio regardless of the
-      // log's store, so even a table re-routed onto a non-filesystem
-      // store keeps reading its parquet checkpoints). A MISSING dir:
-      //  - filesystem-backed store: fail LOUDLY — the parquet writer
-      //    always lands the dir before the head here, so absence means a
-      //    reader racing a concurrent checkpoint deletion, and folding
-      //    without it would silently replay a tiny subset of the table;
-      //  - non-filesystem store: writeCheckpoint falls back to a
-      //    self-contained JSON checkpoint there, so an add-less head with
-      //    no dir IS the complete (empty-file-set) checkpoint — demanding
-      //    a sidecar it never wrote would brick a validly-empty table.
-      if (headAdds == 0 && meta != null &&
-          meta.properties.get(GraftLog.CheckpointFormatProperty)
-            .exists(_.equalsIgnoreCase("parquet"))) {
-        val pdir = checkpointParquetDir(cv)
-        if (Fs.isDirectory(pdir))
-          CheckpointParquet.read(pdir).foreach(a => files(a.path) = a)
-        else if (!selfContained) {
-          // no dir and no stamp: a complete self-contained JSON checkpoint
-          // carries its stamp (see writeCheckpoint's fallback — captured
-          // in the single head read above); an UNSTAMPED add-less parquet
-          // head with no dir means the sidecar is lost — loud on every
-          // store, not just filesystem-backed ones. Recovery must not go
-          // through writeCheckpoint (it snapshots, landing back here):
-          // restore the sidecar, or deleteCheckpoint(cv) so the fold
-          // replays the raw log and a fresh checkpoint can be written.
-          throw new IllegalStateException(
-            s"checkpoint $cv of $tablePath is parquet-format but its file-actions " +
-              s"dir sidecar (${Fs.fileName(pdir)}) is missing — deleted " +
-              "concurrently, or the table was moved without its sidecars; " +
-              s"retry, restore the sidecar, or deleteCheckpoint($cv) and " +
-              "re-checkpoint")
+    def take(a: Action): Unit = a match {
+      case m: Metadata       => meta = m
+      case p: Protocol       => proto = p
+      // last-wins, matching Delta's txn replay: a writer that legitimately
+      // rewinds its version — e.g. a fresh checkpoint dir reusing an appId
+      // — CAN lower its watermark; monotonicity is the SINK's protocol
+      // (writeEpoch gates on >=), not the log's
+      case t: SetTransaction => txns(t.appId) = t.version
+      case _                 => ()
+    }
+    var ckptAdds = false
+    var stamped = false
+    seg.checkpointVersion.foreach { cv =>
+      scanLog(checkpointFile(cv)) { lines =>
+        while (!ckptAdds && lines.hasNext) {
+          val line = lines.next()
+          if (line.startsWith(AddPrefix)) ckptAdds = true
+          else if (line.trim.nonEmpty) parseAction(line) match {
+            case c: CommitInfo => stamped ||= c.operation == SelfContainedCheckpointOp
+            case a             => take(a)
+          }
         }
       }
     }
-    vs.filter(v => v <= target && ckpt.forall(v > _)).foreach { v =>
-      actionsAt(v).foreach {
-        case m: Metadata       => meta = m
-        case a: AddFile        => files(a.path) = a
-        case r: RemoveFile     => files.remove(r.path)
-        // last-wins, matching Delta's txn replay (and the checkpoint fold
-        // above): a writer that legitimately rewinds its version — e.g. a
-        // fresh checkpoint dir reusing an appId — CAN lower its watermark;
-        // monotonicity is the SINK's protocol (writeEpoch gates on >=), not
-        // the log's
-        case t: SetTransaction => txns(t.appId) = t.version
-        case p: Protocol       => proto = p
-        case _                 => ()
+    // where the checkpoint keeps its file actions, CONTENT-first: a head
+    // carrying adds IS the JSON checkpoint (any dir sidecar alongside is
+    // ignored — reading both would duplicate every file); an add-less head
+    // whose OWN metadata declares parquet format reads its dir sidecar
+    // whenever one exists (the dir is written with java.nio regardless of
+    // the log's store, so even a table re-routed onto a non-filesystem
+    // store keeps reading its parquet checkpoints). With NO dir, a stamped
+    // head is writeCheckpoint's self-contained JSON fallback (complete,
+    // zero files); an unstamped one lost its sidecar — deleted by a racing
+    // retention pass, or the table was moved without it — and folding
+    // without it would silently replay a tiny subset of the table, so it
+    // fails loudly on every store. Recovery must not go through
+    // writeCheckpoint (it snapshots, landing back here): restore the
+    // sidecar, or deleteCheckpoint(cv) so the fold replays the raw log.
+    val parquetCheckpoint = seg.checkpointVersion
+      .filter(_ => !ckptAdds && meta != null && declaresParquetCheckpoints(meta))
+      .flatMap { cv =>
+        val pdir = checkpointParquetDir(cv)
+        if (Fs.isDirectory(pdir)) Some(pdir)
+        else if (stamped) None
+        else throw new IllegalStateException(
+          s"checkpoint $cv of $tablePath is parquet-format but its file-actions " +
+            s"dir sidecar (${Fs.fileName(pdir)}) is missing — deleted " +
+            "concurrently, or the table was moved without its sidecars; " +
+            s"retry, restore the sidecar, or deleteCheckpoint($cv) and " +
+            "re-checkpoint")
       }
+    seg.commits.foreach { case (v, _) =>
+      scanLog(versionFile(v))(
+        _.filter(l => HeadPrefixes.exists(l.startsWith)).map(parseAction).foreach(take))
     }
     require(meta != null, s"no metadata action found in log of $tablePath")
     // reader gate: features this BUILD does not implement would make the
     // scan silently wrong (unmasked deleted rows, missing renamed columns)
-    val unknownReader = proto.readerFeatures.filterNot(GraftLog.SupportedReaderFeatures)
+    val unknownReader = proto.readerFeatures.filterNot(SupportedReaderFeatures)
     if (unknownReader.nonEmpty)
       throw new IllegalStateException(
         s"$tablePath requires reader feature(s) ${unknownReader.mkString(", ")} this " +
           "build does not implement (supported: " +
-          s"${GraftLog.SupportedReaderFeatures.toSeq.sorted.mkString(", ")}); " +
+          s"${SupportedReaderFeatures.toSeq.sorted.mkString(", ")}); " +
           "upgrade the library to read this table")
-    Snapshot(target, meta, files.values.toSeq, txns.toMap, proto)
+    SegmentHead(seg, Snapshot(seg.version, meta, Nil, txns.toMap, proto), parquetCheckpoint)
+  }
+
+  /** The add/remove fold on top of a head pass: the checkpoint's file
+    * actions from wherever the head pass found them, then every later
+    * commit's adds and removes in line order (a deletion-vector rewrite
+    * removes and re-adds one path in one commit — the re-add wins).
+    */
+  private[graft] def fold(h: SegmentHead): Snapshot = {
+    GraftLog.recordFold(tablePath)
+    val files = scala.collection.mutable.LinkedHashMap.empty[String, AddFile]
+    def take(line: String): Unit = parseAction(line) match {
+      case a: AddFile    => files(a.path) = a
+      case r: RemoveFile => files.remove(r.path); ()
+      case _             => ()
+    }
+    h.parquetCheckpoint match {
+      case Some(dir) => CheckpointParquet.read(dir).foreach(a => files(a.path) = a)
+      case None => h.segment.checkpointVersion.foreach { cv =>
+        scanLog(checkpointFile(cv))(_.filter(_.startsWith(AddPrefix)).foreach(take))
+      }
+    }
+    h.segment.commits.foreach { case (v, _) =>
+      scanLog(versionFile(v))(
+        _.filter(l => l.startsWith(AddPrefix) || l.startsWith(RemovePrefix)).foreach(take))
+    }
+    h.snapshot.copy(files = files.values.toSeq)
   }
 
   /** History entries (newest first), analogue of `deltaLog.history.getHistory`
@@ -319,20 +337,6 @@ class GraftLog(val tablePath: String, val store: LogStore) {
   def versionAtOrBefore(millis: Long): Option[Long] =
     monotonicHistory().takeWhile(_._2 <= millis).lastOption.map(_._1)
 
-  /** Delete version files and superseded checkpoints below `retainVersion`,
-    * after ensuring a checkpoint covers the surviving range (the engine of
-    * log retention — see `TableOps.cleanupMetadata` for the public
-    * contract). Returns the number of log files deleted.
-    *
-    * Data files reachable ONLY through the doomed versions are deleted too
-    * (the vacuum rule at the same horizon): once their log entries are
-    * gone, no vacuum can ever discover them — skipping this step would
-    * leak every superseded file below the horizon permanently. External
-    * (shallow-clone) references belong to the source table and are never
-    * touched. The dead-file deletes run driver-side; for a huge
-    * never-vacuumed backlog run `TableOps.vacuum(table, retainVersion)`
-    * first (it fans the deletes out as a Spark job).
-    */
   /** The retention scan shared by vacuum and log cleanup: files/change
     * files referenced by ANY retained version (`retainedFiles` includes
     * files added then removed within the retained range — time travel to
@@ -385,6 +389,20 @@ class GraftLog(val tablePath: String, val store: LogStore) {
     RetentionScan(retained.toSeq, liveCdc.toSet, dead, horizon, horizonActions)
   }
 
+  /** Delete version files and superseded checkpoints below `retainVersion`,
+    * after ensuring a checkpoint covers the surviving range (the engine of
+    * log retention — see `TableOps.cleanupMetadata` for the public
+    * contract). Returns the number of log files deleted.
+    *
+    * Data files reachable ONLY through the doomed versions are deleted too
+    * (the vacuum rule at the same horizon): once their log entries are
+    * gone, no vacuum can ever discover them — skipping this step would
+    * leak every superseded file below the horizon permanently. External
+    * (shallow-clone) references belong to the source table and are never
+    * touched. The dead-file deletes run driver-side; for a huge
+    * never-vacuumed backlog run `TableOps.vacuum(table, retainVersion)`
+    * first (it fans the deletes out as a Spark job).
+    */
   def cleanupBelow(retainVersion: Long): Int = {
     val vs = versions()
     val latest = vs.last
@@ -509,6 +527,28 @@ class CommitConflictException(tablePath: String, val version: Long)
   extends RuntimeException(
     s"version $version of $tablePath was committed concurrently by another writer")
 
+/** The log objects one snapshot replays, from one listing of `_graft_log/`:
+  * the target `version`, the newest checkpoint head at or below it and the
+  * commits after that checkpoint, each as (version, bytes).
+  */
+final case class LogSegment(
+    version: Long,
+    checkpoint: Option[(Long, Long)],
+    commits: Seq[(Long, Long)]) {
+  def checkpointVersion: Option[Long] = checkpoint.map(_._1)
+  def commitBytes: Long = commits.map(_._2).sum
+}
+
+/** A segment's head pass ([[GraftLog.replayHead]]): the snapshot head
+  * (`files = Nil`) and, when the checkpoint keeps its file actions in a
+  * parquet dir sidecar, that dir — the format decision every fold of the
+  * segment, driver or executor, reads from.
+  */
+final case class SegmentHead(
+    segment: LogSegment,
+    snapshot: Snapshot,
+    parquetCheckpoint: Option[String])
+
 object GraftLog {
   /** Per-table counters of FULL driver snapshot folds (O(live files) heap
     * + CPU each) — observability for the Dataset-backed read path: the
@@ -530,6 +570,14 @@ object GraftLog {
     Option(foldWatch.get(tablePath)).foreach { c => c.incrementAndGet(); () }
 
   val LogDirName = "_graft_log"
+
+  /** `<v>.json` commits and `<v>.checkpoint.json` checkpoint heads. */
+  private val LogFileName = """(\d+)\.(checkpoint\.)?json""".r
+
+  private val AddPrefix = "{\"add\""
+  private val RemovePrefix = "{\"remove\""
+  /** The lines a head pass parses (every writer renders the action key first). */
+  private val HeadPrefixes = Seq("{\"metadata\"", "{\"protocol\"", "{\"txn\"")
   val CdcDirName = "_change_data"
   val CdfProperty = "graft.enableChangeDataFeed"
 
@@ -546,6 +594,9 @@ object GraftLog {
     * file actions, so old readers must fail loudly instead.
     */
   val CheckpointFormatProperty = "graft.checkpoint.format"
+
+  private[tables] def declaresParquetCheckpoints(m: Metadata): Boolean =
+    m.properties.get(CheckpointFormatProperty).exists(_.equalsIgnoreCase("parquet"))
 
   /** Operation name of the self-containment stamp a JSON checkpoint
     * carries (a commitInfo line every fold ignores) — how a reader

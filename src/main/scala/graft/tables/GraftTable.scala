@@ -33,28 +33,26 @@ class GraftTable private (val spark: SparkSession, val path: String) {
   def version: Long = log.latestVersion()
 
   /** The current snapshot's SCHEMA without folding the file list — the
-    * metadata prefix scan on filesystem stores (O(head lines) regardless
-    * of table size), the full fold elsewhere. For consumers that need
-    * only the shape (stream-source creation, catalog resolution).
+    * log head (O(head lines) regardless of table size). For consumers that
+    * need only the shape (stream-source creation, catalog resolution).
     */
-  def schemaOnly: StructType =
-    if (log.store.filesystemBacked)
-      org.apache.spark.sql.types.DataType
-        .fromJson(DistributedSnapshot.metadataAt(log, version).schemaJson)
-        .asInstanceOf[StructType]
-    else snapshot.schema
+  def schemaOnly: StructType = log.head().schema
 
   /** Current table contents as a DataFrame. */
-  def toDF: DataFrame = {
-    val target = version
-    if (GraftTable.lazyReadEligible(spark, log, target)) lazyReadDF(target)
-    else dfForSnapshot(log.snapshot(target))
-  }
+  def toDF: DataFrame = toDFAt(-1L)
 
-  /** Time-travel read. */
-  def toDFAt(version: Long): DataFrame =
-    if (GraftTable.lazyReadEligible(spark, log, version)) lazyReadDF(version)
-    else dfForSnapshot(snapshotAt(version))
+  /** Time-travel read (latest when `version` is negative). */
+  def toDFAt(version: Long): DataFrame = resolveRead(version).fold(dfForSnapshot, lazyReadDF)
+
+  /** One read resolution of `version` (latest when negative): one log
+    * segment, its head pass, and the driver-file-limit verdict on it —
+    * Right(head) reads through the Dataset-backed path, Left(snapshot) is
+    * the driver fold of that same segment.
+    */
+  private[graft] def resolveRead(version: Long): Either[Snapshot, SegmentHead] = {
+    val head = log.replayHead(log.segment(version))
+    if (GraftTable.lazyReadEligible(spark, log, head)) Right(head) else Left(log.fold(head))
+  }
 
   /** The Dataset-backed read of one version — the large-table path behind
     * `spark.graft.snapshot.driverFileLimit` (default 100k files; see
@@ -66,18 +64,18 @@ class GraftTable private (val spark: SparkSession, val path: String) {
     * list never materializes here, and per-query skipping runs on
     * executors.
     */
-  private[graft] def lazyReadDF(target: Long): DataFrame = {
-    val head = DistributedSnapshot.snapshotHead(log, target)
+  private[graft] def lazyReadDF(segHead: SegmentHead): DataFrame = {
+    val head = segHead.snapshot
     val schema = head.schema
     val dvFiles: Seq[AddFile] =
       if (!head.protocol.readerFeatures.contains("deletionVectors")) Nil
       else {
         implicit val enc = org.apache.spark.sql.Encoders.product[AddFile]
-        DistributedSnapshot.addFilesDF(spark, path, target).as[AddFile]
+        DistributedSnapshot.addFilesDF(spark, log, segHead).as[AddFile]
           .filter((f: AddFile) => f.dv.exists(_.cardinality > 0))
           .collect().toSeq
       }
-    val rel = graft.sources.GraftScanRewrite.lazyNativeRelation(spark, path, head, target)
+    val rel = graft.sources.GraftScanRewrite.lazyNativeRelation(spark, log, segHead)
     val clean = org.apache.spark.sql.graft.SparkBridge.ofRelation(spark, rel)
       .select(schema.fieldNames.map(org.apache.spark.sql.functions.col).toIndexedSeq: _*)
     if (dvFiles.isEmpty) clean
@@ -1057,13 +1055,18 @@ object GraftTable {
     spark.conf.getOption(DriverFileLimitConf).map(_.toLong)
       .getOrElse(DriverFileLimitDefault)
 
-  /** Whether a read of `target` should take the Dataset-backed path: the
-    * (cheaply estimated, never folded) live file count exceeds the
-    * session's driver-file limit and the log is executor-readable.
+  /** Whether a read of the head's segment should take the Dataset-backed
+    * path: the (cheaply estimated, never folded) live file count exceeds
+    * the session's driver-file limit and the log is executor-readable.
     */
   private[graft] def lazyReadEligible(
+      spark: SparkSession, log: GraftLog, head: SegmentHead): Boolean =
+    DistributedSnapshot.exceedsFileLimit(log, head, driverFileLimit(spark))
+
+  /** [[lazyReadEligible]] of `target`, resolving its segment. */
+  private[graft] def lazyReadEligible(
       spark: SparkSession, log: GraftLog, target: Long): Boolean =
-    DistributedSnapshot.exceedsFileLimit(log, target, driverFileLimit(spark))
+    lazyReadEligible(spark, log, log.replayHead(log.segment(target)))
 
   private[graft] def sessionDefaultProperties(spark: SparkSession): Map[String, String] =
     spark.conf.getAll.collect {

@@ -143,12 +143,13 @@ object TableWriter {
     // supplied. Past the driver-file limit the head alone loads, so
     // appends (and with them streaming epochs and COPY INTO) never fold a
     // 10⁶-entry file list the commit would not read. Overwrite modes keep
-    // the full fold: their remove actions ARE the file list.
-    def loadSnapshot(): Snapshot =
-      if (mode == Append &&
-          GraftTable.lazyReadEligible(spark, log, log.latestVersion()))
-        DistributedSnapshot.snapshotHead(log, log.latestVersion())
-      else log.snapshot()
+    // the full fold: their remove actions ARE the file list. One segment
+    // decides and loads, so a concurrent commit cannot split the two.
+    def loadSnapshot(): Snapshot = {
+      val head = log.replayHead(log.segment())
+      if (mode == Append && GraftTable.lazyReadEligible(spark, log, head)) head.snapshot
+      else log.fold(head)
+    }
     val prevSnapshot = if (exists) Some(loadSnapshot()) else None
     // writer gate (snapshot() above already gated READER features): a
     // writer missing a declared writer feature could corrupt invariants it

@@ -48,7 +48,7 @@ class DistributedSnapshotSpec extends AnyFunSpec with SparkSessionTestWrapper {
     val t = GraftTable.create(spark, dir, spark.range(5).toDF("id"))
     t.append(spark.range(5).select(col("id"), lit("x").as("extra")))
     val log = new graft.tables.GraftLog(dir)
-    val meta = DistributedSnapshot.metadataAt(log, log.latestVersion())
+    val meta = log.head(log.latestVersion()).metadata
     val cols = org.apache.spark.sql.types.DataType.fromJson(meta.schemaJson)
       .asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames.toSeq
     assert(cols == Seq("id", "extra"))

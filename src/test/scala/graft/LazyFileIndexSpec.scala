@@ -129,6 +129,8 @@ class LazyFileIndexSpec extends AnyFunSpec with SparkSessionTestWrapper {
   }
 
   it("exceedsFileLimit estimates without folding, across checkpoint formats") {
+    def exceeds(log: GraftLog, v: Long, limit: Long): Boolean =
+      DistributedSnapshot.exceedsFileLimit(log, log.replayHead(log.segment(v)), limit)
     val dir = Fs.child(freshDir(), "t")
     GraftTable.create(spark, dir,
       (0 until 100).map(i => (i.toLong, s"x$i")).toDF("id", "name").repartition(5))
@@ -136,9 +138,9 @@ class LazyFileIndexSpec extends AnyFunSpec with SparkSessionTestWrapper {
     val v = log.latestVersion()
     GraftLog.watchFolds(dir)
     try {
-      assert(DistributedSnapshot.exceedsFileLimit(log, v, 2L))
-      assert(!DistributedSnapshot.exceedsFileLimit(log, v, 5L))
-      assert(!DistributedSnapshot.exceedsFileLimit(log, v, 100L))
+      assert(exceeds(log, v, 2L))
+      assert(!exceeds(log, v, 5L))
+      assert(!exceeds(log, v, 100L))
       assert(GraftLog.foldCount(dir) == 0L, "the estimator must never fold")
     } finally GraftLog.unwatchFolds(dir)
     // parquet checkpoint: the exact footer count takes over
@@ -148,8 +150,8 @@ class LazyFileIndexSpec extends AnyFunSpec with SparkSessionTestWrapper {
     log2.writeCheckpoint(log2.latestVersion())
     GraftLog.watchFolds(dir)
     try {
-      assert(DistributedSnapshot.exceedsFileLimit(log2, log2.latestVersion(), 2L))
-      assert(!DistributedSnapshot.exceedsFileLimit(log2, log2.latestVersion(), 5L))
+      assert(exceeds(log2, log2.latestVersion(), 2L))
+      assert(!exceeds(log2, log2.latestVersion(), 5L))
       assert(GraftLog.foldCount(dir) == 0L, "the estimator must never fold")
     } finally GraftLog.unwatchFolds(dir)
   }
