@@ -220,7 +220,7 @@ object Bench {
     // the sbt-decorated stdout tail — and with NO tail budget it carries
     // the FULL per-query map (VERDICT r17 #2), stdout the q-family subset
     java.nio.file.Files.write(
-      java.nio.file.Paths.get(SummaryPath),
+      java.nio.file.Paths.get(summaryPath(filtered = only.isDefined)),
       (wide + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     // teardown hygiene for the driver's ~2000-char tail capture: stop any
     // straggler streaming query and AWAIT its termination before
@@ -247,6 +247,14 @@ object Bench {
     * tail cost two rounds of parsed:null bench history).
     */
   val SummaryPath = "bench_summary.json"
+
+  /** Where a `SPARK_GRAFT_ONLY`-filtered run writes its summary line: a
+    * partial run must never replace the full suite's [[SummaryPath]].
+    */
+  val FilteredSummaryPath = "bench_summary_filtered.json"
+
+  def summaryPath(filtered: Boolean): String =
+    if (filtered) FilteredSummaryPath else SummaryPath
 
   /** The cadence-bound streaming gates (min-of-3 candidates): every gate
     * driving a `writeStream`/`processAllAvailable` micro-batch loop.

@@ -90,6 +90,28 @@ object SparkEntry {
     }
   }
 
+  /** (exact pairs, approx hits among them) of a recall gate in ONE action:
+    * the left join marks each exact `(query_id, corpus_id)` pair the approx
+    * side also returned, so the exact side — a full brute-force pass —
+    * executes once. The fold assumes approx pairs are unique (rank <= k per
+    * query): a duplicated approx pair would double-count its exact pair, so
+    * the same aggregate counts the DISTINCT matched pairs and the gate fails
+    * loudly when the two disagree.
+    */
+  private def recallCounts(exact: DataFrame, approx: DataFrame, gate: String): (Long, Long) = {
+    val row = exact
+      .join(approx.withColumn("__m", lit(1)), Seq("query_id", "corpus_id"), "left")
+      .agg(count(lit(1)), count(col("__m")),
+        countDistinct(when(col("__m").isNotNull, col("query_id")), col("corpus_id")))
+      .first()
+    val (total, hits, distinctHits) = (row.getLong(0), row.getLong(1), row.getLong(2))
+    if (hits != distinctHits)
+      throw new IllegalStateException(
+        s"$gate: the approximate side returned duplicate (query_id, corpus_id) " +
+          s"pairs ($hits matches, $distinctHits distinct) — recall would be overstated")
+    (total, hits)
+  }
+
   /** events.ts as truncated epoch-µs BIGINT, robust to how the parquet
     * surfaced the column across testdata generations: raw-ns long (legacy
     * TIMESTAMP(NANOS) + nanosAsLong), TIMESTAMP, or TIMESTAMP_NTZ (session
@@ -1702,14 +1724,7 @@ object SparkEntry {
       val approx = Similarity.ivfTopK(corpus, queries, "vec_id", "embedding", 5,
         numCentroids = 16, nProbe = 8)
         .select("query_id", "corpus_id")
-      // ONE action for total+hits: approx pairs are unique by construction
-      // (rank <= k per query), so count of matched marks == the left-semi
-      // count, while the exact side — a full brute-force pass — executes
-      // once instead of twice (guide §1.2: don't recompute whole subtrees)
-      val row = exact
-        .join(approx.withColumn("__m", lit(1)), Seq("query_id", "corpus_id"), "left")
-        .agg(count(lit(1)), count(col("__m"))).first()
-      val (total, hits) = (row.getLong(0), row.getLong(1))
+      val (total, hits) = recallCounts(exact, approx, "d6_ivf_recall")
       import s.implicits._
       Seq((total, hits.toDouble / total >= 0.7))
         .toDF("exact_pairs", "recall_ok")
@@ -1899,11 +1914,7 @@ object SparkEntry {
       val approx = Similarity.pqTopKFromIndex(s, dirT, queries,
         "vec_id", "embedding", 5, rerank = rr)
         .select("query_id", "corpus_id")
-      // one action for total+hits — see d6_ivf_recall's note
-      val row = exact
-        .join(approx.withColumn("__m", lit(1)), Seq("query_id", "corpus_id"), "left")
-        .agg(count(lit(1)), count(col("__m"))).first()
-      val (total, hits) = (row.getLong(0), row.getLong(1))
+      val (total, hits) = recallCounts(exact, approx, "d28_pq_index")
       import s.implicits._
       Seq((total, hits.toDouble / total >= 0.85))
         .toDF("exact_pairs", "recall_ok")
@@ -1928,11 +1939,7 @@ object SparkEntry {
       val approx = Similarity.pqTopK(corpus, queries, "vec_id", "embedding", 5,
         m = 8, ksub = 16, rerank = rr)
         .select("query_id", "corpus_id")
-      // one action for total+hits — see d6_ivf_recall's note
-      val row = exact
-        .join(approx.withColumn("__m", lit(1)), Seq("query_id", "corpus_id"), "left")
-        .agg(count(lit(1)), count(col("__m"))).first()
-      val (total, hits) = (row.getLong(0), row.getLong(1))
+      val (total, hits) = recallCounts(exact, approx, "d23_pq_recall")
       import s.implicits._
       Seq((total, hits.toDouble / total >= 0.85))
         .toDF("exact_pairs", "recall_ok")

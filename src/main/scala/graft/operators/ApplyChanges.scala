@@ -75,7 +75,7 @@ object ApplyChanges {
       .select(col("__graft_ac_row.*"))
 
     // -- 2. one merge ------------------------------------------------------
-    val targetFields = table.snapshot.schema.fields.toSeq
+    val targetFields = table.schemaOnly.fields.toSeq
     val lowerKeys = keyCols.map(_.toLowerCase)
     val seqStored = targetFields.exists(_.name.equalsIgnoreCase(sequenceCol))
     // a NULL stored sequence (row written by a plain append, or schema-merge

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.tables._
 
@@ -14,20 +13,33 @@ import graft.tables._
   *
   *  1. **Prune**: target-only conjuncts of the merge condition select
   *     candidate files via partition values + per-file min/max stats
-  *     ([[FileSkipping]]) — no data read for excluded files.
-  *  2. **Touch**: inner join candidates × source on the condition → the
-  *     distinct set of files containing ≥1 matching row. Only these are
-  *     rewritten; everything else is untouched (at 100 TB, rewrite cost is
-  *     proportional to matched files, not table size).
-  *  3. **Rewrite**: full-outer join of touched-file rows × source on the
-  *     condition; per-row clause disposition with `when/otherwise` (codegen'd
-  *     CASE, no UDFs); deletes drop, updates substitute, unmatched source
-  *     inserts, unmatched target copies.
-  *  4. **Commit**: new files + removes + MERGE metrics (+ CDC pre/post
+  *     ([[FileSkipping]]), narrowed further by the source's key range
+  *     (one pass over the checkpointed source, which also counts its rows)
+  *     — no data read for excluded files.
+  *  2. **Match**: candidate rows, each carrying its file and row position,
+  *     join the source (inner, or left outer for NOT MATCHED BY SOURCE —
+  *     the target stays on the streamed side, so a small source
+  *     broadcasts). Per-row clause disposition is a codegen'd CASE. Only
+  *     CHANGED target rows are kept: matched pairs and target rows a
+  *     by-source clause changes; copied rows never enter the checkpoint.
+  *  3. **Mask**: one aggregate over the changed target rows yields the
+  *     metrics, the multi-match guard and the touched files — those
+  *     holding an updated or deleted row. At 100 TB, rewrite cost is
+  *     proportional to the files holding changed rows, not to table size.
+  *     Unmatched source rows (the inserts) are the source anti-joined on
+  *     the matched source row ids.
+  *  4. **Rewrite**: each touched file is rescanned in its own task(s), its
+  *     existing deletion vectors applied and its updated/deleted positions
+  *     masked by an anti-join, so every output file holds one input
+  *     split's survivors in their original order — the table keeps its key
+  *     clustering and later file skipping still prunes. While the mask
+  *     fits the broadcast threshold it is broadcast and copied rows never
+  *     cross an exchange. Updated and inserted rows go to new file(s) of
+  *     their own.
+  *  5. **Commit**: new files + removes + MERGE metrics (+ CDC pre/post
   *     images when the table has CDF enabled).
   *
-  * Join strategy is left to Catalyst/AQE — a small source broadcasts
-  * automatically; skewed keys re-split under AQE skew-join handling.
+  * Skewed keys in a large source re-split under AQE skew-join handling.
   *
   * Null semantics match SQL MERGE: the condition uses plain `=` unless the
   * caller writes `<=>`, so NULL keys never match (SURVEY §2.1 nuance).
@@ -221,8 +233,7 @@ object GraftMerge {
 
   private val ActionCol = "__graft_action"
   private val FileCol = "__graft_file"
-  private val TgtExists = "__graft_tgt"
-  private val SrcExists = "__graft_src"
+  private val PosCol = "__graft_pos"
   private val SrcIdCol = "__graft_srcid"
   private val Copy = 0
   private val Drop = -1
@@ -299,12 +310,6 @@ object GraftMerge {
       c.references.nonEmpty &&
       c.references.forall(r => targetCols.exists(_.equalsIgnoreCase(stripAlias(r.name))))
     }
-
-    // --- 1b. DYNAMIC file pruning from source join-key ranges -------------
-    // For equi-conjuncts `target.k = source.k`, one tiny agg over the source
-    // yields [min(k), max(k)]; candidate files outside that range can never
-    // contain a matched row (NULL keys never match under `=`), so at scale a
-    // narrow source touches a handful of files instead of the whole table.
     import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
     import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualTo => CatEqualTo, GreaterThanOrEqual => CatGte, LessThanOrEqual => CatLte, Literal => CatLiteral}
     val equiKeys: Seq[(AttributeReference, String)] = classified.partiallyResolved.collect {
@@ -314,92 +319,96 @@ object GraftMerge {
       targetCols.exists(_.equalsIgnoreCase(a.name)) &&
         source.columns.exists(_.equalsIgnoreCase(srcName))
     }
-    val dynamicPreds: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =
-      if (equiKeys.isEmpty) Nil
-      else {
-        val aggs = equiKeys.flatMap { case (_, s) => Seq(min(col(s)), max(col(s))) }
-        val row = source.agg(aggs.head, aggs.tail: _*).collect()(0)
+
+    // The source feeds the pass below, the match join, the unmatched-source
+    // anti-join and the insert projection: checkpointed BEFORE its first
+    // pass, so a shuffled source plan (ApplyChanges' per-key reduce) runs
+    // once. The row id is frozen in the checkpoint: a lost block fails the
+    // merge instead of being recomputed with different ids (which would
+    // re-insert matched rows or drop unmatched ones). Blocks registered
+    // from here on are freed in the finally (localCheckpoint blocks
+    // otherwise linger until garbage collection).
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val sourceCached = source.withColumn(SrcIdCol, monotonically_increasing_id())
+      .localCheckpoint(false)
+    try {
+      // --- 1b. one source pass: numSourceRows + DYNAMIC pruning bounds ----
+      // For equi-conjuncts `target.k = source.k` the same pass yields
+      // [min(k), max(k)]; candidate files outside that range can never
+      // contain a matched row (NULL keys never match under `=`), so at scale
+      // a narrow source touches a handful of files instead of the whole table.
+      val bounds = equiKeys.flatMap { case (_, s) => Seq(min(col(s)), max(col(s))) }
+      val srcRow = sourceCached.agg(count(lit(1)), bounds: _*).collect()(0)
+      val numSourceRows = srcRow.getLong(0)
+      val dynamicPreds: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =
         equiKeys.zipWithIndex.flatMap { case ((attr, _), i) =>
-          if (row.isNullAt(2 * i)) Nil // all-null or empty source: no bound
+          if (srcRow.isNullAt(1 + 2 * i)) Nil // all-null or empty source: no bound
           else Seq(
-            CatGte(attr, CatLiteral.create(row.get(2 * i), attr.dataType)),
-            CatLte(attr, CatLiteral.create(row.get(2 * i + 1), attr.dataType)))
+            CatGte(attr, CatLiteral.create(srcRow.get(1 + 2 * i), attr.dataType)),
+            CatLte(attr, CatLiteral.create(srcRow.get(2 + 2 * i), attr.dataType)))
         }
-      }
 
-    // NOT MATCHED BY SOURCE inverts the pruning logic: the affected rows
-    // are exactly the ones the merge condition does NOT select, so
-    // condition-derived file skipping would hide them — every file is a
-    // candidate (Delta's by-source merges scan the full table likewise)
-    val candidates =
-      if (bySourceN.nonEmpty) {
-        lazyHead match {
-          case Some(head) => graft.tables.DistributedSnapshot.prunedFilesByExprs(
-            spark, table.log, head, Nil) // full set — inherent to by-source
-          case None => snap.files
+      // NOT MATCHED BY SOURCE inverts the pruning logic: the affected rows
+      // are exactly the ones the merge condition does NOT select, so
+      // condition-derived file skipping would hide them — every file is a
+      // candidate (Delta's by-source merges scan the full table likewise)
+      val candidates =
+        if (bySourceN.nonEmpty) {
+          lazyHead match {
+            case Some(head) => graft.tables.DistributedSnapshot.prunedFilesByExprs(
+              spark, table.log, head, Nil) // full set — inherent to by-source
+            case None => snap.files
+          }
         }
-      }
-      else TableOps.dmlCandidates(table, snap, lazyHead, targetOnly ++ dynamicPreds)
-    val scanTime = System.currentTimeMillis() - t0
+        else TableOps.dmlCandidates(table, snap, lazyHead, targetOnly ++ dynamicPreds)
+      val scanTime = System.currentTimeMillis() - t0
 
-    // source is always aliased so UpdateAll/InsertAll can reference its side
-    // of the join unambiguously; user conditions with unqualified source
-    // column names still resolve (an alias hides nothing). Persisted because
-    // it feeds three consumers (touch-detection join, rewrite join, source
-    // count) — recomputing a shuffled source plan thrice is the single
-    // biggest overhead in merge-based dedup.
-    val sourceCached = source.persist(StorageLevel.MEMORY_AND_DISK)
-    val srcAliasName = sourceAlias.getOrElse("__graft_src")
-    // SrcIdCol: a unique id per source row so numSourceRows falls out of the
-    // main merge aggregate (countDistinct) instead of a separate count job
-    val srcDf = sourceCached.withColumn(SrcExists, lit(true))
-      .withColumn(SrcIdCol, monotonically_increasing_id()).alias(srcAliasName)
-    val sourceColsRenamed = source.columns.toSeq
+      // source is always aliased so UpdateAll/InsertAll can reference its
+      // side of the join unambiguously; user conditions with unqualified
+      // source column names still resolve (an alias hides nothing). Sized
+      // by its counted rows, so a small source broadcasts into the match.
+      val srcAliasName = sourceAlias.getOrElse("__graft_src")
+      val srcDf = org.apache.spark.sql.graft.SparkBridge
+        .withRowCount(sourceCached, numSourceRows).alias(srcAliasName)
+      val sourceCols = source.columns.toSeq
+      def insertCols(frame: DataFrame): Seq[Column] = outFields.map(f =>
+        insertColumn(f.name, srcAliasName, notMatchedN, sourceCols, frame)
+          .cast(f.dataType).as(f.name))
+      def metrics(copied: Long, deleted: Long, inserted: Long, updated: Long,
+          filesRemoved: Int): Map[String, String] = Map(
+        "numTargetRowsCopied" -> copied.toString,
+        "numTargetRowsDeleted" -> deleted.toString,
+        "numTargetRowsInserted" -> inserted.toString,
+        "numTargetRowsUpdated" -> updated.toString,
+        "numOutputRows" -> (copied + updated + inserted).toString,
+        "numSourceRows" -> numSourceRows.toString,
+        "numTargetFilesRemoved" -> filesRemoved.toString,
+        "executionTimeMs" -> (System.currentTimeMillis() - t0).toString,
+        "scanTimeMs" -> scanTime.toString,
+        "rewriteTimeMs" -> (System.currentTimeMillis() - t0 - scanTime).toString)
 
-    // --- insert-only fast path --------------------------------------------
-    // Without matched clauses no target row can change: anti-join the source
-    // against the candidate scan and append just the insert rows — no touch
-    // detection, no file rewrite, no removes (the dominant cost of an
-    // appendWithoutDuplicates-style merge on a large table).
-    if (matchedN.isEmpty && bySourceN.isEmpty) {
-      val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
-      try {
+      // --- insert-only fast path ------------------------------------------
+      // Without matched clauses no target row can change: anti-join the
+      // source against the candidate scan and append just the insert rows —
+      // no touch detection, no file rewrite, no removes (the dominant cost
+      // of an appendWithoutDuplicates-style merge on a large table).
+      if (matchedN.isEmpty && bySourceN.isEmpty) {
         val tgtScanAll = table.dfForFiles(snap, candidates).alias(targetAlias)
         val unmatchedSrc = srcDf.join(tgtScanAll, expr(condition), "left_anti")
-        var action: Column = lit(Drop)
-        notMatchedN.zipWithIndex.reverse.foreach { case (cl, i) =>
-          action = when(cl.condition.map(_.column(unmatchedSrc)).getOrElse(lit(true)),
-              insertCode(i))
-            .otherwise(action)
-        }
-        val withAction = unmatchedSrc.withColumn(ActionCol, action)
+        val withAction = unmatchedSrc
+          .withColumn(ActionCol, insertAction(notMatchedN, unmatchedSrc))
           .where(col(ActionCol) =!= Drop)
           .localCheckpoint(false)
         val nIns = withAction.count()
-        val numSourceRows = sourceCached.count()
-        val insCols = outFields.map(f =>
-          insertColumn(f.name, srcAliasName, notMatchedN, sourceColsRenamed, withAction)
-            .cast(f.dataType).as(f.name))
-        val newData = withAction.select(insCols: _*)
+        val newData = withAction.select(insertCols(withAction): _*)
         val cdc = if (snap.cdfEnabled && nIns > 0)
           Some(newData.withColumn("_change_type", lit("insert")))
         else None
-        val metrics = Map(
-          "numTargetRowsCopied" -> "0",
-          "numTargetRowsDeleted" -> "0",
-          "numTargetRowsInserted" -> nIns.toString,
-          "numTargetRowsUpdated" -> "0",
-          "numOutputRows" -> nIns.toString,
-          "numSourceRows" -> numSourceRows.toString,
-          "numTargetFilesRemoved" -> "0",
-          "executionTimeMs" -> (System.currentTimeMillis() - t0).toString,
-          "scanTimeMs" -> scanTime.toString,
-          "rewriteTimeMs" -> (System.currentTimeMillis() - t0 - scanTime).toString)
         return TableWriter.write(
           spark, table.path, newData, TableWriter.Append,
           operation = "MERGE",
           operationParameters = Map("predicate" -> s"[${condition}]"),
-          extraMetrics = metrics,
+          extraMetrics = metrics(0L, 0L, nIns, 0L, 0),
           cdc = cdc,
           // the insert decisions were made by anti-joining the candidate
           // files — a winner rewriting one of them invalidates those
@@ -407,40 +416,29 @@ object GraftMerge {
           readFiles = candidates.map(_.path),
           readVersion = Some(snap.version),
           skipDataWrite = nIns == 0)
-      } finally {
-        sourceCached.unpersist()
-        freeNewBlocks(spark, persistedBefore)
       }
-    }
 
-    // --- 2+3. fused touch-detection + rewrite join -------------------------
-    // ONE full-outer join over all candidate rows (each carrying its file
-    // name) replaces the former inner "touch" join plus second full-outer
-    // over touched files: candidates are scanned once; the multi-match guard,
-    // source-row count and merge metrics fall out of a single aggregate over
-    // the checkpointed join, and the touched-file set out of a cheap
-    // distinct-collect over the same cached blocks.
-    // localCheckpoint (not persist): the joined frame feeds several jobs and
-    // carries synthetic row ids — a lost-and-recomputed cache partition would
-    // reassign ids between jobs, so lineage is cut: a lost partition fails
-    // the merge instead of silently corrupting it. Blocks are freed
-    // explicitly in the finally (checkpointed RDDs otherwise linger until
-    // driver GC).
-    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
-    val candRows = table.dfForFiles(snap, candidates)
-      .withColumn(FileCol, input_file_name())
-      .withColumn(TgtExists, monotonically_increasing_id())
-      .alias(targetAlias)
-    val joinedBase = candRows.join(srcDf, expr(condition), "full_outer")
-    val joined = joinedBase
-      .withColumn(ActionCol, actionExpr(matchedN, notMatchedN, bySourceN, joinedBase))
-      .localCheckpoint(false)
+      // --- 2. match: only changed rows leave the join ---------------------
+      // Candidate rows carry their file and row position. An inner join
+      // (left outer when NOT MATCHED BY SOURCE clauses exist) keeps the
+      // target on the streamed side, so a small source broadcasts and
+      // target rows are never shuffled. The checkpoint holds matched pairs
+      // and the target rows a by-source clause changes — never the copied
+      // majority. localCheckpoint, not persist: the frame feeds several
+      // jobs, and a lost-and-recomputed partition must fail the merge
+      // rather than re-decide a disposition differently.
+      val tgt = DeletionVectors.scanWithPositions(table, snap, candidates).alias(targetAlias)
+      val joinedBase = tgt.join(srcDf, expr(condition),
+        if (bySourceN.nonEmpty) "left_outer" else "inner")
+      val isPair = col(SrcIdCol).isNotNull
+      val targetRows = joinedBase
+        .withColumn(ActionCol, targetAction(matchedN, bySourceN, joinedBase))
+        .where(isPair || col(ActionCol) =!= Copy)
+        .localCheckpoint(false)
 
-    try {
-      // --- metrics from disposition counts (single pass over cached join) --
-      val matchedCodes = matchedN.indices.map(matchedCode)
+      // --- 3. bookkeeping: one aggregate over the changed rows ------------
       // by-source updates/deletes count and behave like their matched
-      // counterparts everywhere downstream (metrics, keep-filter, CDC)
+      // counterparts everywhere downstream (metrics, mask, CDC)
       val updateCodes = matchedN.zipWithIndex.collect {
         case (MatchedClause(_, UpdateExpr(_) | UpdateAll), i) => matchedCode(i)
       } ++ bySourceN.zipWithIndex.collect {
@@ -451,131 +449,135 @@ object GraftMerge {
       } ++ bySourceN.zipWithIndex.collect {
         case (NotMatchedBySourceClause(_, DeleteAction), i) => bySourceCode(i)
       }
-      val insertCodes = notMatchedN.indices.map(insertCode)
-      val bySourceCodes = bySourceN.indices.map(bySourceCode)
       def inCodes(codes: Seq[Int]): Column =
         if (codes.isEmpty) lit(false)
         else col(ActionCol).isin(codes.map(Integer.valueOf): _*)
-      def countWhere(codes: Seq[Int]): Column =
-        sum(when(inCodes(codes), 1L).otherwise(0L))
-      val isPair = col(TgtExists).isNotNull && col(SrcExists).isNotNull
-      val m = joined.agg(
-        countWhere(updateCodes).as("upd"),
-        countDistinct(when(inCodes(deleteCodes), col(TgtExists))).as("del"),
-        countWhere(insertCodes).as("ins"),
-        count(when(isPair, 1)).as("mpairs"),
-        countDistinct(when(isPair, col(TgtExists))).as("mrows"),
-        countDistinct(col(SrcIdCol)).as("nsrc")
-      ).collect()(0)
-      def g(i: Int): Long = if (m.isNullAt(i)) 0L else m.getLong(i)
-      val (nUpd, nDel, nIns) = (g(0), g(1), g(2))
+      val isUpd = inCodes(updateCodes)
+      val isDel = inCodes(deleteCodes)
+      // per (file, position), then per file: pairs vs paired positions is
+      // the multi-match guard, updated/deleted positions are the rewrite
+      // mask's size per file. One shuffle of changed rows by file serves
+      // both levels; the collect returns a row per file.
+      val fileRows = targetRows.select(col(FileCol), col(PosCol), isPair.as("pair"),
+          isUpd.as("upd"), isDel.as("del"))
+        .repartition(col(FileCol))
+        .groupBy(FileCol, PosCol).agg(count(when(col("pair"), 1)).as("pairs"),
+          count(lit(1)).as("rows"), max(col("upd")).as("upd"), max(col("del")).as("del"))
+        .groupBy(FileCol).agg(sum(col("pairs")).as("pairs"),
+          count(when(col("pairs") > 0, 1)).as("paired"), sum(col("rows")).as("rows"),
+          count(when(col("upd"), 1)).as("upd"), count(when(col("del"), 1)).as("del"))
+        .collect()
+      def n(r: org.apache.spark.sql.Row, c: String): Long = r.getAs[Long](c)
+      // The insert anti-join's matched ids and the rewrite's position mask
+      // are each at most one row per checkpointed target row. Both are
+      // broadcast (the source and the touched files then stream unshuffled)
+      // only while that count fits the broadcast threshold: a hint bypasses
+      // it, and a merge changing millions of rows would otherwise pull them
+      // all to the driver. Past it Catalyst plans the joins — a shuffle.
+      val changedRows = fileRows.map(n(_, "rows")).sum
+      val maskRowBytes = 32L + candidates.iterator.map(_.path.length.toLong).maxOption.getOrElse(0L)
+      val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
+      def small(df: DataFrame): DataFrame =
+        if (threshold > 0 && changedRows <= threshold / maskRowBytes) broadcast(df) else df
+
+      // unmatched source rows: the source less every id that found a pair
+      val inserts: Option[DataFrame] =
+        if (notMatchedN.isEmpty) None
+        else {
+          val unmatched = srcDf.join(
+            small(targetRows.where(isPair).select(SrcIdCol)), Seq(SrcIdCol), "left_anti")
+          Some(unmatched.withColumn(ActionCol, insertAction(notMatchedN, unmatched))
+            .where(col(ActionCol) =!= Drop)
+            .localCheckpoint(false))
+        }
+      val nIns = inserts.fold(0L)(_.count())
+      val nUpd = fileRows.map(n(_, "upd")).sum
+      val nDel = fileRows.map(n(_, "del")).sum
       // SQL MERGE semantics (and Delta's rule): multiple source matches for
       // one target row are permitted ONLY when the sole matched clause is an
       // unconditional delete (all matches agree); anything else — update
       // clauses or conditional deletes — is nondeterministic, so fail loudly.
       val multiMatchOk = matchedN == Seq(MatchedClause(None, DeleteAction))
-      if (!multiMatchOk && g(3) != g(4))
+      val extraPairs = fileRows.map(r => n(r, "pairs") - n(r, "paired")).sum
+      if (!multiMatchOk && extraPairs != 0)
         throw new IllegalStateException(
-          s"MERGE aborted: ${g(3) - g(4)} target row(s) matched by multiple source rows; " +
+          s"MERGE aborted: $extraPairs target row(s) matched by multiple source rows; " +
             "deduplicate the source on the merge key first")
-      val numSourceRows = g(5)
+      // touched = files with an updated or deleted row; a file whose pairs
+      // all fell through every clause keeps its bytes
+      val changedFiles = fileRows.collect {
+        case r if n(r, "upd") + n(r, "del") > 0 => r.getString(0)
+      }.toSet
+      val touched = candidates.filter(f => changedFiles.contains(f.path))
 
-      // touched files: the distinct file names seen on matched pairs, decoded
-      // once and resolved against the candidate list (O(uris), not O(uris ×
-      // candidates)). A distinct-collect over the checkpointed join, not a
-      // collect_set in the metrics aggregate: partial distinct runs map-side
-      // and the driver receives one row per file name, so a 100k-file merge
-      // never funnels every URI through a single aggregation buffer.
-      val touchedUris: Set[String] =
-        joined.where(isPair || inCodes(bySourceCodes)).select(col(FileCol)).distinct()
-          .collect().iterator.map(_.getString(0)).toSet
-      val touched = TableWriter.resolveTouched(touchedUris, candidates)
+      // --- 4. rewrite -----------------------------------------------------
+      // Copied rows: each touched file rescanned in its own task (one task
+      // per split), less the updated/deleted positions — a broadcast anti-
+      // join on (file, position) over a scan that already applies the
+      // file's deletion vectors. Every output file thus holds one input
+      // split's survivors in their original order, and copied rows never
+      // cross an exchange: the table keeps its key clustering, and file
+      // skipping keeps working for the next read or DELETE. (A mask too
+      // large to broadcast is shuffled instead: correct, but the copied
+      // rows then lose their per-file layout.)
+      val masked = targetRows.where(isUpd || isDel).select(FileCol, PosCol)
+      val copied = DeletionVectors.scanWithPositions(table, snap, touched, taskPerFile = true)
+        .join(small(masked), Seq(FileCol, PosCol), "left_anti")
+        .alias(targetAlias)
+      val keep = copied.select(outFields.map(f =>
+        targetValue(f, targetCols, targetAlias).cast(f.dataType).as(f.name)): _*)
+      // numTargetRowsCopied from the touched files' footer stats: every live
+      // row of a touched file is updated, deleted, or copied
+      val nCopied = TableOps.copiedRows(touched, nUpd + nDel)(copied.count())
 
-      // numTargetRowsCopied without another distinct-aggregate pass: every
-      // row of a touched file is either updated, deleted, or copied, and the
-      // per-file row counts are already in the log's footer stats
-      val statRecords = touched.map(f => GraftLog.parseStats(f.stats).map(_.numRecords))
-      lazy val touchedNameDf = spark
-        .createDataset(touchedUris.toSeq)(org.apache.spark.sql.Encoders.STRING)
-        .toDF("__graft_touched_uri")
-      lazy val touchedData = joined.join(broadcast(touchedNameDf),
-        col(FileCol) === col("__graft_touched_uri"), "left_semi")
-      val nCopied: Long =
-        if (statRecords.forall(_.isDefined)) statRecords.flatten.sum - nDel - nUpd
-        else { // files written without stats (foreign writer): count directly
-          val r = touchedData
-            .agg(countDistinct(when(col(ActionCol) === Copy, col(TgtExists)))).collect()(0)
-          if (r.isNullAt(0)) 0L else r.getLong(0)
-        }
-
-      // --- output rows -----------------------------------------------------
-      // Rewritten target rows come only from touched files (Copy rows in
-      // untouched files stay in place). Source-only inserts pass through from
-      // the full join. Kept rows need NO dedup shuffle: the multi-match guard
-      // above admits duplicate join pairs only when the sole matched clause is
-      // an unconditional delete, and in that case every duplicated target row
-      // carries a delete code and is filtered here — so each surviving row's
-      // TgtExists id appears exactly once in every reachable configuration.
+      // Updated and inserted rows go to new file(s), about as many as the
+      // candidates' average row count makes them
       val outCols = outFields.map { f =>
-        val base = targetValue(f, targetCols, targetAlias)
-        outputColumn(f.name, base, srcAliasName, matchedN, notMatchedN, sourceColsRenamed,
-            bySourceN, joined)
+        outputColumn(f.name, targetValue(f, targetCols, targetAlias), srcAliasName,
+            matchedN, sourceCols, bySourceN, targetRows)
           .cast(f.dataType).as(f.name)
       }
-      val targetKeep = touchedData
-        .where(col(TgtExists).isNotNull && col(ActionCol) =!= Drop && !inCodes(deleteCodes))
-        .select(outCols: _*)
-      val inserts = joined.where(col(TgtExists).isNull && inCodes(insertCodes))
-        .select(outCols: _*)
-      val newData = targetKeep.unionByName(inserts)
+      val updated = targetRows.where(isUpd).select(outCols: _*)
+      val inserted = inserts.map(ins => ins.select(insertCols(ins): _*))
+      val changed = inserted.fold(updated)(updated.unionByName(_))
+      val candRows = candidates.flatMap(f => GraftLog.parseStats(f.stats).map(_.numRecords))
+      val rowsPerFile = if (candRows.isEmpty) 0L else candRows.sum / candRows.size
+      val nNewFiles =
+        if (rowsPerFile <= 0) 1
+        else math.max(1L, (nUpd + nIns + rowsPerFile - 1) / rowsPerFile).min(Int.MaxValue).toInt
+      val newData = keep.unionByName(changed.coalesce(nNewFiles))
 
-      // --- CDC -------------------------------------------------------------
+      // --- CDC ------------------------------------------------------------
       val cdc: Option[DataFrame] = if (snap.cdfEnabled) {
         val tCols = outFields.map(f =>
           targetValue(f, targetCols, targetAlias).cast(f.dataType).as(f.name))
-        val deletes = joined.where(inCodes(deleteCodes)).dropDuplicates(TgtExists)
-          .select(tCols :+ lit("delete").as("_change_type"): _*)
-        val updPre = joined.where(inCodes(updateCodes))
+        val deletedRows = targetRows.where(isDel)
+        // duplicate pairs reach here only under the lone unconditional delete
+        val deletes = (if (multiMatchOk) deletedRows.dropDuplicates(FileCol, PosCol)
+          else deletedRows).select(tCols :+ lit("delete").as("_change_type"): _*)
+        val updPre = targetRows.where(isUpd)
           .select(tCols :+ lit("update_preimage").as("_change_type"): _*)
-        val updPost = joined.where(inCodes(updateCodes))
-          .select(outCols :+ lit("update_postimage").as("_change_type"): _*)
-        val ins = joined.where(inCodes(insertCodes))
-          .select(outCols :+ lit("insert").as("_change_type"): _*)
-        Some(deletes.union(updPre).union(updPost).union(ins))
+        val updPost = updated.withColumn("_change_type", lit("update_postimage"))
+        val ins = inserted.map(_.withColumn("_change_type", lit("insert")))
+        Some((Seq(deletes, updPre, updPost) ++ ins).reduce(_ union _))
       } else None
 
-      // --- commit ----------------------------------------------------------
-      val noChange = touched.isEmpty && nIns == 0
-      val metrics = Map(
-        "numTargetRowsCopied" -> nCopied.toString,
-        "numTargetRowsDeleted" -> nDel.toString,
-        "numTargetRowsInserted" -> nIns.toString,
-        "numTargetRowsUpdated" -> nUpd.toString,
-        "numOutputRows" -> (nCopied + nUpd + nIns).toString,
-        "numSourceRows" -> numSourceRows.toString,
-        "numTargetFilesRemoved" -> touched.size.toString,
-        "executionTimeMs" -> (System.currentTimeMillis() - t0).toString,
-        "scanTimeMs" -> scanTime.toString,
-        "rewriteTimeMs" -> (System.currentTimeMillis() - t0 - scanTime).toString
-      )
+      // --- 5. commit ------------------------------------------------------
       TableWriter.write(
         spark, table.path, newData,
         TableWriter.Append,
         operation = "MERGE",
         operationParameters = Map("predicate" -> s"[${condition}]"),
-        extraMetrics = metrics + ("numTargetFilesAdded" -> "0"),
+        extraMetrics = metrics(nCopied, nDel, nIns, nUpd, touched.size),
         cdc = cdc,
         removeFiles = touched.map(_.path),
         // read footprint: every candidate file (superset of touched) — a
         // winner removing a candidate may change which rows match
         readFiles = candidates.map(_.path),
         readVersion = Some(snap.version),
-        skipDataWrite = noChange
+        skipDataWrite = touched.isEmpty && nIns == 0
       )
-    } finally {
-      sourceCached.unpersist()
-      freeNewBlocks(spark, persistedBefore)
-    }
+    } finally freeNewBlocks(spark, persistedBefore)
   }
 
   /** Unpersist RDDs registered after `before` — deterministic cleanup of
@@ -586,37 +588,37 @@ object GraftMerge {
     (rdds.keySet -- before).foreach(id => rdds.get(id).foreach(_.unpersist(blocking = false)))
   }
 
-  /** First-matching-clause disposition as a nested CASE expression over
-    * `frame` (the pre-checkpoint join — clause conditions carrying
+  /** First-matching-clause disposition of a joined target row as a nested
+    * CASE over `frame` (the pre-checkpoint join — clause conditions carrying
     * correlated scalar subqueries bind onto its attributes and decorrelate
     * there, so the checkpoint materializes each disposition exactly once).
+    * Pairs take the matched clauses, target-only rows (left outer join) the
+    * by-source ones; a row no clause claims is a Copy.
     */
-  private def actionExpr(
+  private def targetAction(
       matched: Seq[MatchedClause],
-      notMatched: Seq[NotMatchedClause],
       bySource: Seq[NotMatchedBySourceClause],
       frame: DataFrame): Column = {
-    val isMatched = col(TgtExists).isNotNull && col(SrcExists).isNotNull
-    val isSrcOnly = col(TgtExists).isNull && col(SrcExists).isNotNull
-    val isTgtOnly = col(TgtExists).isNotNull && col(SrcExists).isNull
-    var c: Column = lit(Copy)
-    // build in reverse so earlier clauses take precedence; the three row
-    // populations (pair / source-only / target-only) are disjoint
-    c = notMatched.zipWithIndex.reverse.foldLeft(when(isSrcOnly, Drop).otherwise(c)) {
-      case (acc, (cl, i)) =>
-        val cond = isSrcOnly && cl.condition.map(_.column(frame)).getOrElse(lit(true))
-        when(cond, insertCode(i)).otherwise(acc)
-    }
-    c = matched.zipWithIndex.reverse.foldLeft(c) { case (acc, (cl, i)) =>
-      val cond = isMatched && cl.condition.map(_.column(frame)).getOrElse(lit(true))
+    val isPair = col(SrcIdCol).isNotNull
+    // built in reverse so earlier clauses take precedence
+    val pairs = matched.zipWithIndex.reverse.foldLeft(lit(Copy)) { case (acc, (cl, i)) =>
+      val cond = isPair && cl.condition.map(_.column(frame)).getOrElse(lit(true))
       when(cond, matchedCode(i)).otherwise(acc)
     }
-    c = bySource.zipWithIndex.reverse.foldLeft(c) { case (acc, (cl, i)) =>
-      val cond = isTgtOnly && cl.condition.map(_.column(frame)).getOrElse(lit(true))
+    bySource.zipWithIndex.reverse.foldLeft(pairs) { case (acc, (cl, i)) =>
+      val cond = !isPair && cl.condition.map(_.column(frame)).getOrElse(lit(true))
       when(cond, bySourceCode(i)).otherwise(acc)
     }
-    c
   }
+
+  /** First-matching NOT MATCHED clause of an unmatched source row in
+    * `frame`; Drop when none applies.
+    */
+  private def insertAction(notMatched: Seq[NotMatchedClause], frame: DataFrame): Column =
+    notMatched.zipWithIndex.reverse.foldLeft(lit(Drop)) { case (acc, (cl, i)) =>
+      when(cl.condition.map(_.column(frame)).getOrElse(lit(true)), insertCode(i))
+        .otherwise(acc)
+    }
 
   /** The target-side value of output field `f`: the target column when the
     * table has it, typed NULL when `f` exists only through schema evolution
@@ -629,56 +631,42 @@ object GraftMerge {
     if (targetCols.exists(_.equalsIgnoreCase(f.name))) col(s"$targetAlias.${f.name}")
     else lit(null).cast(f.dataType)
 
-  /** Output value of column `c` as a CASE over the disposition; `base` is
-    * the target-side value ([[targetValue]]).
+  /** Output value of column `c` for a changed target row, as a CASE over
+    * its disposition; `base` is the target-side value ([[targetValue]]).
     */
   private def outputColumn(
       c: String,
       base: Column,
       srcAlias: String,
       matched: Seq[MatchedClause],
-      notMatched: Seq[NotMatchedClause],
       sourceCols: Seq[String],
       bySource: Seq[NotMatchedBySourceClause],
       frame: DataFrame): Column = {
-    def sourceValue(action: Any): Column = action match {
-      case UpdateExpr(set) =>
-        set.collectFirst { case (k, v) if k.equalsIgnoreCase(c) => v.column(frame) }
-          .getOrElse(base)
-      case UpdateAll =>
-        if (sourceCols.exists(_.equalsIgnoreCase(c))) col(s"$srcAlias.$c")
-        else base
-      case InsertExpr(values) =>
-        values.collectFirst { case (k, v) if k.equalsIgnoreCase(c) => v.column(frame) }
-          .getOrElse(lit(null))
-      case InsertAll =>
-        if (sourceCols.exists(_.equalsIgnoreCase(c))) col(s"$srcAlias.$c") else lit(null)
-      case _ => base
-    }
+    def setValue(set: Map[String, MergeFrag]): Column =
+      set.collectFirst { case (k, v) if k.equalsIgnoreCase(c) => v.column(frame) }
+        .getOrElse(base)
     var out: Column = base
     matched.zipWithIndex.foreach { case (cl, i) =>
-      cl.action match {
-        case DeleteAction => ()
-        case a => out = when(col(ActionCol) === matchedCode(i), sourceValue(a)).otherwise(out)
+      val v = cl.action match {
+        case UpdateExpr(set) => Some(setValue(set))
+        case UpdateAll =>
+          Some(if (sourceCols.exists(_.equalsIgnoreCase(c))) col(s"$srcAlias.$c") else base)
+        case DeleteAction => None // delete rows never reach the output projection
       }
-    }
-    notMatched.zipWithIndex.foreach { case (cl, i) =>
-      out = when(col(ActionCol) === insertCode(i), sourceValue(cl.action)).otherwise(out)
+      v.foreach(x => out = when(col(ActionCol) === matchedCode(i), x).otherwise(out))
     }
     bySource.zipWithIndex.foreach { case (cl, i) =>
       cl.action match {
         case UpdateExpr(set) =>
-          val v = set.collectFirst { case (k, e) if k.equalsIgnoreCase(c) => e.column(frame) }
-            .getOrElse(base)
-          out = when(col(ActionCol) === bySourceCode(i), v).otherwise(out)
-        case _ => () // delete rows never reach the output projection
+          out = when(col(ActionCol) === bySourceCode(i), setValue(set)).otherwise(out)
+        case _ => ()
       }
     }
     out
   }
 
-  /** Insert-row value of column `c` for the insert-only fast path (only
-    * notMatched clauses; no target side exists).
+  /** Value of column `c` for an inserted source row (only notMatched
+    * clauses apply; no target side exists).
     */
   private def insertColumn(
       c: String,

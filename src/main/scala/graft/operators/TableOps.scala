@@ -123,11 +123,12 @@ object TableOps {
 
   /** Shared head of every predicate-scoped rewrite (DELETE / UPDATE /
     * replaceWhere): stats+bloom file pruning on the predicate, then exact
-    * touch detection — the distinct set of candidate files actually
-    * CONTAINING a matching row. Only those files get rewritten.
+    * touch detection — the set of candidate files actually CONTAINING a
+    * matching row, with the matching rows counted per file on the way
+    * (`matchedRows`). Only those files get rewritten.
     */
   private case class TouchedScan(
-      candidates: Seq[AddFile], touched: Seq[AddFile], scanTimeMs: Long)
+      candidates: Seq[AddFile], touched: Seq[AddFile], matchedRows: Long, scanTimeMs: Long)
 
   /** The snapshot a predicate-scoped DML plans from: a full driver fold
     * below `spark.graft.snapshot.driverFileLimit`; past it, the HEAD —
@@ -167,9 +168,25 @@ object TableOps {
     val candidates = dmlCandidates(table, snap, lazyHead, classified.all)
     val scanTime = System.currentTimeMillis() - t0
     val candDf = table.dfForFiles(snap, candidates).withColumn("__graft_file", input_file_name())
-    val touchedFiles = candDf.where(cond.column(candDf)).select("__graft_file")
-      .distinct().collect().map(_.getString(0)).toSet
-    TouchedScan(candidates, TableWriter.resolveTouched(touchedFiles, candidates), scanTime)
+    val perFile = candDf.where(cond.column(candDf)).groupBy("__graft_file").count()
+      .collect().map(r => r.getString(0) -> r.getLong(1))
+    TouchedScan(candidates, TableWriter.resolveTouched(perFile.map(_._1), candidates),
+      perFile.map(_._2).sum, scanTime)
+  }
+
+  private def persistIf(cond: Boolean, df: DataFrame): DataFrame =
+    if (cond) df.persist(StorageLevel.MEMORY_AND_DISK) else df
+
+  /** Rows a copy-on-write rewrite of `touched` carries over unchanged: the
+    * files' live rows — footer-stats record counts less their deletion-
+    * vector cardinality — minus the `changed` ones, so no pass over the
+    * rewritten rows is needed. `count` runs only when a touched file was
+    * written without stats (a foreign writer).
+    */
+  private[operators] def copiedRows(touched: Seq[AddFile], changed: Long)(count: => Long): Long = {
+    val live = touched.map(f => GraftLog.parseStats(f.stats)
+      .map(_.numRecords - f.dv.map(_.cardinality).getOrElse(0L)))
+    if (live.forall(_.isDefined)) live.flatten.sum - changed else count
   }
 
   /** DELETE FROM table [WHERE condition]. Returns the committed version.
@@ -197,21 +214,17 @@ object TableOps {
     val (snap, lazyHead) = dmlSnap(table)
     if (DeletionVectors.enabled(snap)) return dvDelete(table, snap, rc, t0, lazyHead)
 
-    val TouchedScan(candidates, touched, scanTime) = scanTouched(table, snap, rc, lazyHead)
+    val TouchedScan(candidates, touched, nDel, scanTime) = scanTouched(table, snap, rc, lazyHead)
 
     // 3-valued logic: a NULL-evaluating predicate must NOT delete the row
     // (SQL DELETE semantics) — collapse NULL to false so those rows are
-    // copied and counted, not silently dropped
+    // copied and counted, not silently dropped. Persisted only when the
+    // change feed reads the rows a second time.
     val touchedBase = table.dfForFiles(snap, touched)
-    val touchedRows = touchedBase
-      .withColumn("__graft_del", coalesce(rc.column(touchedBase), lit(false)))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val touchedRows = persistIf(snap.cdfEnabled, touchedBase
+      .withColumn("__graft_del", coalesce(rc.column(touchedBase), lit(false))))
     try {
-      val m = touchedRows.agg(
-        sum(when(col("__graft_del"), 1L).otherwise(0L)),
-        sum(when(!col("__graft_del"), 1L).otherwise(0L))).collect()(0)
-      val nDel = if (m.isNullAt(0)) 0L else m.getLong(0)
-      val nCopied = if (m.isNullAt(1)) 0L else m.getLong(1)
+      val nCopied = copiedRows(touched, nDel)(touchedRows.where(!col("__graft_del")).count())
 
       val outCols = snap.schema.fieldNames.map(col).toSeq
       val keep = touchedRows.where(!col("__graft_del")).select(outCols: _*)
@@ -464,20 +477,16 @@ object TableOps {
       s"UPDATE SET references column(s) not in the table schema: ${unknown.mkString(", ")}")
     if (DeletionVectors.enabled(snap)) return dvUpdate(table, snap, rc, set, t0, lazyHead)
 
-    val TouchedScan(candidates, touched, scanTime) = scanTouched(table, snap, rc, lazyHead)
+    val TouchedScan(candidates, touched, nUpd, scanTime) = scanTouched(table, snap, rc, lazyHead)
 
     // NULL predicate ⇒ not updated (3VL): copy the row through unmodified
-    // and count it as copied, matching SQL UPDATE semantics
+    // and count it as copied, matching SQL UPDATE semantics. Persisted only
+    // when the change feed reads the rows a second time.
     val touchedBase = table.dfForFiles(snap, touched)
-    val touchedRows = touchedBase
-      .withColumn("__graft_upd", coalesce(rc.column(touchedBase), lit(false)))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val touchedRows = persistIf(snap.cdfEnabled, touchedBase
+      .withColumn("__graft_upd", coalesce(rc.column(touchedBase), lit(false))))
     try {
-      val m = touchedRows.agg(
-        sum(when(col("__graft_upd"), 1L).otherwise(0L)),
-        sum(when(!col("__graft_upd"), 1L).otherwise(0L))).collect()(0)
-      val nUpd = if (m.isNullAt(0)) 0L else m.getLong(0)
-      val nCopied = if (m.isNullAt(1)) 0L else m.getLong(1)
+      val nCopied = copiedRows(touched, nUpd)(touchedRows.where(!col("__graft_upd")).count())
 
       val fields = snap.schema.fieldNames.toSeq
       val outCols = fields.map { c =>
@@ -793,12 +802,12 @@ object TableOps {
         "table schema; replaceWhere does not evolve the schema — drop or " +
         "rename them explicitly")
 
-    val TouchedScan(candidates, touched, scanTime) =
+    val TouchedScan(candidates, touched, nDel, scanTime) =
       scanTouched(table, snap, TextCond(predicate), lazyHead)
 
-    val touchedRows = table.dfForFiles(snap, touched)
-      .withColumn("__graft_del", coalesce(expr(predicate), lit(false)))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    // persisted only when the change feed reads the rows a second time
+    val touchedRows = persistIf(snap.cdfEnabled, table.dfForFiles(snap, touched)
+      .withColumn("__graft_del", coalesce(expr(predicate), lit(false))))
     // every incoming row must satisfy the predicate — checked INSIDE the
     // staging write projection (codegen'd, no extra pass), like CHECK
     // constraints; persisted so the CDC pass reuses the validated rows
@@ -809,11 +818,7 @@ object TableOps {
       .select(fields.map(col): _*)
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      val m = touchedRows.agg(
-        sum(when(col("__graft_del"), 1L).otherwise(0L)),
-        sum(when(!col("__graft_del"), 1L).otherwise(0L))).collect()(0)
-      val nDel = if (m.isNullAt(0)) 0L else m.getLong(0)
-      val nCopied = if (m.isNullAt(1)) 0L else m.getLong(1)
+      val nCopied = copiedRows(touched, nDel)(touchedRows.where(!col("__graft_del")).count())
 
       val outCols = fields.map(col)
       val keep = touchedRows.where(!col("__graft_del")).select(outCols: _*)

@@ -358,6 +358,10 @@ class GraftStreamSource(
     // the actions this loop already reads, re-folding only on a version
     // gap (cleaned-log edge) or at the batch head
     var rolling: Option[graft.tables.Snapshot] = None
+    // the metadata plane alone (its file list is NOT the table's), rolled
+    // forward while no full state is: what the change-file and append
+    // branches read, so a batch of such commits folds no file list at all
+    var rollingMeta: Option[graft.tables.Snapshot] = None
     val frames = versions.flatMap { v =>
       val actions = log.actionsAt(v)
       // LAZY pre/post states: folding must happen only when a branch needs
@@ -377,6 +381,19 @@ class GraftStreamSource(
             })
         curMemo.get
       }
+      // schema, properties and partitioning at v — for branches that read
+      // only files this version's own actions name: the full post-state
+      // when one is at hand, else the segment head (no fold) or the rolled
+      // metadata plane
+      var metaMemo: Option[graft.tables.Snapshot] = None
+      def curMeta: graft.tables.Snapshot =
+        if (curMemo.isDefined || rolling.exists(_.version == v - 1)) curSnap
+        else {
+          if (metaMemo.isEmpty)
+            metaMemo = Some(rollingMeta.filter(_.version == v - 1)
+              .map(_.advance(v, actions).copy(files = Nil)).getOrElse(log.head(v)))
+          metaMemo.get
+        }
       val cdc = actions.collect { case c: AddCDCFile => c.path }
       val adds = actions.collect { case a: AddFile => a }
       val removes = actions.collect { case r: RemoveFile => r }
@@ -432,7 +449,7 @@ class GraftStreamSource(
           val paths = cdc.map(p => graft.tables.Fs.child(tablePath, p))
           // change files carry PHYSICAL column names (stable across
           // renames) — read them physically, surface them logically
-          val snapSchema = curSnap.schema
+          val snapSchema = curMeta.schema
           val physSchema = graft.tables.ColumnMapping.physicalSchema(snapSchema)
             .add("_change_type", StringType)
           Some(widen(graft.tables.ColumnMapping.toLogical(
@@ -510,8 +527,7 @@ class GraftStreamSource(
         }
       } else if (dataAdds.nonEmpty) {
         // blind append: the added files ARE the change set
-        val snap = curSnap
-        Some(widen(table.dfForFiles(snap, dataAdds)
+        Some(widen(table.dfForFiles(curMeta, dataAdds)
           .withColumn("_change_type", lit("insert"))
           .withColumn("_commit_version", lit(v))))
       } else None // metadata-only commit
@@ -519,6 +535,10 @@ class GraftStreamSource(
       // branch folded one, else advance an existing state (O(actions));
       // stay lazy otherwise
       rolling = curMemo.orElse(rolling.map(_.advance(v, actions)))
+      rollingMeta =
+        if (rolling.isDefined) None
+        else metaMemo.orElse(rollingMeta.filter(_.version == v - 1)
+          .map(_.advance(v, actions).copy(files = Nil)))
       frame
     }
     // batch-shaped here; getBatch re-tags the final frame as streaming

@@ -80,8 +80,14 @@ object DeletionVectors {
     * scan as parquet `_metadata` fields; the log-path mapping is a broadcast
     * lookup over URI spellings with a loud guard (an unmatched file fails
     * the read rather than silently mis-attributing rows).
+    *
+    * `taskPerFile` gives every file (every split, for a file larger than
+    * the split size) its own scan task, so a writer fed by this scan
+    * writes one output file per input split — a rewrite that keeps each
+    * file's rows, in order, in a file of their own (MERGE's copy write).
     */
-  def scanWithPositions(table: GraftTable, snap: Snapshot, files: Seq[AddFile]): DataFrame = {
+  def scanWithPositions(table: GraftTable, snap: Snapshot, files: Seq[AddFile],
+      taskPerFile: Boolean = false): DataFrame = {
     val spark = table.spark
     if (files.isEmpty) {
       val schema = StructType(snap.schema.fields ++ Seq(
@@ -89,8 +95,11 @@ object DeletionVectors {
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     }
+    val relSession =
+      if (taskPerFile) org.apache.spark.sql.graft.SparkBridge.onePartitionPerFile(spark)
+      else spark
     val rel = graft.sources.GraftScanRewrite.nativeRelation(
-      spark, table.path, pinned = Some(snap.copy(files = files)))
+      relSession, table.path, pinned = Some(snap.copy(files = files)))
     val cols = snap.schema.fieldNames.map(col).toIndexedSeq ++
       Seq(col("_metadata.file_path").as("__graft_uri"),
         col("_metadata.row_index").as("__graft_pos"))

@@ -683,19 +683,6 @@ object TableWriter {
   val AutoCompactMinFilesProperty = "graft.autoOptimize.minNumFiles"
   val DefaultAutoCompactMinFiles = 50
 
-  /** Post-commit auto-compaction (Delta's `autoOptimize.autoCompact`): when
-    * the partitions THIS commit touched have accumulated at least
-    * [[AutoCompactMinFilesProperty]] under-target files, rewrite them into
-    * ~[[TargetFileSizeProperty]]-sized ones as a follow-on OPTIMIZE commit.
-    * Streaming epochs and frequent small appends are the 100 TB motivation:
-    * without a compaction hook, file count — and with it every scan's task
-    * count and the log's snapshot fold — grows with COMMIT count forever.
-    * Best-effort: a lost race with a concurrent writer skips the compaction
-    * (the next qualifying commit retries); the triggering write has already
-    * committed and never fails here. Scoped to touched partitions so a hot
-    * partition's churn never forces a rewrite of cold ones, and exempt for
-    * OPTIMIZE commits (no self-recursion).
-    */
   /** Dense identity-value assignment for columns the frame lacks.
     *
     * Two passes over the SAME plan: (1) per-partition row counts — one job,
@@ -738,6 +725,19 @@ object TableWriter {
     (out, idProps, assigned)
   }
 
+  /** Post-commit auto-compaction (Delta's `autoOptimize.autoCompact`): when
+    * the partitions THIS commit touched have accumulated at least
+    * [[AutoCompactMinFilesProperty]] under-target files, rewrite them into
+    * ~[[TargetFileSizeProperty]]-sized ones as a follow-on OPTIMIZE commit.
+    * Streaming epochs and frequent small appends are the 100 TB motivation:
+    * without a compaction hook, file count — and with it every scan's task
+    * count and the log's snapshot fold — grows with COMMIT count forever.
+    * Best-effort: a lost race with a concurrent writer skips the compaction
+    * (the next qualifying commit retries); the triggering write has already
+    * committed and never fails here. Scoped to touched partitions so a hot
+    * partition's churn never forces a rewrite of cold ones, and exempt for
+    * OPTIMIZE commits (no self-recursion).
+    */
   private def autoCompact(
       spark: SparkSession,
       tablePath: String,

@@ -29,6 +29,40 @@ object SparkBridge {
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     Dataset.ofRows(spark.asInstanceOf[ClassicSparkSession], plan)
 
+  /** A clone of `spark` — same confs, catalog and listeners — whose file
+    * scans never pack two files into one task: the per-file open cost is
+    * raised to the split size, so each file, or each split of a file larger
+    * than that, gets its own scan task. A relation built on the clone plans
+    * its splits by this rule in whichever session runs the query, since the
+    * scan reads its split settings from the relation's session.
+    */
+  def onePartitionPerFile(spark: org.apache.spark.sql.SparkSession)
+    : org.apache.spark.sql.SparkSession = {
+    import org.apache.spark.sql.internal.SQLConf
+    val clone = spark.asInstanceOf[ClassicSparkSession].cloneSession()
+    val conf = clone.sessionState.conf
+    conf.setConf(SQLConf.FILES_OPEN_COST_IN_BYTES, conf.filesMaxPartitionBytes)
+    conf.unsetConf(SQLConf.FILES_MAX_PARTITION_NUM)
+    clone
+  }
+
+  /** `df`, a locally checkpointed Dataset, sized for the planner as `rows`
+    * rows of its schema's default row width. A checkpoint keeps the size
+    * estimate of the plan it froze, which for a shuffled or streamed plan
+    * can sit far above what it holds, so joins against it never broadcast.
+    * Any other plan is returned as is.
+    */
+  def withRowCount(df: DataFrame, rows: Long): DataFrame = df.queryExecution.logical match {
+    case r: org.apache.spark.sql.execution.LogicalRDD =>
+      import org.apache.spark.sql.catalyst.plans.logical.Statistics
+      import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+      val stats = Statistics(
+        sizeInBytes = EstimationUtils.getSizePerRow(r.output) * rows, rowCount = Some(BigInt(rows)))
+      val session = df.sparkSession.asInstanceOf[ClassicSparkSession]
+      Dataset.ofRows(session, r.copy()(session, Some(stats), Some(r.constraints)))
+    case _ => df
+  }
+
   /** `Column` over a custom Catalyst expression (e.g. graft's codegen'd
     * MinHash signature) — the Spark 4 replacement for the removed public
     * `Column(expr)` constructor.

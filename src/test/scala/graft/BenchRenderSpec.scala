@@ -102,6 +102,12 @@ class BenchRenderSpec extends AnyFunSpec with Matchers {
     parse(full)("selected").toString.toInt shouldBe 2
   }
 
+  it("filtered runs write their summary to their own file") {
+    Bench.summaryPath(filtered = false) shouldBe Bench.SummaryPath
+    Bench.summaryPath(filtered = true) shouldBe Bench.FilteredSummaryPath
+    Bench.FilteredSummaryPath should not be Bench.SummaryPath
+  }
+
   it("carries the self-defense markers: loadavg pair and rerun audit, under budget") {
     val name = SparkEntry.staged.keys.min
     val (line, full, _) = Bench.render(syntheticResults(), "/root/testdata/sf0.1",

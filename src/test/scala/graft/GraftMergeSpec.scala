@@ -19,6 +19,35 @@ class GraftMergeSpec extends AnyFunSpec with SparkSessionTestWrapper {
         .toDF("id", "name", "score").repartition(1),
       properties = if (cdf) Map(GraftLog.CdfProperty -> "true") else Map.empty)
 
+  private val Shuffle = "(?<!Broadcast)Exchange ".r
+
+  /** Executed plans of the data writes `body` makes that rescan target rows
+    * by position — MERGE's copy write.
+    */
+  private def copyWritePlans(body: => Unit): Seq[String] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      // listener delivery is async: wait for the copy write's plan
+      import scala.jdk.CollectionConverters._
+      def writePlans() = plans.asScala.toSeq
+        .filter(p => p.contains("InsertIntoHadoopFsRelation") && p.contains("__graft_pos"))
+      val deadline = System.currentTimeMillis() + 30000
+      while (writePlans().isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(50)
+      val found = writePlans()
+      assert(found.nonEmpty, "no copy write plan captured")
+      found
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   describe("GraftMerge") {
     it("updateAll + insertAll upsert") {
       val t = mkTable(tmpTableDir("merge-upsert"))
@@ -278,20 +307,11 @@ class GraftMergeSpec extends AnyFunSpec with SparkSessionTestWrapper {
       assert(t2.toDF.count() == 3)
     }
 
-    it("rewrite write plans no dedup shuffle on the synthetic row id") {
-      // kept rows are provably unique (multi-match is rejected unless the sole
-      // clause is an unconditional delete, whose duplicates are all dropped),
-      // so the data-write plan must not re-shuffle on the synthetic __graft_tgt
-      val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-        override def onSuccess(funcName: String,
-            qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
-          plans.add(qe.executedPlan.toString)
-        override def onFailure(funcName: String,
-            qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
-      }
-      spark.listenerManager.register(listener)
-      try {
+    it("copy write plans no shuffle: copied rows never cross an exchange") {
+      // copied rows come from a position-masked rescan of each touched file
+      // (broadcast anti-join on file + row position): the data-write plan
+      // carrying them may broadcast the mask but must not shuffle anything
+      val rewrites = copyWritePlans {
         val t = mkTable(tmpTableDir("merge-noshuffle"))
         GraftMerge(t, "old")
           .merge(Seq((2, "B!", 200), (4, "d", 40)).toDF("id", "name", "score"),
@@ -299,20 +319,89 @@ class GraftMergeSpec extends AnyFunSpec with SparkSessionTestWrapper {
           .whenMatchedUpdateAll()
           .whenNotMatchedInsertAll()
           .execute()
-        // listener delivery is async: wait for the rewrite's data-write plan
-        // (the only WRITE whose plan references the synthetic row id)
-        import scala.jdk.CollectionConverters._
-        def writePlans() = plans.asScala.toSeq
-          .filter(p => p.contains("InsertIntoHadoopFsRelation") && p.contains("__graft_tgt"))
-        val deadline = System.currentTimeMillis() + 30000
-        while (writePlans().isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(50)
-        val rewrites = writePlans()
-        assert(rewrites.nonEmpty, "no rewrite write plan captured")
-        rewrites.foreach { p =>
-          assert(!p.contains("hashpartitioning(__graft_tgt"),
-            s"rewrite plan still shuffles on the synthetic row id:\n$p")
+      }
+      rewrites.foreach { p =>
+        assert(Shuffle.findFirstIn(p).isEmpty, s"copy write plan shuffles:\n$p")
+      }
+    }
+
+    it("a mask past the broadcast threshold falls back to a shuffled anti-join, same result") {
+      // with broadcasting off, neither the position mask nor the matched
+      // source ids may be hinted to the driver: the merge plans shuffled
+      // anti-joins and must still delete, update, copy and insert exactly
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      spark.conf.set("spark.sql.files.maxRecordsPerFile", "4")
+      try {
+        val df = (1 to 12).map(i => (i, s"n$i")).toDF("id", "name").orderBy("id").coalesce(1)
+        val t = GraftTable.create(spark, tmpTableDir("merge-nobroadcast"), df)
+        val rewrites = copyWritePlans {
+          GraftMerge(t, "tgt")
+            .merge(Seq((2, "DEL"), (6, "Y"), (7, "Z"), (20, "new")).toDF("id", "name"),
+              "tgt.id = s.id", Some("s"))
+            .whenMatchedDelete(Some("s.name = 'DEL'"))
+            .whenMatchedUpdateAll()
+            .whenNotMatchedInsertAll()
+            .execute()
         }
-      } finally spark.listenerManager.unregister(listener)
+        assert(rewrites.exists(p => Shuffle.findFirstIn(p).nonEmpty),
+          s"expected a shuffled anti-join in the copy write:\n${rewrites.mkString("\n")}")
+        val expected = (1 to 12).filter(_ != 2).map {
+          case 6 => (6, "Y"); case 7 => (7, "Z"); case i => (i, s"n$i")
+        } :+ ((20, "new"))
+        assert(t.toDF.as[(Int, String)].collect().sorted.toSeq == expected)
+        val metrics = t.history().head._2.operationMetrics
+        assert(metrics("numTargetRowsDeleted") == "1")
+        assert(metrics("numTargetRowsUpdated") == "2")
+        assert(metrics("numTargetRowsInserted") == "1")
+        assert(metrics("numTargetRowsCopied") == "5")
+        assert(metrics("numTargetFilesRemoved") == "2")
+      } finally {
+        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+        spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+      }
+    }
+
+    it("rewrites each touched file within its own key range; a DELETE of one range removes one file") {
+      spark.conf.set("spark.sql.files.maxRecordsPerFile", "4")
+      try {
+        val df = (1 to 24).map(i => (i, s"n$i")).toDF("id", "name").orderBy("id").coalesce(1)
+        val t = GraftTable.create(spark, tmpTableDir("merge-layout"), df)
+        assert(t.snapshot.numFiles == 6)
+        def range(f: AddFile): (Int, Int) = {
+          val st = GraftLog.parseStats(f.stats).get
+          (st.minValues("id").toInt, st.maxValues("id").toInt)
+        }
+        val before = t.snapshot.files.map(f => f.path -> range(f)).toMap
+        // an upsert touching the files of ids 1-4 (a delete), 9-12 and
+        // 17-20 (updates), plus one insert
+        GraftMerge(t, "tgt")
+          .merge(Seq((2, "DEL"), (10, "Y"), (18, "Z"), (30, "new")).toDF("id", "name"),
+            "tgt.id = s.id", Some("s"))
+          .whenMatchedDelete(Some("s.name = 'DEL'"))
+          .whenMatchedUpdateAll()
+          .whenNotMatchedInsertAll()
+          .execute()
+        val removed = t.log.actionsAt(1).collect { case r: RemoveFile => r.path }
+        assert(removed.map(before).sorted == Seq((1, 4), (9, 12), (17, 20)))
+        val added = t.log.actionsAt(1).collect { case a: AddFile => a }
+        val (inPlace, changed) = added.partition { a =>
+          val (lo, hi) = range(a)
+          removed.exists { r => val (rlo, rhi) = before(r); rlo <= lo && hi <= rhi }
+        }
+        assert(inPlace.map(range).sorted == Seq((1, 4), (9, 12), (17, 20)),
+          s"rewritten files left their source ranges: ${added.map(range)}")
+        assert(changed.size <= 1, s"updated/inserted rows spread over ${changed.map(range)}")
+        val metrics = t.history().head._2.operationMetrics
+        assert(metrics("numTargetRowsCopied") == "9")
+        assert(metrics("numTargetFilesRemoved") == "3")
+        assert(t.toDF.count() == 24)
+        assert(t.toDF.filter("name IN ('Y', 'Z', 'new')").count() == 3)
+
+        graft.operators.TableOps.delete(t, Some("id >= 1 AND id <= 4"))
+        val removed2 = t.log.actionsAt(2).collect { case r: RemoveFile => r.path }
+        assert(removed2.size == 1, s"expected one removed file, got $removed2")
+        assert(t.toDF.count() == 21)
+      } finally spark.conf.unset("spark.sql.files.maxRecordsPerFile")
     }
 
     it("dynamic pruning: a narrow source touches only overlapping files") {
