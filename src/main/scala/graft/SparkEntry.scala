@@ -3273,7 +3273,7 @@ object SparkEntry {
       // SET-VALUED subqueries in UPDATE SET values (beyond Delta, which
       // refuses every subquery in assignments): a non-correlated IN as a
       // boolean assignment, and a correlated EXISTS folded under CASE in
-      // the same statement — both ride the ExprCond seam and evaluate
+      // the same statement — both stay resolved expressions and evaluate
       // plan-level over the rewrite frame (Spark plans predicate
       // subqueries in Project position). DuckDB replays the statement
       // relationally.
@@ -3302,7 +3302,7 @@ object SparkEntry {
       // an IN gate on the matched-update clause, a NOT EXISTS gate on the
       // matched-delete clause (first-match-wins ordering exercised), and
       // an IN gate on the insert clause — each binds plan-level onto the
-      // merge's joined frame (GraftMerge.ExprFrag). DuckDB replays the
+      // merge's joined frame (BoundExpr.Resolved). DuckDB replays the
       // full merge with the same predicates.
       catalogWarehouse(s)
       s.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.s58")
@@ -3339,7 +3339,7 @@ object SparkEntry {
       // matching the TARGET row's key, the update value over rows matching
       // the SOURCE row's key, and the insert value folds a correlated
       // aggregate that is NULL for some rows (coalesce path). Each binds
-      // plan-level onto the merge's joined frame (GraftMerge.ExprFrag) and
+      // plan-level onto the merge's joined frame (BoundExpr.Resolved) and
       // decorrelates through Spark's left-outer-join rewrite. DuckDB
       // replays the full merge relationally with the same correlated
       // subqueries.

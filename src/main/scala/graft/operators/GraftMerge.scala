@@ -48,108 +48,22 @@ object GraftMerge {
   def apply(table: GraftTable, targetAlias: String = "target"): Builder =
     new Builder(table, targetAlias)
 
-  /** A clause condition or assignment value: SQL text (the Builder surface,
-    * resolved by the analyzer against the merge's aliased frames), or a
-    * RESOLVED expression that must bind plan-level because it carries
-    * per-row subqueries text cannot round-trip — correlated scalars,
-    * set-valued IN/EXISTS predicates ([[ExprFrag]] — the MERGE-side
-    * sibling of TableOps' ExprCond seam).
-    */
-  sealed trait MergeFrag {
-    /** The fragment bound over `df` — a frame carrying the merge's
-      * target-aliased and/or source-aliased columns.
-      */
-    def column(df: DataFrame): Column
-  }
-
-  final case class TextFrag(sql: String) extends MergeFrag {
-    def column(df: DataFrame): Column = expr(sql)
-  }
-
-  /** A resolved MERGE clause fragment with per-row subqueries (correlated
-    * scalars, IN/EXISTS predicates): attribute references rebind by ORIGIN
-    * (target attrs onto the frame's target-aliased side, source attrs onto
-    * the source side), including the OuterReference wrappers inside
-    * correlated subplans — Spark's own decorrelation then plans each
-    * correlated subquery as an outer/semi/anti join over the evaluation
-    * frame, and plans set-valued predicates in the Project frames the
-    * clauses evaluate in. Delta refuses subqueries in these positions
-    * outright.
-    *
-    * Same two-job stability discipline as TableOps.ExprCond: each
-    * NON-correlated subquery is materialized exactly once
-    * (localCheckpoint); a correlated one stays a live plan with its graft
-    * sources pinned to statement-start snapshots
-    * ([[graft.sources.GraftSourcePin]]) — the clause dispositions and the
-    * output projection run in separate jobs, and both must see ONE
-    * subquery state.
-    */
-  final class ExprFrag(
-      e: org.apache.spark.sql.catalyst.expressions.Expression,
-      tgt: Seq[org.apache.spark.sql.catalyst.expressions.Attribute], tgtAlias: String,
-      src: Seq[org.apache.spark.sql.catalyst.expressions.Attribute], srcAlias: String)
-    extends MergeFrag {
-    import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, OuterReference, SubqueryExpression}
-    import org.apache.spark.sql.graft.SparkBridge
-
-    private val sideById: Map[org.apache.spark.sql.catalyst.expressions.ExprId, (String, String)] =
-      tgt.map(a => a.exprId -> (tgtAlias, a.name)).toMap ++
-        src.map(a => a.exprId -> (srcAlias, a.name)).toMap
-
-    @volatile private var stable: org.apache.spark.sql.catalyst.expressions.Expression = null
-    private def stableExpr(spark: SparkSession)
-      : org.apache.spark.sql.catalyst.expressions.Expression = {
-      val s0 = stable
-      if (s0 != null) s0
-      else {
-        // the shared DML stability discipline (one definition — see
-        // GraftSourcePin.pinSubqueries)
-        val pinned = graft.sources.GraftSourcePin.pinSubqueries(spark, e)
-        stable = pinned
-        pinned
-      }
-    }
-
-    def column(df: DataFrame): Column = {
-      val out = df.queryExecution.analyzed.output
-      def rebound(a: AttributeReference): Attribute = {
-        val (alias, name) = sideById(a.exprId)
-        out.find(o => o.name == name && o.qualifier.lastOption.contains(alias))
-          .orElse(out.filter(_.name == name) match {
-            case scala.collection.Seq(only) => Some(only)
-            case _ => None
-          })
-          .getOrElse(throw new IllegalStateException(
-            s"MERGE clause column '$alias.$name' not found in the evaluation " +
-              s"frame (${out.map(o => (o.qualifier :+ o.name).mkString(".")).mkString(", ")})"))
-      }
-      SparkBridge.column(stableExpr(df.sparkSession).transform {
-        case sub: SubqueryExpression if sub.isCorrelated =>
-          sub.withNewPlan(sub.plan.transformAllExpressions {
-            case OuterReference(a: AttributeReference) if sideById.contains(a.exprId) =>
-              OuterReference(rebound(a))
-          })
-        case a: AttributeReference if sideById.contains(a.exprId) => rebound(a)
-      })
-    }
-  }
-
   sealed trait MatchedAction
-  case class UpdateExpr(set: Map[String, MergeFrag]) extends MatchedAction
+  case class UpdateExpr(set: Map[String, BoundExpr]) extends MatchedAction
   case object UpdateAll extends MatchedAction
   case object DeleteAction extends MatchedAction
   sealed trait NotMatchedAction
-  case class InsertExpr(values: Map[String, MergeFrag]) extends NotMatchedAction
+  case class InsertExpr(values: Map[String, BoundExpr]) extends NotMatchedAction
   case object InsertAll extends NotMatchedAction
 
-  case class MatchedClause(condition: Option[MergeFrag], action: MatchedAction)
-  case class NotMatchedClause(condition: Option[MergeFrag], action: NotMatchedAction)
+  case class MatchedClause(condition: Option[BoundExpr], action: MatchedAction)
+  case class NotMatchedClause(condition: Option[BoundExpr], action: NotMatchedAction)
   /** `WHEN NOT MATCHED BY SOURCE` (Delta 2.3 shape): acts on TARGET rows no
     * source row matched — update (conditions/sets reference target columns
     * only; the source side is all-null there) or delete. The classic use is
     * sync-deletes: rows absent from the source leave the table.
     */
-  case class NotMatchedBySourceClause(condition: Option[MergeFrag], action: MatchedAction) {
+  case class NotMatchedBySourceClause(condition: Option[BoundExpr], action: MatchedAction) {
     require(action != UpdateAll,
       "NOT MATCHED BY SOURCE has no source row to UPDATE SET * from")
   }
@@ -175,54 +89,54 @@ object GraftMerge {
       */
     def withSchemaEvolution(): Builder = { evolveSchema = true; this }
     def whenMatchedUpdateExpr(set: Map[String, String], condition: Option[String] = None): Builder =
-      whenMatchedUpdateF(set.map { case (k, v) => k -> (TextFrag(v): MergeFrag) },
-        condition.map(TextFrag.apply))
+      whenMatchedUpdateF(set.map { case (k, v) => k -> BoundExpr.Text(v) },
+        condition.map(BoundExpr.Text.apply))
     def whenMatchedUpdateAll(condition: Option[String] = None): Builder = {
-      matched += MatchedClause(condition.map(TextFrag.apply), UpdateAll); this
+      matched += MatchedClause(condition.map(BoundExpr.Text.apply), UpdateAll); this
     }
     def whenMatchedDelete(condition: Option[String] = None): Builder = {
-      matched += MatchedClause(condition.map(TextFrag.apply), DeleteAction); this
+      matched += MatchedClause(condition.map(BoundExpr.Text.apply), DeleteAction); this
     }
     def whenNotMatchedInsertExpr(values: Map[String, String], condition: Option[String] = None): Builder =
-      whenNotMatchedInsertF(values.map { case (k, v) => k -> (TextFrag(v): MergeFrag) },
-        condition.map(TextFrag.apply))
+      whenNotMatchedInsertF(values.map { case (k, v) => k -> BoundExpr.Text(v) },
+        condition.map(BoundExpr.Text.apply))
     def whenNotMatchedInsertAll(condition: Option[String] = None): Builder = {
-      notMatched += NotMatchedClause(condition.map(TextFrag.apply), InsertAll); this
+      notMatched += NotMatchedClause(condition.map(BoundExpr.Text.apply), InsertAll); this
     }
     def whenNotMatchedBySourceUpdateExpr(
         set: Map[String, String], condition: Option[String] = None): Builder =
       whenNotMatchedBySourceUpdateF(
-        set.map { case (k, v) => k -> (TextFrag(v): MergeFrag) },
-        condition.map(TextFrag.apply))
+        set.map { case (k, v) => k -> BoundExpr.Text(v) },
+        condition.map(BoundExpr.Text.apply))
     def whenNotMatchedBySourceDelete(condition: Option[String] = None): Builder = {
-      bySource += NotMatchedBySourceClause(condition.map(TextFrag.apply), DeleteAction); this
+      bySource += NotMatchedBySourceClause(condition.map(BoundExpr.Text.apply), DeleteAction); this
     }
 
     // ---- fragment-level clause entries (the SQL rewrite path: clause
     // conditions/values may carry per-row correlated scalar subqueries
-    // that bind plan-level — see [[ExprFrag]]) -----------------------------
+    // that bind plan-level — see [[BoundExpr.Resolved]]) ------------------
     private[graft] def whenMatchedUpdateF(
-        set: Map[String, MergeFrag], condition: Option[MergeFrag]): Builder = {
+        set: Map[String, BoundExpr], condition: Option[BoundExpr]): Builder = {
       matched += MatchedClause(condition, UpdateExpr(set)); this
     }
-    private[graft] def whenMatchedUpdateAllF(condition: Option[MergeFrag]): Builder = {
+    private[graft] def whenMatchedUpdateAllF(condition: Option[BoundExpr]): Builder = {
       matched += MatchedClause(condition, UpdateAll); this
     }
-    private[graft] def whenMatchedDeleteF(condition: Option[MergeFrag]): Builder = {
+    private[graft] def whenMatchedDeleteF(condition: Option[BoundExpr]): Builder = {
       matched += MatchedClause(condition, DeleteAction); this
     }
     private[graft] def whenNotMatchedInsertF(
-        values: Map[String, MergeFrag], condition: Option[MergeFrag]): Builder = {
+        values: Map[String, BoundExpr], condition: Option[BoundExpr]): Builder = {
       notMatched += NotMatchedClause(condition, InsertExpr(values)); this
     }
-    private[graft] def whenNotMatchedInsertAllF(condition: Option[MergeFrag]): Builder = {
+    private[graft] def whenNotMatchedInsertAllF(condition: Option[BoundExpr]): Builder = {
       notMatched += NotMatchedClause(condition, InsertAll); this
     }
     private[graft] def whenNotMatchedBySourceUpdateF(
-        set: Map[String, MergeFrag], condition: Option[MergeFrag]): Builder = {
+        set: Map[String, BoundExpr], condition: Option[BoundExpr]): Builder = {
       bySource += NotMatchedBySourceClause(condition, UpdateExpr(set)); this
     }
-    private[graft] def whenNotMatchedBySourceDeleteF(condition: Option[MergeFrag]): Builder = {
+    private[graft] def whenNotMatchedBySourceDeleteF(condition: Option[BoundExpr]): Builder = {
       bySource += NotMatchedBySourceClause(condition, DeleteAction); this
     }
 
@@ -280,7 +194,7 @@ object GraftMerge {
     // against a column differing only by case, then silently miss in the
     // downstream name-keyed projection (same fix as the scan-rewrite rules)
     val resolver = spark.sessionState.conf.resolver
-    def normalizeSet(set: Map[String, MergeFrag], what: String): Map[String, MergeFrag] =
+    def normalizeSet(set: Map[String, BoundExpr], what: String): Map[String, BoundExpr] =
       set.map { case (k, v) =>
         val bare =
           if (k.length > targetAlias.length + 1 &&
@@ -580,13 +494,13 @@ object GraftMerge {
     } finally freeNewBlocks(spark, persistedBefore)
   }
 
-  /** Unpersist RDDs registered after `before` — deterministic cleanup of
-    * localCheckpoint blocks (the Dataset API offers no direct handle).
+  /** Free the blocks of RDDs registered after `before` — deterministic
+    * cleanup of localCheckpoint blocks (the Dataset API offers no direct
+    * handle).
     */
-  private def freeNewBlocks(spark: SparkSession, before: scala.collection.Set[Int]): Unit = {
-    val rdds = spark.sparkContext.getPersistentRDDs
-    (rdds.keySet -- before).foreach(id => rdds.get(id).foreach(_.unpersist(blocking = false)))
-  }
+  private def freeNewBlocks(spark: SparkSession, before: scala.collection.Set[Int]): Unit =
+    (spark.sparkContext.getPersistentRDDs.keySet -- before)
+      .foreach(org.apache.spark.sql.graft.SparkBridge.freeBlocks(spark, _))
 
   /** First-matching-clause disposition of a joined target row as a nested
     * CASE over `frame` (the pre-checkpoint join — clause conditions carrying
@@ -642,7 +556,7 @@ object GraftMerge {
       sourceCols: Seq[String],
       bySource: Seq[NotMatchedBySourceClause],
       frame: DataFrame): Column = {
-    def setValue(set: Map[String, MergeFrag]): Column =
+    def setValue(set: Map[String, BoundExpr]): Column =
       set.collectFirst { case (k, v) if k.equalsIgnoreCase(c) => v.column(frame) }
         .getOrElse(base)
     var out: Column = base

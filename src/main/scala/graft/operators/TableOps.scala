@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -14,121 +14,6 @@ import graft.tables._
   * contain affected rows, commit with Delta-compatible metrics + CDC.
   */
 object TableOps {
-
-  /** Row-level condition shared by DELETE/UPDATE: SQL TEXT (graft's own
-    * surface — the default, unchanged path), or a RESOLVED catalyst
-    * expression captured from Spark-native DML whose condition carries
-    * NON-CORRELATED subqueries (`DELETE ... WHERE id IN (SELECT ...)`) —
-    * those cannot round-trip through text, so they rebind by exprId onto
-    * each evaluation frame and let Spark's own subquery planning execute
-    * them (exactly Delta's route: its commands keep the resolved
-    * expression, never re-render it).
-    */
-  private[graft] sealed trait RowCond {
-    /** Human-readable predicate for operation parameters. */
-    def display: String
-    /** The condition bound over `df` (a frame carrying the table's columns). */
-    def column(df: DataFrame): org.apache.spark.sql.Column
-    /** Predicate text for stats/bloom FILE SKIPPING — for expression
-      * conditions only the subquery-free conjuncts (pruning must stay
-      * conservative; dropping a conjunct can only widen the candidate set).
-      */
-    def skippingText: String
-  }
-
-  private[graft] final case class TextCond(sql: String) extends RowCond {
-    def display: String = sql
-    def column(df: DataFrame): org.apache.spark.sql.Column = expr(sql)
-    def skippingText: String = sql
-  }
-
-  private[graft] final case class ExprCond(
-      e: org.apache.spark.sql.catalyst.expressions.Expression,
-      tableOutput: Seq[org.apache.spark.sql.catalyst.expressions.Attribute])
-    extends RowCond {
-    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, PlanExpression, SubqueryExpression}
-    import org.apache.spark.sql.graft.SparkBridge
-    private val nameById = tableOutput.map(a => a.exprId -> a.name).toMap
-
-    def display: String =
-      // subqueries render as opaque placeholders in Expression.sql — keep
-      // the history entry at least self-describing
-      e.sql.replace("listquery()", "<in-subquery>")
-        .replace("scalarsubquery()", "<scalar-subquery>")
-
-    /** Each NON-correlated subquery's plan MATERIALIZED exactly once
-      * (localCheckpoint): the condition is evaluated in two jobs
-      * (touched-file scan, then the rewrite frame), and a live
-      * re-evaluation could see a concurrent commit to the SUBQUERY's
-      * source tables in between — deleting with a mix of two predicate
-      * states. Checkpointing pins one state for the whole operation (the
-      * target side is already snapshot-pinned).
-      *
-      * A CORRELATED subquery cannot be materialized without its join (its
-      * plan carries outer references), so it stays a live PLAN — but its
-      * graft SOURCES are pinned to their statement-start snapshots
-      * ([[graft.sources.GraftSourcePin]]): a concurrent commit to the
-      * subquery's source tables between the two jobs can no longer make
-      * them evaluate two different predicate states.
-      */
-    @volatile private var stable: org.apache.spark.sql.catalyst.expressions.Expression = null
-    private def stableExpr(spark: SparkSession)
-      : org.apache.spark.sql.catalyst.expressions.Expression = {
-      val s0 = stable
-      if (s0 != null) s0
-      else {
-        // the shared DML stability discipline (one definition — see
-        // GraftSourcePin.pinSubqueries)
-        val pinned = graft.sources.GraftSourcePin.pinSubqueries(spark, e)
-        stable = pinned
-        pinned
-      }
-    }
-
-    def column(df: DataFrame): org.apache.spark.sql.Column = {
-      import org.apache.spark.sql.catalyst.expressions.OuterReference
-      // rebind by ATTRIBUTE, not by name string (df("a.b") would parse as
-      // struct access; the analyzed output carries the real attributes)
-      val out = df.queryExecution.analyzed.output
-      def rebound(a: AttributeReference): org.apache.spark.sql.catalyst.expressions.Attribute = {
-        val name = nameById(a.exprId)
-        out.find(_.name == name).getOrElse(throw new IllegalStateException(
-          s"DML condition column '$name' not found in the evaluation frame " +
-            s"(${out.map(_.name).mkString(", ")})"))
-      }
-      SparkBridge.column(stableExpr(df.sparkSession).transform {
-        // a correlated subquery's plan holds OuterReference wrappers around
-        // the SAME target attributes — rebind them onto this frame too, so
-        // Spark's own decorrelation (semi/anti-join rewrite) sees outer
-        // refs the frame actually produces
-        case sub: SubqueryExpression if sub.isCorrelated =>
-          sub.withNewPlan(sub.plan.transformAllExpressions {
-            case OuterReference(a: AttributeReference) if nameById.contains(a.exprId) =>
-              OuterReference(rebound(a))
-          })
-        case a: AttributeReference if nameById.contains(a.exprId) => rebound(a)
-      })
-    }
-
-    def skippingText: String = {
-      val parts = FileSkipping.splitConjuncts(e)
-        .filterNot(_.exists(_.isInstanceOf[PlanExpression[_]]))
-        .map(_.transform {
-          case a: AttributeReference =>
-            org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute(Seq(a.name))
-        }.sql)
-      if (parts.isEmpty) "true" else parts.mkString(" AND ")
-    }
-  }
-
-  /** Shared head of every predicate-scoped rewrite (DELETE / UPDATE /
-    * replaceWhere): stats+bloom file pruning on the predicate, then exact
-    * touch detection — the set of candidate files actually CONTAINING a
-    * matching row, with the matching rows counted per file on the way
-    * (`matchedRows`). Only those files get rewritten.
-    */
-  private case class TouchedScan(
-      candidates: Seq[AddFile], touched: Seq[AddFile], matchedRows: Long, scanTimeMs: Long)
 
   /** The snapshot a predicate-scoped DML plans from: a full driver fold
     * below `spark.graft.snapshot.driverFileLimit`; past it, the HEAD —
@@ -159,24 +44,6 @@ object TableOps {
           Some(BloomIndex.ProbeContext(table.spark, table.path)))
     }
 
-  private def scanTouched(
-      table: GraftTable, snap: Snapshot, cond: RowCond,
-      lazyHead: Option[SegmentHead] = None): TouchedScan = {
-    val spark = table.spark
-    val t0 = System.currentTimeMillis()
-    val classified = FileSkipping.classify(spark, table.toDF, cond.skippingText)
-    val candidates = dmlCandidates(table, snap, lazyHead, classified.all)
-    val scanTime = System.currentTimeMillis() - t0
-    val candDf = table.dfForFiles(snap, candidates).withColumn("__graft_file", input_file_name())
-    val perFile = candDf.where(cond.column(candDf)).groupBy("__graft_file").count()
-      .collect().map(r => r.getString(0) -> r.getLong(1))
-    TouchedScan(candidates, TableWriter.resolveTouched(perFile.map(_._1), candidates),
-      perFile.map(_._2).sum, scanTime)
-  }
-
-  private def persistIf(cond: Boolean, df: DataFrame): DataFrame =
-    if (cond) df.persist(StorageLevel.MEMORY_AND_DISK) else df
-
   /** Rows a copy-on-write rewrite of `touched` carries over unchanged: the
     * files' live rows — footer-stats record counts less their deletion-
     * vector cardinality — minus the `changed` ones, so no pass over the
@@ -197,233 +64,22 @@ object TableOps {
     * (see [[graft.tables.DeletionVectors]]).
     */
   def delete(table: GraftTable, condition: Option[String] = None): Long =
-    deleteCond(table, TextCond(condition.getOrElse("true")))
+    deleteWhere(table, BoundExpr.Text(condition.getOrElse("true")))
 
   /** Spark-native DELETE whose resolved condition carries non-correlated
-    * subqueries (no text round-trip possible — see [[ExprCond]]).
+    * subqueries (no text round-trip possible — see [[BoundExpr.Resolved]]).
     */
   private[graft] def deleteExpr(
       table: GraftTable,
       cond: org.apache.spark.sql.catalyst.expressions.Expression,
       tableOutput: Seq[org.apache.spark.sql.catalyst.expressions.Attribute]): Long =
-    deleteCond(table, ExprCond(cond, tableOutput))
+    deleteWhere(table, BoundExpr.resolved(cond, tableOutput))
 
-  private def deleteCond(table: GraftTable, rc: RowCond): Long = {
-    val spark = table.spark
+  private def deleteWhere(table: GraftTable, cond: BoundExpr): Long = {
     val t0 = System.currentTimeMillis()
     val (snap, lazyHead) = dmlSnap(table)
-    if (DeletionVectors.enabled(snap)) return dvDelete(table, snap, rc, t0, lazyHead)
-
-    val TouchedScan(candidates, touched, nDel, scanTime) = scanTouched(table, snap, rc, lazyHead)
-
-    // 3-valued logic: a NULL-evaluating predicate must NOT delete the row
-    // (SQL DELETE semantics) — collapse NULL to false so those rows are
-    // copied and counted, not silently dropped. Persisted only when the
-    // change feed reads the rows a second time.
-    val touchedBase = table.dfForFiles(snap, touched)
-    val touchedRows = persistIf(snap.cdfEnabled, touchedBase
-      .withColumn("__graft_del", coalesce(rc.column(touchedBase), lit(false))))
-    try {
-      val nCopied = copiedRows(touched, nDel)(touchedRows.where(!col("__graft_del")).count())
-
-      val outCols = snap.schema.fieldNames.map(col).toSeq
-      val keep = touchedRows.where(!col("__graft_del")).select(outCols: _*)
-      val cdc = if (snap.cdfEnabled)
-        Some(touchedRows.where(col("__graft_del"))
-          .select(outCols :+ lit("delete").as("_change_type"): _*))
-      else None
-
-      val metrics = Map(
-        "numDeletedRows" -> nDel.toString,
-        "numCopiedRows" -> nCopied.toString,
-        "numRemovedFiles" -> touched.size.toString,
-        "numRemovedBytes" -> touched.map(_.size).sum.toString,
-        "executionTimeMs" -> (System.currentTimeMillis() - t0).toString,
-        "scanTimeMs" -> scanTime.toString,
-        "rewriteTimeMs" -> (System.currentTimeMillis() - t0 - scanTime).toString
-      )
-      TableWriter.write(spark, table.path, keep, TableWriter.Append,
-        operation = "DELETE",
-        operationParameters = Map("predicate" -> s"""["${rc.display}"]"""),
-        extraMetrics = metrics,
-        cdc = cdc,
-        removeFiles = touched.map(_.path),
-        readFiles = candidates.map(_.path),
-        readVersion = Some(snap.version),
-        skipDataWrite = touched.isEmpty)
-    } finally touchedRows.unpersist()
-  }
-
-  /** Merge-on-read DELETE (deletion vectors): matched rows are recorded as
-    * positions in a `_dv` sidecar; matched files are re-added with a
-    * [[DvDescriptor]] (remove+add of the same path) and never rewritten.
-    * A file whose every remaining live row matches becomes a plain remove —
-    * no descriptor can be "all rows", and pure removes keep `ignoreDeletes`
-    * stream semantics intact.
-    */
-  private def dvDelete(table: GraftTable, snap: Snapshot, rc: RowCond, t0: Long,
-      lazyHead: Option[SegmentHead] = None): Long = {
-    val spark = table.spark
-    val classified = FileSkipping.classify(spark, table.toDF, rc.skippingText)
-    val candidates = dmlCandidates(table, snap, lazyHead, classified.all)
-    val scanTime = System.currentTimeMillis() - t0
-
-    // candidate rows with (file, position) identity, existing DVs applied —
-    // so "newly deleted" below never re-records an already-masked row
-    val rowsBase = DeletionVectors.scanWithPositions(table, snap, candidates)
-    val rows = rowsBase
-      .withColumn("__graft_del", coalesce(rc.column(rowsBase), lit(false)))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      // per-file new-deletion counts: O(candidate files) driver rows
-      val counts = rows.where(col("__graft_del"))
-        .groupBy("__graft_file").count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      val nDel = counts.values.sum
-      val affected = candidates.filter(f => counts.contains(f.path))
-      val (fullGone, partial) = affected.partition { f =>
-        val phys = GraftLog.parseStats(f.stats).map(_.numRecords).getOrElse(-1L)
-        val masked = f.dv.map(_.cardinality).getOrElse(0L)
-        phys >= 0 && counts(f.path) == phys - masked
-      }
-
-      val outCols = snap.schema.fieldNames.map(col).toSeq
-      val cdc = if (snap.cdfEnabled && nDel > 0)
-        Some(rows.where(col("__graft_del"))
-          .select(outCols :+ lit("delete").as("_change_type"): _*))
-      else None
-
-      // merged position sets for partially-affected files: prior sidecar
-      // entries (theirs only) ∪ this delete's new positions — ONE fresh
-      // sidecar per commit, so each file reads exactly one sidecar forever
-      val readds: Seq[AddFile] = if (partial.isEmpty) Nil else {
-        import spark.implicits._
-        val partialKeys = partial.map(_.path).toDF("__graft_file")
-        val newPos = rows.where(col("__graft_del"))
-          .join(broadcast(partialKeys), Seq("__graft_file"), "left_semi")
-          .select(col("__graft_file").as("file"), col("__graft_pos").as("pos"))
-        val withPrior = partial.filter(_.dv.exists(_.cardinality > 0))
-        val merged =
-          if (withPrior.isEmpty) newPos
-          else newPos.unionByName(
-            DeletionVectors.positionsDF(spark, table.path, withPrior))
-        val sidecar = DeletionVectors.write(spark, table.path, merged)
-        partial.map { f =>
-          f.copy(dv = Some(DvDescriptor(sidecar,
-            counts(f.path) + f.dv.map(_.cardinality).getOrElse(0L))))
-        }
-      }
-
-      val metrics = Map(
-        "numDeletedRows" -> nDel.toString,
-        "numCopiedRows" -> "0",
-        "numRemovedFiles" -> fullGone.size.toString,
-        "numRemovedBytes" -> fullGone.map(_.size).sum.toString,
-        "numDeletionVectorsAdded" -> partial.count(_.dv.isEmpty).toString,
-        "numDeletionVectorsUpdated" -> partial.count(_.dv.isDefined).toString,
-        "executionTimeMs" -> (System.currentTimeMillis() - t0).toString,
-        "scanTimeMs" -> scanTime.toString,
-        "rewriteTimeMs" -> (System.currentTimeMillis() - t0 - scanTime).toString
-      )
-      TableWriter.write(spark, table.path,
-        table.dfForFiles(snap, Nil), TableWriter.Append,
-        operation = "DELETE",
-        operationParameters = Map("predicate" -> s"""["${rc.display}"]"""),
-        extraMetrics = metrics,
-        cdc = cdc,
-        // remove+add shape: partial files are removed AND re-added (with the
-        // new descriptor) in this commit — replay order puts removes before
-        // extraActions, so the re-add lands last and wins
-        removeFiles = (fullGone ++ partial).map(_.path),
-        extraActions = readds,
-        readFiles = candidates.map(_.path),
-        readVersion = Some(snap.version),
-        skipDataWrite = true)
-    } finally rows.unpersist()
-  }
-
-  /** Merge-on-read UPDATE: matched rows' old versions are masked exactly as
-    * [[dvDelete]] masks deletions; the updated row versions are appended as
-    * new files in the SAME commit (remove+re-add of masked files, plus
-    * plain adds). Unmatched rows are never read, copied or rewritten.
-    */
-  private def dvUpdate(table: GraftTable, snap: Snapshot, rc: RowCond,
-      set: Map[String, RowCond], t0: Long, lazyHead: Option[SegmentHead] = None): Long = {
-    val spark = table.spark
-    val classified = FileSkipping.classify(spark, table.toDF, rc.skippingText)
-    val candidates = dmlCandidates(table, snap, lazyHead, classified.all)
-    val scanTime = System.currentTimeMillis() - t0
-
-    val rowsBase = DeletionVectors.scanWithPositions(table, snap, candidates)
-    val rows = rowsBase
-      .withColumn("__graft_upd", coalesce(rc.column(rowsBase), lit(false)))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val counts = rows.where(col("__graft_upd"))
-        .groupBy("__graft_file").count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      val nUpd = counts.values.sum
-      val affected = candidates.filter(f => counts.contains(f.path))
-      val (fullGone, partial) = affected.partition { f =>
-        val phys = GraftLog.parseStats(f.stats).map(_.numRecords).getOrElse(-1L)
-        val masked = f.dv.map(_.cardinality).getOrElse(0L)
-        phys >= 0 && counts(f.path) == phys - masked
-      }
-
-      val fields = snap.schema.fieldNames.toSeq
-      val newCols = fields.map { c =>
-        set.collectFirst { case (k, v) if k.equalsIgnoreCase(c) =>
-          v.column(rows).as(c) }
-          .getOrElse(col(c).as(c))
-      }
-      val matched = rows.where(col("__graft_upd"))
-      val newRows = matched.select(newCols: _*)
-
-      val cdc = if (snap.cdfEnabled && nUpd > 0) {
-        val pre = matched.select(fields.map(col) :+ lit("update_preimage").as("_change_type"): _*)
-        val post = matched.select(newCols :+ lit("update_postimage").as("_change_type"): _*)
-        Some(pre.union(post))
-      } else None
-
-      val readds: Seq[AddFile] = if (partial.isEmpty) Nil else {
-        import spark.implicits._
-        val partialKeys = partial.map(_.path).toDF("__graft_file")
-        val newPos = matched
-          .join(broadcast(partialKeys), Seq("__graft_file"), "left_semi")
-          .select(col("__graft_file").as("file"), col("__graft_pos").as("pos"))
-        val withPrior = partial.filter(_.dv.exists(_.cardinality > 0))
-        val merged =
-          if (withPrior.isEmpty) newPos
-          else newPos.unionByName(
-            DeletionVectors.positionsDF(spark, table.path, withPrior))
-        val sidecar = DeletionVectors.write(spark, table.path, merged)
-        partial.map { f =>
-          f.copy(dv = Some(DvDescriptor(sidecar,
-            counts(f.path) + f.dv.map(_.cardinality).getOrElse(0L))))
-        }
-      }
-
-      val metrics = Map(
-        "numUpdatedRows" -> nUpd.toString,
-        "numCopiedRows" -> "0",
-        "numRemovedFiles" -> fullGone.size.toString,
-        "numDeletionVectorsAdded" -> partial.count(_.dv.isEmpty).toString,
-        "numDeletionVectorsUpdated" -> partial.count(_.dv.isDefined).toString,
-        "executionTimeMs" -> (System.currentTimeMillis() - t0).toString,
-        "scanTimeMs" -> scanTime.toString,
-        "rewriteTimeMs" -> (System.currentTimeMillis() - t0 - scanTime).toString
-      )
-      TableWriter.write(spark, table.path, newRows, TableWriter.Append,
-        operation = "UPDATE",
-        operationParameters = Map("predicate" -> s"[${rc.display}]"),
-        extraMetrics = metrics,
-        cdc = cdc,
-        removeFiles = (fullGone ++ partial).map(_.path),
-        extraActions = readds,
-        readFiles = candidates.map(_.path),
-        readVersion = Some(snap.version),
-        skipDataWrite = affected.isEmpty)
-    } finally rows.unpersist()
+    new PredicateRewrite(table, snap, lazyHead, t0, cond,
+      RowRewrite("DELETE", Map("predicate" -> s"""["${cond.display}"]"""))).run()
   }
 
   /** UPDATE table SET ... [WHERE condition]. Returns the committed version.
@@ -435,37 +91,32 @@ object TableOps {
     * rewriting the other 99.9%).
     */
   def update(table: GraftTable, condition: Option[String], set: Map[String, String]): Long =
-    updateCond(table, TextCond(condition.getOrElse("true")),
-      set.map { case (k, v) => k -> (TextCond(v): RowCond) })
+    updateMixed(table, BoundExpr.Text(condition.getOrElse("true")),
+      set.map { case (k, v) => k -> BoundExpr.Text(v) })
 
   /** Spark-native UPDATE whose resolved condition carries non-correlated
-    * subqueries (no text round-trip possible — see [[ExprCond]]); the SET
-    * assignments arrive as text (scalar subqueries in assignments are
-    * evaluated to literals upstream, before this call).
+    * subqueries (no text round-trip possible — see [[BoundExpr.Resolved]]);
+    * the SET assignments arrive as text (scalar subqueries in assignments
+    * are evaluated to literals upstream, before this call).
     */
   private[graft] def updateExpr(
       table: GraftTable,
       cond: org.apache.spark.sql.catalyst.expressions.Expression,
       tableOutput: Seq[org.apache.spark.sql.catalyst.expressions.Attribute],
       set: Map[String, String]): Long =
-    updateCond(table, ExprCond(cond, tableOutput),
-      set.map { case (k, v) => k -> (TextCond(v): RowCond) })
+    updateMixed(table, BoundExpr.resolved(cond, tableOutput),
+      set.map { case (k, v) => k -> BoundExpr.Text(v) })
 
-  /** Spark-native UPDATE with condition AND/OR assignments carried as
-    * [[RowCond]]s — the seam that lets a SET value hold a PER-ROW
-    * CORRELATED scalar subquery (`SET x = (SELECT max(y) FROM s WHERE
-    * s.k = t.k)`): the [[ExprCond]] value rebinds its outer references
-    * onto the rewrite frame, Spark's own decorrelation plans the
-    * left-outer-join + aggregate, and the subquery's graft sources are
-    * snapshot-pinned so the data write and the CDC post-image evaluate one
-    * state. (Delta refuses these outright.)
+  /** UPDATE with condition AND/OR assignments carried as [[BoundExpr]]s —
+    * the seam that lets a SET value hold a PER-ROW CORRELATED scalar
+    * subquery (`SET x = (SELECT max(y) FROM s WHERE s.k = t.k)`): the
+    * resolved value rebinds its outer references onto the rewrite frame,
+    * Spark's own decorrelation plans the left-outer-join + aggregate, and
+    * the subquery's graft sources are snapshot-pinned so the data write and
+    * the CDC post-image evaluate one state. (Delta refuses these outright.)
     */
   private[graft] def updateMixed(
-      table: GraftTable, rc: RowCond, set: Map[String, RowCond]): Long =
-    updateCond(table, rc, set)
-
-  private def updateCond(table: GraftTable, rc: RowCond, set: Map[String, RowCond]): Long = {
-    val spark = table.spark
+      table: GraftTable, cond: BoundExpr, set: Map[String, BoundExpr]): Long = {
     val t0 = System.currentTimeMillis()
     val (snap, lazyHead) = dmlSnap(table)
     require(set.nonEmpty, "UPDATE needs at least one SET assignment")
@@ -475,73 +126,198 @@ object TableOps {
     val unknown = set.keys.filterNot(k => snap.schema.fieldNames.exists(_.equalsIgnoreCase(k)))
     require(unknown.isEmpty,
       s"UPDATE SET references column(s) not in the table schema: ${unknown.mkString(", ")}")
-    if (DeletionVectors.enabled(snap)) return dvUpdate(table, snap, rc, set, t0, lazyHead)
-
-    val TouchedScan(candidates, touched, nUpd, scanTime) = scanTouched(table, snap, rc, lazyHead)
-
-    // NULL predicate ⇒ not updated (3VL): copy the row through unmodified
-    // and count it as copied, matching SQL UPDATE semantics. Persisted only
-    // when the change feed reads the rows a second time.
-    val touchedBase = table.dfForFiles(snap, touched)
-    val touchedRows = persistIf(snap.cdfEnabled, touchedBase
-      .withColumn("__graft_upd", coalesce(rc.column(touchedBase), lit(false))))
-    try {
-      val nCopied = copiedRows(touched, nUpd)(touchedRows.where(!col("__graft_upd")).count())
-
-      val fields = snap.schema.fieldNames.toSeq
-      val outCols = fields.map { c =>
-        set.collectFirst { case (k, v) if k.equalsIgnoreCase(c) =>
-          when(col("__graft_upd"), v.column(touchedRows)).otherwise(col(c)).as(c)
-        }.getOrElse(col(c).as(c))
-      }
-      val out = touchedRows.select(outCols: _*)
-
-      val cdc = if (snap.cdfEnabled) {
-        val pre = touchedRows.where(col("__graft_upd"))
-          .select(fields.map(col) :+ lit("update_preimage").as("_change_type"): _*)
-        val post = touchedRows.where(col("__graft_upd"))
-          .select(outCols :+ lit("update_postimage").as("_change_type"): _*)
-        Some(pre.union(post))
-      } else None
-
-      val metrics = Map(
-        "numUpdatedRows" -> nUpd.toString,
-        "numCopiedRows" -> nCopied.toString,
-        "numRemovedFiles" -> touched.size.toString,
-        "executionTimeMs" -> (System.currentTimeMillis() - t0).toString,
-        "scanTimeMs" -> scanTime.toString,
-        "rewriteTimeMs" -> (System.currentTimeMillis() - t0 - scanTime).toString
-      )
-      TableWriter.write(spark, table.path, out, TableWriter.Append,
-        operation = "UPDATE",
-        operationParameters = Map("predicate" -> s"[${rc.display}]"),
-        extraMetrics = metrics,
-        cdc = cdc,
-        removeFiles = touched.map(_.path),
-        readFiles = candidates.map(_.path),
-        readVersion = Some(snap.version),
-        skipDataWrite = touched.isEmpty)
-    } finally touchedRows.unpersist()
+    new PredicateRewrite(table, snap, lazyHead, t0, cond,
+      RowRewrite("UPDATE", Map("predicate" -> s"[${cond.display}]"), set = Some(set))).run()
   }
 
-  /** Selective transactional overwrite — Delta's `replaceWhere`
-    * (`df.write.option("replaceWhere", pred).mode("overwrite")`): in ONE
-    * commit, delete every existing row matching `predicate` and insert `df`.
-    * Existing rows whose predicate evaluates NULL are kept (3-valued logic,
-    * same as [[delete]]); every INCOMING row must satisfy the predicate —
-    * false or NULL rejects the whole write before anything commits (Delta's
-    * replaceWhere constraint check), otherwise "replace region X" could
-    * silently scatter rows outside X where later replaceWheres on X would
-    * not see them.
-    *
-    * Scale: file pruning, not a table rewrite — stats/bloom skipping keeps
-    * untouched-by-predicate files out of the read set entirely, and only
-    * files actually CONTAINING matching rows are rewritten. A
-    * partition-aligned predicate therefore rewrites exactly the affected
-    * partitions regardless of table size.
-    *
-    * @return the committed version
+  /** What a predicate-scoped rewrite does with the rows its condition
+    * matches: drops them (`set` empty — DELETE, and replaceWhere, which also
+    * writes its validated `incoming` rows) or re-projects them through the
+    * `set` assignments (UPDATE). `operation` and `parameters` go to the
+    * commit, `extraActions` ride along after the removes.
     */
+  private final case class RowRewrite(
+      operation: String,
+      parameters: Map[String, String],
+      set: Option[Map[String, BoundExpr]] = None,
+      incoming: Option[DataFrame] = None,
+      extraActions: Seq[Action] = Nil)
+
+  /** The one predicate-scoped rewrite behind DELETE, UPDATE and
+    * replaceWhere, planned from `snap` (read at `t0`): candidate files by
+    * stats+bloom pruning on the condition, then merge-on-read on a
+    * deletion-vector table ([[dv]]), copy-on-write otherwise ([[cow]]) —
+    * and always for replaceWhere.
+    */
+  private final class PredicateRewrite(table: GraftTable, snap: Snapshot,
+      lazyHead: Option[SegmentHead], t0: Long, cond: BoundExpr, rw: RowRewrite) {
+    private val spark = table.spark
+    private val candidates = dmlCandidates(table, snap, lazyHead,
+      FileSkipping.classify(spark, table.toDF, cond.skippingText).all)
+    private val scanTime = System.currentTimeMillis() - t0
+    private val fields = snap.schema.fieldNames.toSeq
+    private val dropped = rw.set.isEmpty
+
+    def run(): Long =
+      if (rw.incoming.isEmpty && DeletionVectors.enabled(snap)) dv() else cow()
+
+    /** `rows` with the per-row match flag: the condition with NULL
+      * collapsed to false — SQL 3-valued logic, a NULL-evaluating
+      * predicate neither deletes nor updates its row.
+      */
+    private def flagged(rows: DataFrame): DataFrame =
+      rows.withColumn(Matched, coalesce(cond.column(rows), lit(false)))
+
+    /** Copy-on-write: every candidate file holding a matched row is
+      * rewritten — its unmatched rows copied, its matched rows dropped or
+      * re-projected — plus replaceWhere's incoming rows, in one commit that
+      * removes the files.
+      */
+    private def cow(): Long = {
+      // exact touch detection: the candidates actually CONTAINING a match,
+      // with the matches counted per file on the way
+      val candDf = table.dfForFiles(snap, candidates).withColumn("__graft_file", input_file_name())
+      val perFile = candDf.where(cond.column(candDf)).groupBy("__graft_file").count()
+        .collect().map(r => r.getString(0) -> r.getLong(1))
+      val touched = TableWriter.resolveTouched(perFile.map(_._1), candidates)
+      val nMatched = perFile.map(_._2).sum
+      // persisted only when the change feed reads the rows a second time
+      val rows = flagged(table.dfForFiles(snap, touched))
+      if (snap.cdfEnabled) rows.persist(StorageLevel.MEMORY_AND_DISK)
+      try {
+        val nCopied = copiedRows(touched, nMatched)(rows.where(!col(Matched)).count())
+        val setCols = rw.set.map(assigned(_, rows, Some(col(Matched))))
+        val out = setCols.fold(rows.where(!col(Matched)).select(fields.map(col): _*))(
+          rows.select(_: _*))
+        val nNew = rw.incoming.map(_.count())
+        val cdc = if (!snap.cdfEnabled) None else {
+          val changes = matchedChanges(rows.where(col(Matched)), setCols)
+          Some(rw.incoming.fold(changes)(in =>
+            changes.unionByName(in.select(fields.map(col) :+ lit("insert").as("_change_type"): _*))))
+        }
+        commit(rw.incoming.fold(out)(out.unionByName(_)), cdc,
+          metrics(nMatched, nCopied, touched,
+            nNew.map(n => "numOutputRows" -> (nCopied + n).toString).toMap),
+          touched, Nil, skipDataWrite = rw.incoming.isEmpty && touched.isEmpty)
+      } finally rows.unpersist()
+    }
+
+    /** Merge-on-read (deletion vectors): matched rows are recorded as
+      * positions in a `_dv` sidecar and their files re-added with a
+      * [[DvDescriptor]] (remove+add of the same path), never rewritten;
+      * re-projected rows (UPDATE) are written as new files in the same
+      * commit. Unmatched rows are never read back, copied or rewritten. A
+      * file whose every remaining live row matches becomes a plain remove
+      * — no descriptor can be "all rows", and pure removes keep
+      * `ignoreDeletes` stream semantics intact.
+      */
+    private def dv(): Long = {
+      // candidate rows with (file, position) identity, existing DVs
+      // applied — so a matched row is never one an earlier vector masks
+      val rows = flagged(DeletionVectors.scanWithPositions(table, snap, candidates))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      try {
+        val matched = rows.where(col(Matched))
+        // per-file match counts: O(candidate files) driver rows
+        val counts = matched.groupBy("__graft_file").count().collect()
+          .map(r => r.getString(0) -> r.getLong(1)).toMap
+        val nMatched = counts.values.sum
+        val affected = candidates.filter(f => counts.contains(f.path))
+        val (fullGone, partial) = affected.partition { f =>
+          val phys = GraftLog.parseStats(f.stats).map(_.numRecords).getOrElse(-1L)
+          val masked = f.dv.map(_.cardinality).getOrElse(0L)
+          phys >= 0 && counts(f.path) == phys - masked
+        }
+        val setCols = rw.set.map(assigned(_, rows, None))
+        val cdc = if (snap.cdfEnabled && nMatched > 0) Some(matchedChanges(matched, setCols))
+          else None
+
+        // merged position sets for partially-affected files: prior sidecar
+        // entries (theirs only) ∪ this commit's new positions — ONE fresh
+        // sidecar per commit, so each file reads exactly one sidecar forever
+        val readds: Seq[AddFile] = if (partial.isEmpty) Nil else {
+          import spark.implicits._
+          val partialKeys = partial.map(_.path).toDF("__graft_file")
+          val newPos = matched
+            .join(broadcast(partialKeys), Seq("__graft_file"), "left_semi")
+            .select(col("__graft_file").as("file"), col("__graft_pos").as("pos"))
+          val withPrior = partial.filter(_.dv.exists(_.cardinality > 0))
+          val merged =
+            if (withPrior.isEmpty) newPos
+            else newPos.unionByName(
+              DeletionVectors.positionsDF(spark, table.path, withPrior))
+          val sidecar = DeletionVectors.write(spark, table.path, merged)
+          partial.map { f =>
+            f.copy(dv = Some(DvDescriptor(sidecar,
+              counts(f.path) + f.dv.map(_.cardinality).getOrElse(0L))))
+          }
+        }
+
+        // remove+add shape: partial files are removed AND re-added (with
+        // the new descriptor) in this commit — replay order puts removes
+        // before extraActions, so the re-add lands last and wins
+        commit(setCols.fold(table.dfForFiles(snap, Nil))(matched.select(_: _*)), cdc,
+          metrics(nMatched, 0L, fullGone, Map(
+            "numDeletionVectorsAdded" -> partial.count(_.dv.isEmpty).toString,
+            "numDeletionVectorsUpdated" -> partial.count(_.dv.isDefined).toString)),
+          fullGone ++ partial, readds, skipDataWrite = dropped || affected.isEmpty)
+      } finally rows.unpersist()
+    }
+
+    /** The table's columns with `set` applied over `frame` — only where
+      * `onlyWhere` holds, when given.
+      */
+    private def assigned(set: Map[String, BoundExpr], frame: DataFrame,
+        onlyWhere: Option[Column]): Seq[Column] =
+      fields.map { c =>
+        set.collectFirst { case (k, v) if k.equalsIgnoreCase(c) =>
+          onlyWhere.fold(v.column(frame))(when(_, v.column(frame)).otherwise(col(c))).as(c)
+        }.getOrElse(col(c).as(c))
+      }
+
+    /** Change rows for the `matched` rows: deletes, or update pre-images
+      * and post-images when `setCols` re-projects them.
+      */
+    private def matchedChanges(matched: DataFrame, setCols: Option[Seq[Column]]): DataFrame = {
+      def tagged(cols: Seq[Column], kind: String) =
+        matched.select(cols :+ lit(kind).as("_change_type"): _*)
+      setCols.fold(tagged(fields.map(col), "delete"))(post =>
+        tagged(fields.map(col), "update_preimage").union(tagged(post, "update_postimage")))
+    }
+
+    /** Commit metrics: matched rows (deleted or updated), copied rows,
+      * removed files — and their bytes when matched rows are dropped —
+      * then `extra` and the phase timings.
+      */
+    private def metrics(matched: Long, copied: Long, removed: Seq[AddFile],
+        extra: Map[String, String]): Map[String, String] =
+      Map(
+        (if (dropped) "numDeletedRows" else "numUpdatedRows") -> matched.toString,
+        "numCopiedRows" -> copied.toString,
+        "numRemovedFiles" -> removed.size.toString) ++
+        (if (dropped) Map("numRemovedBytes" -> removed.map(_.size).sum.toString) else Map.empty) ++
+        extra ++ Map(
+          "executionTimeMs" -> (System.currentTimeMillis() - t0).toString,
+          "scanTimeMs" -> scanTime.toString,
+          "rewriteTimeMs" -> (System.currentTimeMillis() - t0 - scanTime).toString)
+
+    private def commit(data: DataFrame, cdc: Option[DataFrame], metrics: Map[String, String],
+        removed: Seq[AddFile], readds: Seq[AddFile], skipDataWrite: Boolean): Long =
+      TableWriter.write(spark, table.path, data, TableWriter.Append,
+        operation = rw.operation,
+        operationParameters = rw.parameters,
+        extraMetrics = metrics,
+        cdc = cdc,
+        removeFiles = removed.map(_.path),
+        extraActions = readds ++ rw.extraActions,
+        readFiles = candidates.map(_.path),
+        readVersion = Some(snap.version),
+        skipDataWrite = skipDataWrite)
+  }
+
+  /** Per-row match flag column of a predicate-scoped rewrite. */
+  private val Matched = "__graft_match"
+
   /** GENERATE symlink_format_manifest — see [[graft.tables.SymlinkManifest]].
     * Set table property `graft.symlinkFormatManifest.enabled=true` to have
     * every commit refresh it automatically (best-effort, post-commit).
@@ -550,11 +326,6 @@ object TableOps {
   def generateManifest(table: GraftTable): Int =
     SymlinkManifest.write(table.path, table.snapshot)
 
-  /** Where one COPY INTO commit remembers WHICH source files it ingested:
-    * ≤ this many file names embed in the CommitInfo as a JSON array (the
-    * log line stays O(bytes)); larger batches write a parquet sidecar under
-    * `_copy_into/<id>/` and the commit carries only the id.
-    */
   /** The embedded `copyFiles` JSON array (ONE parser for the memory
     * format — copyInto's reconstruction and clone's memory carry must
     * never drift on how the list is encoded).
@@ -564,6 +335,11 @@ object TableOps {
     (0 until n.size()).map(n.get(_).asText())
   }
 
+  /** Where one COPY INTO commit remembers WHICH source files it ingested:
+    * ≤ this many file names embed in the CommitInfo as a JSON array (the
+    * log line stays O(bytes)); larger batches write a parquet sidecar under
+    * `_copy_into/<id>/` and the commit carries only the id.
+    */
   private[graft] val CopyIntoEmbedLimit = 512
   private[graft] val CopyIntoDirName = "_copy_into"
   private[graft] val CopyIntoTxnApp = "graft.copyInto"
@@ -770,12 +546,29 @@ object TableOps {
       readVersion = Some(snap.version))
   }
 
+  /** Selective transactional overwrite — Delta's `replaceWhere`
+    * (`df.write.option("replaceWhere", pred).mode("overwrite")`): in ONE
+    * commit, delete every existing row matching `predicate` and insert `df`.
+    * Existing rows whose predicate evaluates NULL are kept (3-valued logic,
+    * same as [[delete]]); every INCOMING row must satisfy the predicate —
+    * false or NULL rejects the whole write before anything commits (Delta's
+    * replaceWhere constraint check), otherwise "replace region X" could
+    * silently scatter rows outside X where later replaceWheres on X would
+    * not see them.
+    *
+    * Scale: file pruning, not a table rewrite — stats/bloom skipping keeps
+    * untouched-by-predicate files out of the read set entirely, and only
+    * files actually CONTAINING matching rows are rewritten. A
+    * partition-aligned predicate therefore rewrites exactly the affected
+    * partitions regardless of table size.
+    *
+    * @return the committed version
+    */
   def overwriteWhere(
       table: GraftTable,
       df: DataFrame,
       predicate: String,
       extraActions: Seq[Action] = Nil): Long = {
-    val spark = table.spark
     val t0 = System.currentTimeMillis()
     val (snap, lazyHead) = dmlSnap(table)
     val fields = snap.schema.fieldNames.toSeq
@@ -802,12 +595,6 @@ object TableOps {
         "table schema; replaceWhere does not evolve the schema — drop or " +
         "rename them explicitly")
 
-    val TouchedScan(candidates, touched, nDel, scanTime) =
-      scanTouched(table, snap, TextCond(predicate), lazyHead)
-
-    // persisted only when the change feed reads the rows a second time
-    val touchedRows = persistIf(snap.cdfEnabled, table.dfForFiles(snap, touched)
-      .withColumn("__graft_del", coalesce(expr(predicate), lit(false))))
     // every incoming row must satisfy the predicate — checked INSIDE the
     // staging write projection (codegen'd, no extra pass), like CHECK
     // constraints; persisted so the CDC pass reuses the validated rows
@@ -817,48 +604,12 @@ object TableOps {
         lit(s"replaceWhere: written row does not match the predicate [$predicate]")).isNull)
       .select(fields.map(col): _*)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val nCopied = copiedRows(touched, nDel)(touchedRows.where(!col("__graft_del")).count())
-
-      val outCols = fields.map(col)
-      val keep = touchedRows.where(!col("__graft_del")).select(outCols: _*)
-      val out = keep.unionByName(newRows)
-      val nNew = newRows.count()
-
-      val cdc = if (snap.cdfEnabled)
-        Some(touchedRows.where(col("__graft_del"))
-          .select(outCols :+ lit("delete").as("_change_type"): _*)
-          .unionByName(newRows.select(outCols :+ lit("insert").as("_change_type"): _*)))
-      else None
-
-      val metrics = Map(
-        "numOutputRows" -> (nCopied + nNew).toString,
-        "numDeletedRows" -> nDel.toString,
-        "numCopiedRows" -> nCopied.toString,
-        "numRemovedFiles" -> touched.size.toString,
-        "numRemovedBytes" -> touched.map(_.size).sum.toString,
-        "executionTimeMs" -> (System.currentTimeMillis() - t0).toString,
-        "scanTimeMs" -> scanTime.toString,
-        "rewriteTimeMs" -> (System.currentTimeMillis() - t0 - scanTime).toString
-      )
-      TableWriter.write(spark, table.path, out, TableWriter.Append,
-        operation = "WRITE",
-        operationParameters = Map(
-          "mode" -> "Overwrite", "predicate" -> s"""["$predicate"]"""),
-        extraMetrics = metrics,
-        cdc = cdc,
-        extraActions = extraActions,
-        removeFiles = touched.map(_.path),
-        readFiles = candidates.map(_.path),
-        readVersion = Some(snap.version))
-    } finally { touchedRows.unpersist(); newRows.unpersist() }
+    try new PredicateRewrite(table, snap, lazyHead, t0, BoundExpr.Text(predicate),
+      RowRewrite("WRITE", Map("mode" -> "Overwrite", "predicate" -> s"""["$predicate"]"""),
+        incoming = Some(newRows), extraActions = extraActions)).run()
+    finally newRows.unpersist()
   }
 
-  /** OPTIMIZE (compaction): rewrite the selected files into
-    * ~`targetFileSizeBytes` files. `where` filters by partition predicate.
-    * Commit operation is OPTIMIZE with a no-op CDC footprint (compaction
-    * changes layout, not data — CDF readers skip it).
-    */
   /** Predicate-selected files of `snap` (all of them for None), through
     * the same skipping classifier every read uses — shared by OPTIMIZE
     * and REORG.
@@ -892,6 +643,11 @@ object TableOps {
       readVersion = Some(snap.version))
   }
 
+  /** OPTIMIZE (compaction): rewrite the selected files into
+    * ~`targetFileSizeBytes` files. `where` filters by partition predicate.
+    * Commit operation is OPTIMIZE with a no-op CDC footprint (compaction
+    * changes layout, not data — CDF readers skip it).
+    */
   def compact(
       table: GraftTable,
       where: Option[String] = None,

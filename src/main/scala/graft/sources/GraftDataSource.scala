@@ -1219,9 +1219,8 @@ object GraftSourcePin {
     * non-correlated subplan materializes once (localCheckpoint — cheapest
     * way to freeze a small set), a correlated one keeps its live plan with
     * its graft sources pinned via [[pinToCurrent]]. THE stability
-    * discipline row-level DML shares — the UPDATE-side ExprCond and the
-    * MERGE-side ExprFrag both delegate here, so a future fix to the
-    * pinning rule cannot diverge them.
+    * discipline row-level DML shares — every resolved DML and MERGE
+    * expression ([[graft.operators.BoundExpr.Resolved]]) delegates here.
     */
   def pinSubqueries(
       spark: SparkSession,

@@ -39,7 +39,7 @@ import graft.catalog.GraftV2Table
   * two sides stay unambiguous. UPDATE/DELETE conditions carrying
   * subqueries — non-correlated AND correlated EXISTS/IN — skip the text
   * round-trip and ride the resolved expression (see
-  * [[graft.operators.TableOps]]'s ExprCond: correlated outer references
+  * [[graft.operators.BoundExpr.Resolved]]: correlated outer references
   * rebind onto each evaluation frame, then Spark's own decorrelation
   * plans the semi/anti join). SET assignments and MERGE ON/clause
   * conditions and values accept NON-correlated SCALAR subqueries: SQL
@@ -49,8 +49,8 @@ import graft.catalog.GraftV2Table
   * a literal ([[DmlExprBox]]). UPDATE SET values and MERGE CLAUSE
   * conditions/values further accept PER-ROW subqueries — correlated
   * SCALAR subqueries AND set-valued IN/EXISTS predicates, correlated or
-  * not (plan-level via ExprCond / [[graft.operators.GraftMerge.ExprFrag]]
-  * — beyond Delta, which refuses all of them). The MERGE ON condition,
+  * not (plan-level via [[graft.operators.BoundExpr.Resolved]] — beyond
+  * Delta, which refuses all of them). The MERGE ON condition,
   * which runs INSIDE the join where no decorrelation applies, accepts the
   * per-statement-constant shapes only: non-correlated scalars, and
   * non-correlated IN/EXISTS evaluated once and spliced as a bounded
@@ -141,7 +141,7 @@ class GraftRowLevelRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       // correlated scalars and IN/EXISTS predicates: they evaluate over
       // the merge's joined frame (disposition pass / output projection —
       // both Projects, where Spark plans and decorrelates them), through
-      // GraftMerge.ExprFrag.
+      // BoundExpr.Resolved.
       def r(e: Expression): SqlPart =
         part(e, m.targetTable.output, Seq(TgtAlias),
           m.sourceTable.output, Seq(SrcAlias), "MERGE ON")
@@ -170,24 +170,25 @@ class GraftRowLevelRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
               case _ => false
             })
           }
-      def clause(a: MergeAction, matched: Boolean, bySource: Boolean): MergeClausePart = {
+      def clause(a: MergeAction, matched: Boolean, bySource: Boolean)
+        : MergeClauseSpec[SqlPart] = {
         // per-clause AND conditions run in the same multi-pass joins as the
         // merge condition — the determinism contract covers them too
         a.condition.foreach(requireDeterministic(_, "MERGE clause"))
         a match {
           case UpdateAction(cond, _, fromStar)
               if fromStar && m.withSchemaEvolution && !bySource =>
-            MergeClausePart(matched, cond.map(rClause), "update", None, bySource)
+            MergeClauseSpec(matched, cond.map(rClause), "update", None, bySource)
           case UpdateAction(cond, assigns, _) =>
-            MergeClausePart(matched, cond.map(rClause), "update",
+            MergeClauseSpec(matched, cond.map(rClause), "update",
               Some(assigns.map(as => keyName(as.key, "UPDATE SET") -> rClause(as.value))),
               bySource)
           case DeleteAction(cond) =>
-            MergeClausePart(matched, cond.map(rClause), "delete", None, bySource)
+            MergeClauseSpec(matched, cond.map(rClause), "delete", None, bySource)
           case InsertAction(cond, assigns) if starShaped(assigns) =>
-            MergeClausePart(matched, cond.map(rClause), "insert", None, bySource)
+            MergeClauseSpec(matched, cond.map(rClause), "insert", None, bySource)
           case InsertAction(cond, assigns) =>
-            MergeClausePart(matched, cond.map(rClause), "insert",
+            MergeClauseSpec(matched, cond.map(rClause), "insert",
               Some(assigns.map(as => keyName(as.key, "INSERT") -> rClause(as.value))),
               bySource)
           case other => throw new UnsupportedOperationException(
@@ -212,11 +213,10 @@ class GraftRowLevelRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       what: String,
       // UPDATE SET and MERGE clause conditions/values additionally admit
       // PER-ROW subqueries: correlated SCALAR subqueries AND set-valued
-      // IN/EXISTS predicates, correlated or not (evaluated plan-level —
-      // over the rewrite frame through the ExprCond seam, or over the
-      // merge's joined frame through GraftMerge.ExprFrag; Spark plans
-      // predicate subqueries in those Project/Filter frames and
-      // decorrelates correlated ones to outer/semi/anti joins. Delta
+      // IN/EXISTS predicates, correlated or not (evaluated plan-level as a
+      // BoundExpr.Resolved — over the rewrite frame or the merge's joined
+      // frame; Spark plans predicate subqueries in those Project/Filter
+      // frames and decorrelates correlated ones to outer/semi/anti joins. Delta
       // refuses every one of these). The MERGE ON condition keeps the
       // refusal for anything beyond a non-correlated scalar: it runs
       // inside the join itself, where no decorrelation applies.
@@ -454,16 +454,6 @@ final class DmlExprBox(
     }.isDefined
 }
 
-/** [[MergeClauseSpec]] with each fragment as a [[GraftRowLevelRewrite.SqlPart]]
-  * — resolved to text (evaluating any boxed scalar subqueries) at run time.
-  */
-case class MergeClausePart(
-    matched: Boolean,
-    condition: Option[GraftRowLevelRewrite.SqlPart],
-    action: String,
-    assignments: Option[Seq[(String, GraftRowLevelRewrite.SqlPart)]],
-    bySource: Boolean)
-
 /** Native `MERGE INTO graft_cat.ns.t` converted by [[GraftRowLevelRewrite]]:
   * carries the resolved SOURCE plan directly (no text round-trip of a whole
   * query) plus re-rendered condition/clause fragments (scalar-subquery
@@ -475,7 +465,7 @@ case class GraftRowLevelMergeCommand(
     path: String,
     sourcePlan: LogicalPlan,
     condition: GraftRowLevelRewrite.SqlPart,
-    clauses: Seq[MergeClausePart],
+    clauses: Seq[MergeClauseSpec[GraftRowLevelRewrite.SqlPart]],
     schemaEvolution: Boolean)
   extends LeafRunnableCommand {
 
@@ -488,29 +478,26 @@ case class GraftRowLevelMergeCommand(
     AttributeReference("numTargetRowsInserted", LongType, nullable = false)())
 
   override def run(spark: SparkSession): Seq[Row] = {
-    import graft.operators.GraftMerge
+    import graft.operators.BoundExpr
     val t = GraftSqlCommands.resolveTarget(spark, path)
     val source = org.apache.spark.sql.graft.SparkBridge.ofPlan(spark, sourcePlan)
     def sql(p: GraftRowLevelRewrite.SqlPart): String = p.fold(identity, _.toSql(spark))
     // clause fragments: text stays text (boxed NON-correlated scalars run
     // once and splice in as literals); a fragment with PER-ROW subqueries
     // (correlated scalars, IN/EXISTS predicates) rides the resolved
-    // expression into the merge engine (GraftMerge.ExprFrag binds it onto
+    // expression into the merge engine (BoundExpr.Resolved binds it onto
     // the joined frame at evaluation)
-    def frag(p: GraftRowLevelRewrite.SqlPart): GraftMerge.MergeFrag = p match {
-      case Left(txt) => GraftMerge.TextFrag(txt)
+    def frag(p: GraftRowLevelRewrite.SqlPart): BoundExpr = p match {
+      case Left(txt) => BoundExpr.Text(txt)
       case Right(box) =>
         if (box.needsPlanEval)
-          new GraftMerge.ExprFrag(box.expr,
+          BoundExpr.resolved(box.expr,
             box.tgt, GraftRowLevelRewrite.TgtAlias,
             box.src, GraftRowLevelRewrite.SrcAlias)
-        else GraftMerge.TextFrag(box.toSql(spark))
+        else BoundExpr.Text(box.toSql(spark))
     }
-    val resolved = clauses.map { c =>
-      GraftMergeExec.MergeClauseFrag(c.matched, c.condition.map(frag), c.action,
-        c.assignments.map(_.map { case (k, v) => k -> frag(v) }), c.bySource)
-    }
-    GraftMergeExec.runF(t, GraftRowLevelRewrite.TgtAlias, source,
-      Some(GraftRowLevelRewrite.SrcAlias), sql(condition), resolved, schemaEvolution)
+    GraftMergeExec.run(t, GraftRowLevelRewrite.TgtAlias, source,
+      Some(GraftRowLevelRewrite.SrcAlias), sql(condition), clauses.map(_.map(frag)),
+      schemaEvolution)
   }
 }

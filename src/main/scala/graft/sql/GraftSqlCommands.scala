@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference}
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.types._
 
-import graft.operators.TableOps
+import graft.operators.{BoundExpr, TableOps}
 import graft.tables.{AddFile, GraftTable, RemoveFile}
 
 /** Maintenance statements as runnable commands (Delta's SQL surface shape:
@@ -161,16 +161,21 @@ case class GraftGenerateManifestCommand(path: String)
   }
 }
 
-/** One parsed `WHEN [NOT] MATCHED [BY SOURCE|TARGET] [AND cond] THEN
-  * <action>` clause. `assignments` is None for the `*` (all-columns)
-  * action forms.
+/** One `WHEN [NOT] MATCHED [BY SOURCE|TARGET] [AND cond] THEN <action>`
+  * clause whose condition and assignment values are `A`s: SQL text as
+  * graft's parser reads them, [[GraftRowLevelRewrite.SqlPart]]s from a
+  * native MERGE, [[BoundExpr]]s to execute. `assignments` is None for the
+  * `*` (all-columns) action forms.
   */
-case class MergeClauseSpec(
+case class MergeClauseSpec[+A](
     matched: Boolean,
-    condition: Option[String],
+    condition: Option[A],
     action: String, // "update" | "delete" | "insert"
-    assignments: Option[Seq[(String, String)]],
-    bySource: Boolean = false)
+    assignments: Option[Seq[(String, A)]],
+    bySource: Boolean = false) {
+  def map[B](f: A => B): MergeClauseSpec[B] = MergeClauseSpec(matched, condition.map(f),
+    action, assignments.map(_.map { case (k, v) => k -> f(v) }), bySource)
+}
 
 case class GraftMergeCommand(
     path: String,
@@ -180,7 +185,7 @@ case class GraftMergeCommand(
     sourcePath: Option[String],   // quoted graft-table path form
     sourceAlias: Option[String],
     condition: String,
-    clauses: Seq[MergeClauseSpec])
+    clauses: Seq[MergeClauseSpec[String]])
   extends LeafRunnableCommand {
   override val output: Seq[Attribute] = Seq(
     AttributeReference("version", LongType, nullable = false)(),
@@ -196,7 +201,7 @@ case class GraftMergeCommand(
       case _ => throw new IllegalArgumentException("MERGE USING needs a source")
     }
     GraftMergeExec.run(t, targetAlias.getOrElse("target"), source, sourceAlias,
-      condition, clauses)
+      condition, clauses.map(_.map(BoundExpr.Text)))
   }
 }
 
@@ -209,48 +214,22 @@ case class GraftMergeCommand(
 private[sql] object GraftMergeExec {
   import graft.operators.GraftMerge
 
-  /** [[MergeClauseSpec]] with each fragment as a [[GraftMerge.MergeFrag]] —
-    * the rewrite path hands clause conditions/values carrying per-row
-    * correlated scalar subqueries through as resolved expressions
-    * ([[GraftMerge.ExprFrag]]); everything else stays text.
-    */
-  case class MergeClauseFrag(
-      matched: Boolean,
-      condition: Option[GraftMerge.MergeFrag],
-      action: String,
-      assignments: Option[Seq[(String, GraftMerge.MergeFrag)]],
-      bySource: Boolean = false)
-
   def run(
       t: GraftTable,
       targetAlias: String,
       source: org.apache.spark.sql.DataFrame,
       sourceAlias: Option[String],
       condition: String,
-      clauses: Seq[MergeClauseSpec],
-      schemaEvolution: Boolean = false): Seq[Row] =
-    runF(t, targetAlias, source, sourceAlias, condition,
-      clauses.map(c => MergeClauseFrag(c.matched,
-        c.condition.map(GraftMerge.TextFrag.apply), c.action,
-        c.assignments.map(_.map { case (k, v) => k -> (GraftMerge.TextFrag(v): GraftMerge.MergeFrag) }),
-        c.bySource)),
-      schemaEvolution)
-
-  def runF(
-      t: GraftTable,
-      targetAlias: String,
-      source: org.apache.spark.sql.DataFrame,
-      sourceAlias: Option[String],
-      condition: String,
-      clauses: Seq[MergeClauseFrag],
+      clauses: Seq[MergeClauseSpec[BoundExpr]],
       schemaEvolution: Boolean = false): Seq[Row] = {
     // first-match-wins clause evaluation: an unconditional clause followed
     // by a conditional one of the same match-kind makes the later clause
     // unreachable — reject it (Delta errors on this shape too) instead of
     // silently updating rows the user meant to delete
-    Seq(("MATCHED", (c: MergeClauseFrag) => c.matched),
-        ("NOT MATCHED", (c: MergeClauseFrag) => !c.matched && !c.bySource),
-        ("NOT MATCHED BY SOURCE", (c: MergeClauseFrag) => c.bySource))
+    Seq[(String, MergeClauseSpec[BoundExpr] => Boolean)](
+        ("MATCHED", _.matched),
+        ("NOT MATCHED", c => !c.matched && !c.bySource),
+        ("NOT MATCHED BY SOURCE", _.bySource))
       .foreach { case (label, pick) =>
         val ofKind = clauses.filter(pick)
         ofKind.zipWithIndex.foreach { case (c, i) =>
@@ -587,19 +566,19 @@ case class GraftUpdateSubqueryCommand(
     // each assignment: plain text stays text; a boxed fragment collapses
     // to text (non-correlated scalars evaluated once, spliced as
     // literals) UNLESS it carries per-row subqueries (correlated scalars,
-    // IN/EXISTS predicates) — those ride the ExprCond seam and evaluate
+    // IN/EXISTS predicates) — those stay resolved expressions and evaluate
     // plan-level over the rewrite frame
-    val resolvedSet: Map[String, TableOps.RowCond] =
+    val resolvedSet: Map[String, BoundExpr] =
       set.map { case (k, p) =>
-        k -> p.fold(
-          txt => TableOps.TextCond(txt): TableOps.RowCond,
+        k -> p.fold[BoundExpr](
+          txt => BoundExpr.Text(txt),
           box =>
-            if (box.needsPlanEval) TableOps.ExprCond(box.expr, box.tgt)
-            else TableOps.TextCond(box.toSql(spark)))
+            if (box.needsPlanEval) BoundExpr.resolved(box.expr, box.tgt)
+            else BoundExpr.Text(box.toSql(spark)))
       }.toMap
-    val cond: TableOps.RowCond = whereBox match {
-      case Some(box) => TableOps.ExprCond(box.cond, box.tableOutput)
-      case None => TableOps.TextCond(whereText.getOrElse("true"))
+    val cond: BoundExpr = whereBox match {
+      case Some(box) => BoundExpr.resolved(box.cond, box.tableOutput)
+      case None => BoundExpr.Text(whereText.getOrElse("true"))
     }
     val v = TableOps.updateMixed(t, cond, resolvedSet)
     Seq(Row(v, GraftSqlCommands.commitMetric(t, v, "numUpdatedRows")))

@@ -272,7 +272,7 @@ object GraftSqlParser {
     * and string literals stay put.
     */
   private def parseMergeTail(rest: String):
-      Option[(Option[String], Option[String], Option[String], Option[String], String, Seq[MergeClauseSpec])] = {
+      Option[(Option[String], Option[String], Option[String], Option[String], String, Seq[MergeClauseSpec[String]])] = {
     val oi = topLevelIndexOf(rest, "ON")
     if (oi < 0) return None
     val (srcSpec, afterOn) = (rest.substring(0, oi).trim, rest.substring(oi + 2))
@@ -323,7 +323,7 @@ object GraftSqlParser {
 
     // WHEN clauses: split at each top-level WHEN
     var clausesText = afterOn.substring(wi)
-    val specs = scala.collection.mutable.Buffer[MergeClauseSpec]()
+    val specs = scala.collection.mutable.Buffer[MergeClauseSpec[String]]()
     while (clausesText.nonEmpty) {
       val next = topLevelIndexOf(clausesText.substring(4), "WHEN")
       val (clause, restText) =
@@ -335,7 +335,7 @@ object GraftSqlParser {
     Some((query, table, path, alias, cond, specs.toSeq))
   }
 
-  private def parseMergeClause(clause: String): Option[MergeClauseSpec] = {
+  private def parseMergeClause(clause: String): Option[MergeClauseSpec[String]] = {
     val ti = topLevelIndexOf(clause, "THEN")
     if (ti < 0) return None
     val head = clause.substring(0, ti).trim

@@ -63,6 +63,13 @@ object SparkBridge {
     case _ => df
   }
 
+  /** Drop RDD `id`'s cached or locally checkpointed blocks, as
+    * `RDD.unpersist` does, without its warning that a locally checkpointed
+    * RDD cannot be recomputed afterwards — logged once per freed RDD.
+    */
+  def freeBlocks(spark: org.apache.spark.sql.SparkSession, id: Int): Unit =
+    spark.sparkContext.unpersistRDD(id, blocking = false)
+
   /** `Column` over a custom Catalyst expression (e.g. graft's codegen'd
     * MinHash signature) — the Spark 4 replacement for the removed public
     * `Column(expr)` constructor.

@@ -5,11 +5,11 @@ import org.scalatest.funspec.AnyFunSpec
 import graft.tables.GraftTable
 
 /** PER-ROW correlated scalar subqueries in `UPDATE ... SET` assignments —
-  * beyond Delta (which refuses them): the assignment rides the ExprCond
-  * seam, rebinds its outer references onto the rewrite frame, Spark's own
-  * decorrelation plans the left-outer join + aggregate, and the subquery's
-  * graft sources are snapshot-pinned so the data write and the CDC
-  * post-image see one state.
+  * beyond Delta (which refuses them): the assignment stays a resolved
+  * expression (`BoundExpr.Resolved`), rebinds its outer references onto
+  * the rewrite frame, Spark's own decorrelation plans the left-outer join
+  * + aggregate, and the subquery's graft sources are snapshot-pinned so the
+  * data write and the CDC post-image see one state.
   */
 class CorrelatedAssignSpec extends AnyFunSpec with SparkSessionTestWrapper {
   import spark.implicits._

@@ -568,11 +568,11 @@ class GraftCatalogSpec extends AnyFunSpec with SparkSessionTestWrapper {
         |AS SELECT id, CAST(id AS DOUBLE) AS val FROM range(20)""".stripMargin)
     spark.sql("DROP TABLE IF EXISTS graft_cat.sqdv.pick")
     spark.sql("CREATE TABLE graft_cat.sqdv.pick AS SELECT id * 3 AS id FROM range(4)")
-    // dvUpdate with an IN-subquery condition
+    // deletion-vector UPDATE with an IN-subquery condition
     spark.sql("UPDATE graft_cat.sqdv.t SET val = -5 " +
       "WHERE id IN (SELECT id FROM graft_cat.sqdv.pick)")
     assert(spark.table("graft_cat.sqdv.t").where("val = -5").count() == 4) // 0,3,6,9
-    // dvDelete with a scalar subquery: masks rows via position sidecars
+    // deletion-vector DELETE with a scalar subquery: masks rows via position sidecars
     spark.sql("DELETE FROM graft_cat.sqdv.t " +
       "WHERE id > (SELECT max(id) FROM graft_cat.sqdv.pick) AND id % 2 = 0")
     // deleted: even ids > 9 → 10,12,14,16,18

@@ -307,6 +307,40 @@ class GraftMergeSpec extends AnyFunSpec with SparkSessionTestWrapper {
       assert(t2.toDF.count() == 3)
     }
 
+    it("frees its checkpoint blocks without the lineage-truncated warning") {
+      import org.apache.logging.log4j.LogManager
+      import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+      import org.apache.logging.log4j.core.appender.AbstractAppender
+      import org.apache.logging.log4j.core.config.Property
+      val t = mkTable(tmpTableDir("merge-free-blocks"))
+      val source = Seq((2, "B!", 200), (4, "d", 40)).toDF("id", "name", "score")
+      // events the merge logs on this thread, where its blocks are freed
+      val thread = Thread.currentThread().getName
+      val events = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val appender = new AbstractAppender("merge-free-blocks", null, null, true,
+          Property.EMPTY_ARRAY) {
+        override def append(e: LogEvent): Unit =
+          if (e.getThreadName == thread) events.add(e.getMessage.getFormattedMessage)
+      }
+      appender.start()
+      val logger = LogManager.getLogger("org.apache.spark.rdd").asInstanceOf[CoreLogger]
+      logger.addAppender(appender)
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      try {
+        GraftMerge(t, "old").merge(source, "old.id = new.id", Some("new"))
+          .whenMatchedUpdateAll()
+          .whenNotMatchedInsertAll()
+          .execute()
+      } finally { logger.removeAppender(appender); appender.stop() }
+      import scala.jdk.CollectionConverters._
+      val warned = events.asScala.filter(_.contains("locally checkpointed"))
+      assert(warned.isEmpty, warned.mkString("\n"))
+      val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(left.isEmpty, s"RDDs the merge registered are still persisted: $left")
+      assertSmallDataFrameEquality(t.toDF,
+        Seq((1, "a", 10), (2, "B!", 200), (3, "c", 30), (4, "d", 40)).toDF("id", "name", "score"))
+    }
+
     it("copy write plans no shuffle: copied rows never cross an exchange") {
       // copied rows come from a position-masked rescan of each touched file
       // (broadcast anti-join on file + row position): the data-write plan

@@ -42,7 +42,7 @@ class GraftPathSqlSpec extends AnyFunSpec with SparkSessionTestWrapper {
   }
 
   it("path-DML with subqueries: the inner graft.`/path` relation resolves through the wrapper") {
-    // the DML statement itself is claimed by graft's parser (TextCond),
+    // the DML statement itself is claimed by graft's parser (BoundExpr.Text),
     // but its condition/assignment SUBQUERIES analyze through Spark —
     // before the wrapper, an inner graft path died in ResolveSQLOnFile
     val a = tmpTableDir("pathdml-a"); val b = tmpTableDir("pathdml-b")
