@@ -83,13 +83,12 @@ object Bench {
         .toDF("doc_id", "text")
       graft.pipeline.Dedup.minhashDedupClusters(toy, "doc_id", "text", threshold = 0.5)
         .agg(count(lit(1))).collect()
-      // the simhash pair legs (d3: 64-bit xxhash; d30: 32-bit md5) — the
-      // round-18 hammingPairs restructure (materialized gather + fast
-      // path) changed their generated-code shapes, so the pre-existing
-      // imageNearDupPairs warmup below no longer covers them (codegen
-      // embeds the hash fn + width as literals, making each setting its
-      // own generated class). Same toy corpus, outside every timed region;
-      // min-of-2 A/B: d30 2.69 vs 3.55 s, d3 1.57 vs 1.95 s without it.
+      // the simhash pair legs (d3: 64-bit xxhash; d30: 32-bit md5): the
+      // SimHash kernel projection and the token-hash lambda differ per
+      // setting (codegen embeds the hash fn + width as literals, making
+      // each setting its own generated class), so the imageNearDupPairs
+      // warmup below does not cover them. Same toy corpus, outside every
+      // timed region.
       graft.pipeline.Dedup.simhashPairs(toy, "doc_id", "text",
         maxHamming = 3, bits = 64).agg(count(lit(1))).collect()
       graft.pipeline.Dedup.simhashPairs(toy, "doc_id", "text",
@@ -97,8 +96,8 @@ object Bench {
         .agg(count(lit(1))).collect()
     } catch { case _: Throwable => () }
     // the hamming-pair family (simhash text dedup + perceptual image/audio
-    // dedup) compiles its own generated-code shapes — the two-tier gather,
-    // distinct-hash banding, pair dedup and member-expansion joins — plus
+    // dedup) compiles its own generated-code shapes — the hash gather,
+    // chunk banding, pair dedup and member expansion — plus
     // the ImageIO/PNG decode path; warm them on 64 toy assets for the same
     // reason as the LSH block above
     try {

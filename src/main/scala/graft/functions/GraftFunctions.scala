@@ -17,7 +17,8 @@ import graft.pipeline.{Dedup, TextAnalysis}
   *    ([[graft.pipeline.Dedup.tokenize]]);
   *  - `shingles(text, n int)` — hashed word n-gram shingles
   *    ([[graft.pipeline.Dedup.shingles]]);
-  *  - `simhash(text [, bits int = 64])` — per-document SimHash
+  *  - `simhash(text [, bits int = 64])` — per-document SimHash, the
+  *    codegen'd [[SimHashFold]] kernel over xxhash64 token hashes
   *    ([[graft.pipeline.Dedup.simhashColumn]]);
   *  - `quality_score(text)` — composite quality heuristic
   *    ([[graft.pipeline.TextAnalysis.qualityScore]]);

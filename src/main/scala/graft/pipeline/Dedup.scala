@@ -537,72 +537,60 @@ object Dedup {
   def md5TokenHash32(tok: Column): Column =
     conv(substring(md5(tok), 1, 8), 16, 10).cast("long")
 
-  /** SimHash over word tokens: bit i of the hash is the sign of the
-    * per-document sum of (±1) votes from each token's bit i. Pure aggregation
-    * (explode → groupBy → `bits` conditional sums), no UDFs.
+  /** The `bits`-wide SimHash of a token-array column: the codegen'd
+    * [[graft.functions.SimHashFold]] over `transform(tokens, tokenHash)` —
+    * the one SimHash implementation behind [[simhash]], [[simhashColumn]]
+    * and the SQL `simhash()`.
+    */
+  private def simhashOfTokens(tokensCol: Column, bits: Int,
+      tokenHash: Column => Column): Column =
+    org.apache.spark.sql.graft.SparkBridge.column(
+      graft.functions.SimHashFold(
+        org.apache.spark.sql.graft.SparkBridge.expression(transform(tokensCol, tokenHash)),
+        bits))
+
+  /** [[tokenize]] without the empty token an empty or all-separator text
+    * tokenizes to. */
+  private def words(textCol: Column): Column = array_remove(tokenize(textCol), "")
+
+  /** SimHash over word tokens: bit i of the hash is set when more token
+    * occurrences have bit i of their hash set than clear. A per-row
+    * projection — one [[graft.functions.SimHashFold]] pass over each
+    * document's token hashes, no shuffle. Rows with null text or no tokens
+    * are dropped. `idCol` is carried, not grouped: two rows with one id
+    * hash separately.
     *
     * @param bits      hash width in bits (default 64)
     * @param tokenHash per-token hash column builder; default xxhash64 (fast),
     *                  [[md5TokenHash32]] for cross-engine reproducibility
     */
   def simhash(df: DataFrame, idCol: String, textCol: String,
-      bits: Int = 64, tokenHash: Column => Column = xxhash64(_)): DataFrame = {
-    val tokens = split(trim(regexp_replace(lower(col(textCol)), "[^a-z0-9]+", " ")), " ")
-    // widened before the explode: the token fan-out and the 64-column
-    // partial aggregation run BELOW the groupBy exchange, on the input's
-    // own partitions (no-op at production partition counts)
-    val exploded = Parallelize.widen(df.select(col(idCol), col(textCol)))
-      .select(col(idCol), explode(tokens).as("__tok"))
-      .filter(length(col("__tok")) > 0)
-      .withColumn("__h", tokenHash(col("__tok")))
-    val bitVotes = (0 until bits).map { i =>
-      sum(when(shiftright(col("__h"), i).bitwiseAND(1) === 1, 1).otherwise(-1)).as(s"__b$i")
-    }
-    val voted = exploded.groupBy(col(idCol)).agg(bitVotes.head, bitVotes.tail: _*)
-    val hashExpr = (0 until bits)
-      .map(i => when(col(s"__b$i") > 0, shiftleft(lit(1L), i)).otherwise(lit(0L)))
-      .reduce(_ bitwiseOR _)
-    voted.select(col(idCol), hashExpr.as("simhash"))
-  }
+      bits: Int = 64, tokenHash: Column => Column = xxhash64(_)): DataFrame =
+    // the token list comes out of a one-row generator so that the no-token
+    // filter stays above it: pushed into the projection, the filter would
+    // tokenize every text a second time. The hash is non-null past that
+    // filter; coalesce tells the optimizer so, and a caller's null filter
+    // (hammingPairs') folds away instead of hashing every text again.
+    df.select(col(idCol), explode(array(words(col(textCol)))).as("__toks"))
+      .filter(size(col("__toks")) > 0)
+      .select(col(idCol),
+        coalesce(simhashOfTokens(col("__toks"), bits, tokenHash), lit(0L)).as("simhash"))
 
-  /** Per-row (scalar) SimHash of a text column — the same bit semantics as
-    * the aggregated [[simhash]] (xxhash64 token hashes, ±1 votes per token
-    * OCCURRENCE, bit set when the vote sum is positive), expressed as one
-    * codegen'd higher-order-function pass so it can serve as a SQL function
-    * and compose into scans. A document with no tokens hashes to 0; null
-    * text propagates null. Cost is O(tokens × bits) per row — fine for the
-    * ≤64-bit widths simhash uses.
+  /** Per-row (scalar) SimHash of a text column with xxhash64 token hashes —
+    * the same kernel as [[simhash]], usable as a SQL function and inside
+    * scans. A document with no tokens hashes to 0; null text propagates
+    * null.
     */
-  def simhashColumn(textCol: Column, bits: Int = 64): Column = {
-    require(bits >= 1 && bits <= 64, s"simhash bits must be in [1, 64], got $bits")
-    val hashes = transform(
-      filter(tokenize(textCol), t => length(t) > 0), t => xxhash64(t))
-    val idx = sequence(lit(0), lit(bits - 1))
-    // per-bit vote sums in ONE traversal of the token hashes: the aggregate
-    // state is the array of `bits` running sums (shift amounts are data-
-    // dependent, so the shifts go through call_function — the SQL ShiftLeft/
-    // ShiftRight accept expression positions, unlike the Scala wrappers)
-    val votes = aggregate(
-      hashes,
-      transform(idx, _ => lit(0L)),
-      (acc, h) => zip_with(
-        acc,
-        transform(idx, i =>
-          when(call_function("shiftright", h, i).bitwiseAND(lit(1L)) === 1, lit(1L))
-            .otherwise(lit(-1L))),
-        (a, v) => a + v))
-    aggregate(
-      zip_with(votes, idx, (v, i) =>
-        when(v > 0, call_function("shiftleft", lit(1L), i)).otherwise(lit(0L))),
-      lit(0L),
-      (a, b) => a.bitwiseOR(b))
-  }
+  def simhashColumn(textCol: Column, bits: Int = 64): Column =
+    simhashOfTokens(words(textCol), bits, xxhash64(_))
 
-  /** SimHash near-duplicate pairs with hamming distance ≤ `maxHamming`.
-    * Pigeonhole banding: split the `bits`-wide hash into `maxHamming + 1`
-    * chunks — any pair within the distance agrees on ≥1 chunk, so candidates
-    * come from shared chunk values (100% recall, not probabilistic);
-    * `bit_count(xor)` verifies exactly.
+  /** SimHash near-duplicate pairs with hamming distance ≤ `maxHamming`
+    * ([[simhash]] then [[hammingPairs]]; lazy, one Spark execution per
+    * action). Pigeonhole banding: split the `bits`-wide hash into
+    * `maxHamming + 1` chunks — any pair within the distance agrees on ≥1
+    * chunk, so candidates come from shared chunk values (100% recall, not
+    * probabilistic); `bit_count(xor)` verifies exactly. `idCol` is a key:
+    * two rows with one id hash separately.
     *
     * @param maxBucketSize two-level cap (see [[hammingPairs]]): exact-
     *        duplicate groups with more members than this are dropped whole,
@@ -623,28 +611,33 @@ object Dedup {
 
   /** All id pairs whose LONG hash values differ in at most `maxHamming`
     * bits — the chunk-banding join shared by [[simhashPairs]] and
-    * perceptual-hash image dedup ([[Multimodal.imageNearDupPairs]]). Rows
-    * with a null hash are skipped; `idCol` is treated as a key (verbatim
-    * duplicate rows are deduped; an id under two different hashes is
-    * caller-defined, though self-edges are never emitted). EXACT by
-    * pigeonhole: `maxHamming + 1` chunks mean every qualifying pair shares
-    * at least one whole chunk (100% recall, not probabilistic);
+    * perceptual-hash image/audio dedup ([[Multimodal.imageNearDupPairs]]).
+    * Rows with a null hash are skipped; `idCol` is treated as a key
+    * (verbatim duplicate rows are deduped; an id under two different
+    * hashes is caller-defined, though self-edges are never emitted). EXACT
+    * by pigeonhole: `maxHamming + 1` chunks mean every qualifying pair
+    * shares at least one whole chunk (100% recall, not probabilistic);
     * `bit_count(xor)` verifies exactly.
     *
-    * `maxBucketSize` caps both tiers: exact-duplicate GROUPS over the cap
+    * One lazy plan, three shuffles, nothing run when called:
+    *  1. gather — the (capped) member list of each DISTINCT hash, so a
+    *     duplicate-heavy corpus bands once per hash value, not per copy;
+    *  2. band — each hash becomes its `maxHamming + 1` chunk rows, carrying
+    *     (hash, members) as payload; a group of ≥2 members adds one
+    *     `chunk = -1, cv = hash` row, so same-hash pairs come out of the
+    *     same bucket generator; one capped gather per (chunk, cv);
+    *  3. pairs — one generator emits the hash pairs within `maxHamming`
+    *     plus each -1 bucket's self-pair, deduplicated across shared chunks
+    *     on the hash pair, then the member lists expand into id pairs.
+    * The upstream feeds exactly one exchange, so it runs once by
+    * construction.
+    *
+    * `maxBucketSize` caps both levels: exact-duplicate GROUPS over the cap
     * drop whole (their member gather must fit an aggregation buffer), and
     * chunk buckets holding more than the cap's worth of DISTINCT hash
     * values drop whole; a qualifying pair survives if ANY of its shared
     * chunk buckets survives. Under-cap duplicate groups emit all their
     * hamming-0 member pairs — output-inherent for the all-pairs contract.
-    *
-    * EAGER: the distinct-hash gather is materialized when this method is
-    * called (see [[materialize]] for the fault-tolerance knob) — it feeds
-    * up to four plan branches, and rebasing them on the materialized rows
-    * guarantees the expensive upstream (an image decode, the simhash
-    * aggregation) executes exactly once per call rather than relying on
-    * runtime exchange reuse. Storage is one row per distinct hash — never
-    * more than the exchange output each branch would otherwise re-read.
     */
   def hammingPairs(hashed: DataFrame, idCol: String, hashCol: String,
       maxHamming: Int = 3, bits: Int = 64,
@@ -656,153 +649,62 @@ object Dedup {
     val chunkBits = bits / chunks
     require(chunkBits >= 1, s"bits=$bits too narrow for ${chunks} chunks")
     val mask = (1L << chunkBits) - 1
-    val spark = hashed.sparkSession
-    val shuffleParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    // both gathers are pinned at the session's shuffle parallelism for the
+    // same reason as [[bucketPairs]]: the generated pair mass is invisible
+    // to AQE's bytes-based coalescing
+    val shuffleParts =
+      hashed.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
 
-    // Collapse to DISTINCT hash values before banding: a duplicate-heavy
-    // corpus (re-uploads, boilerplate) otherwise pushes every copy through
-    // every chunk bucket, and candidate generation is quadratic in COPY
-    // count per bucket — measured 4.4M raw candidates for 5k assets in
-    // 8-member duplicate groups, vs ~70k over their 625 distinct hashes.
-    // Banding over distinct values bounds candidate work by hash-space
-    // cardinality regardless of corpus size (the same principle as
-    // [[Multimodal.imageDedup]]'s exact-collapse tier). ONE gather keyed by
-    // the hash serves every downstream branch — MATERIALIZED (see
-    // [[materialize]]), so the expensive upstream (an image decode, the
-    // simhash aggregation) runs exactly once by construction. The previous
-    // formulation left this to AQE's ReuseExchange, which a stage listener
-    // showed NOT deduplicating the 3-4 consumer subtrees here (the simhash
-    // map side re-ran per consumer: 3 × ~4.5 s task time on the sf0.1
-    // probe, the dominant cost of d3/d30); the checkpoint rows are one per
-    // distinct hash (id list payload) — never larger than the exchange
-    // output the consumers would each have re-aggregated.
-    // Groups larger than `maxBucketSize` are dropped whole (the cap's
-    // documented exact-duplicate-mass semantics, now applied per distinct
-    // hash instead of per chunk bucket).
-    // dropDuplicates rides the SAME hash-partitioned exchange (its (h, id)
-    // clustering is satisfied by the hash partitioning), so duplicate
-    // (id, hash) ROWS — e.g. from an upstream join — cannot double-count a
-    // member. An id carrying two DIFFERENT hash values remains
-    // caller-defined: idCol is a key in every operator of this family.
-    val grouped = materialize(hashed.filter(col(hashCol).isNotNull)
+    // 1. gather by hash. dropDuplicates rides the same hash-partitioned
+    // exchange, so duplicate (id, hash) ROWS — e.g. from an upstream join —
+    // cannot double-count a member; groups over the cap drop whole
+    val grouped = hashed.filter(col(hashCol).isNotNull)
       .select(col(idCol).as("__id"), col(hashCol).as("__h"))
       .repartition(shuffleParts, col("__h"))
       .dropDuplicates("__h", "__id")
       .groupBy(col("__h"))
       .agg(collectListCapped(col("__id"), maxBucketSize).as("__ms"))
-      .filter(size(col("__ms")) <= maxBucketSize))
+      .filter(size(col("__ms")) <= maxBucketSize)
 
-    // the materialized gather makes the duplicate-mass probe a cheap block
-    // scan: with NO exact-duplicate groups (the common case for 64-bit
-    // hashes over distinct content) the two member-attach joins and the
-    // same-hash tier are structural no-ops — take the single-tier fast
-    // path that bands (hash, id) directly and emits pairs with no joins
-    val maxGroup = grouped
-      .agg(coalesce(max(size(col("__ms"))), lit(0))).first().getInt(0)
-
-    val chunkStructs = (0 until chunks).map { c =>
+    // 2. band: chunk rows per hash, plus the same-hash row of a group
+    val bandRows = (0 until chunks).map { c =>
       struct(lit(c).as("chunk"),
         shiftright(col("__h"), c * chunkBits).bitwiseAND(lit(mask)).as("cv"))
-    }
-
-    if (maxGroup <= 1) {
-      // FAST PATH — every surviving group has exactly one member, so the
-      // single id rides the banding row as payload: same chunking, same
-      // per-bucket DISTINCT-hash cap, same cross-chunk pair dedup (ids are
-      // functions of the hash pair, so the distinct is unchanged), and the
-      // hamming-0 tier is empty by construction. Output is identical to
-      // the two-tier plan below on this input; the two hash-keyed joins
-      // and the union never enter the plan.
-      val banded = grouped.select(
-        col("__h"), col("__ms")(0).as("__id"),
-        explode(array(chunkStructs: _*)).as("__c"))
-        .select(col("__h"), col("__id"),
-          col("__c.chunk").as("chunk"), col("__c.cv").as("cv"))
-      // pinned at the session's shuffle parallelism for the same reason as
-      // [[bucketPairs]]: the generated pair mass is invisible to AQE's
-      // bytes-based coalescing
-      banded
-        .repartition(shuffleParts, col("chunk"), col("cv"))
-        .groupBy(col("chunk"), col("cv"))
-        .agg(collectListCapped(struct(col("__h"), col("__id")), maxBucketSize)
-          .as("__hs"))
-        .filter(size(col("__hs")).between(2, maxBucketSize))
-        .select(explode(col("__hs")).as("__a"), col("__hs"))
-        .select(col("__a"), explode(col("__hs")).as("__b"))
-        .filter(col("__a.__h") < col("__b.__h"))
-        .withColumn("hamming",
-          bit_count(col("__a.__h").bitwiseXOR(col("__b.__h"))))
-        .filter(col("hamming") <= maxHamming)
-        // dedup across shared chunks — ids ride the distinct for free
-        // (functionally dependent on the hash pair, like hamming)
-        .select(col("__a.__h").as("__hA"), col("__b.__h").as("__hB"),
-          col("__a.__id").as("__ia"), col("__b.__id").as("__ib"),
-          col("hamming"))
-        .distinct()
-        // an id listed under BOTH hashes (degenerate input — idCol is a
-        // key) would pair with itself; never emit self-edges
-        .filter(col("__ia") =!= col("__ib"))
-        .select(least(col("__ia"), col("__ib")).as("idA"),
-          greatest(col("__ia"), col("__ib")).as("idB"), col("hamming"))
-    } else {
-
-    // tier 1 — same-hash pairs (hamming 0): member pairs within each
-    // exact-duplicate group, straight off the gather (output-bound)
-    val same = grouped
-      .filter(size(col("__ms")) >= 2)
-      .select(explode(col("__ms")).as("__a"), col("__ms"))
-      .select(col("__a"), explode(col("__ms")).as("__b"))
-      .filter(col("__a") < col("__b"))
-      .select(col("__a").as("idA"), col("__b").as("idB"),
-        lit(0).as("hamming"))
-
-    // tier 2 — cross-hash pairs over the DISTINCT hash values. The banding
-    // rows carry the 8-byte hash ONLY, so a chunk bucket's gather buffer is
-    // hard-bounded at maxBucketSize hashes — the same O(cap) bound the
-    // id-level banding had. Qualifying hash pairs are deduped across their
-    // shared chunks by a groupBy over (hA, hB) — tiny rows, pre-expansion —
-    // which preserves the cap-regime recall rule of the id-level
-    // formulation: a pair survives if ANY of its shared chunk buckets
-    // survives (an emit-from-first-shared-chunk shortcut would lose pairs
-    // whose first shared bucket was over-cap-dropped while a later one
-    // survived). Member lists then attach by TWO hash-keyed joins against
-    // the materialized `grouped` (only the small pair side shuffles), and
-    // the id-pair output streams out of generators, output-bound.
-    val banded = grouped.select(
-      col("__h"), explode(array(chunkStructs: _*)).as("__c"))
-      .select(col("__h"),
-        col("__c.chunk").as("chunk"), col("__c.cv").as("cv"))
-    // pinned at the session's shuffle parallelism for the same reason as
-    // [[bucketPairs]]: the generated pair mass is invisible to AQE's
-    // bytes-based coalescing
-    val buckets = banded
+    } :+ struct(lit(-1).as("chunk"), col("__h").as("cv"))
+    val buckets = grouped
+      .select(col("__h"), col("__ms"), explode(array(bandRows: _*)).as("__c"))
+      .filter(col("__c.chunk") >= 0 || size(col("__ms")) >= 2)
+      .select(col("__c.chunk").as("chunk"), col("__c.cv").as("cv"),
+        struct(col("__h"), col("__ms")).as("__e"))
       .repartition(shuffleParts, col("chunk"), col("cv"))
       .groupBy(col("chunk"), col("cv"))
-      .agg(collectListCapped(col("__h"), maxBucketSize).as("__hs"))
-      .filter(size(col("__hs")).between(2, maxBucketSize))
-    val hashPairs = buckets
-      .select(explode(col("__hs")).as("__hA"), col("__hs"))
-      .select(col("__hA"), explode(col("__hs")).as("__hB"))
-      .filter(col("__hA") < col("__hB"))
-      .withColumn("hamming", bit_count(col("__hA").bitwiseXOR(col("__hB"))))
-      .filter(col("hamming") <= maxHamming)
-      // dedup across shared chunks (hamming is functionally dependent on
-      // the hash pair, so it rides the distinct for free)
-      .select("__hA", "__hB", "hamming").distinct()
-    val cross = hashPairs
-      .join(grouped.select(col("__h").as("__hA"), col("__ms").as("__ma")),
-        "__hA")
-      .join(grouped.select(col("__h").as("__hB"), col("__ms").as("__mb")),
-        "__hB")
-      .select(explode(col("__ma")).as("__ia"), col("__mb"), col("hamming"))
-      .select(col("__ia"), explode(col("__mb")).as("__ib"), col("hamming"))
-      // an id listed under BOTH hashes (degenerate input — idCol is a key)
-      // would pair with itself; never emit self-edges
-      .filter(col("__ia") =!= col("__ib"))
+      .agg(collectListCapped(col("__e"), maxBucketSize).as("__es"))
+      .filter(size(col("__es")) <= maxBucketSize &&
+        (size(col("__es")) >= 2 || col("chunk") === -1))
+
+    // 3. pairs: the -1 buckets hold one hash and yield its self-pair; the
+    // distinct collapses a hash pair met in several chunk buckets (hamming
+    // and both member lists are functions of the hash pair)
+    buckets
+      .select(col("chunk"), explode(col("__es")).as("__a"), col("__es"))
+      .select(col("chunk"), col("__a"), explode(col("__es")).as("__b"))
+      .withColumn("hamming", bit_count(col("__a.__h").bitwiseXOR(col("__b.__h"))))
+      .filter(col("chunk") === -1 ||
+        (col("__a.__h") < col("__b.__h") && col("hamming") <= maxHamming))
+      .select(col("__a.__h").as("__hA"), col("__b.__h").as("__hB"), col("hamming"),
+        col("__a.__ms").as("__ma"), col("__b.__ms").as("__mb"))
+      .distinct()
+      .select(col("__hA"), col("__hB"), col("hamming"),
+        explode(col("__ma")).as("__ia"), col("__mb"))
+      .select(col("__hA"), col("__hB"), col("hamming"), col("__ia"),
+        explode(col("__mb")).as("__ib"))
+      // members of one hash pair once each way; across two hashes an id
+      // listed under both (degenerate input — idCol is a key) would pair
+      // with itself, and self-edges are never emitted
+      .filter(when(col("__hA") === col("__hB"), col("__ia") < col("__ib"))
+        .otherwise(col("__ia") =!= col("__ib")))
       .select(least(col("__ia"), col("__ib")).as("idA"),
         greatest(col("__ia"), col("__ib")).as("idB"), col("hamming"))
-    same.unionByName(cross)
-    }
   }
 
   /** Exact n-gram Jaccard similarity join via an inverted-index equi-join on

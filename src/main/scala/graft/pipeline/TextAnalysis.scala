@@ -540,6 +540,10 @@ object TextAnalysis {
     import scala.collection.mutable.LongMap
 
     def pack(l: Int, r: Int): Long = (l.toLong << 32) | (r.toLong & 0xffffffffL)
+    // frees a cached (possibly locally checkpointed) generation's blocks —
+    // RDD.unpersist would warn that a checkpointed lineage was truncated
+    def free(rdd: org.apache.spark.rdd.RDD[_]): Unit =
+      org.apache.spark.sql.graft.SparkBridge.freeBlocks(words.sparkSession, rdd.id)
 
     // ---- int-id dictionary, cached once ------------------------------
     var base = words.rdd
@@ -836,14 +840,14 @@ object TextAnalysis {
             .persist(StorageLevel.MEMORY_AND_DISK)
           next.localCheckpoint()
           next.count()
-          base.unpersist(blocking = false)
+          free(base)
           base = next
           pending = Vector.empty
         }
       }
     }
-    initCounts.unpersist(blocking = false)
-    base.unpersist(blocking = false)
+    free(initCounts)
+    free(base)
     merges.toSeq
   }
 

@@ -151,6 +151,22 @@ class BpeMergesSpec extends AnyFunSpec with SparkSessionTestWrapper {
       "banded pair state diverged on deep merge chains")
   }
 
+  it("distributed tier frees its checkpointed generations without the lineage warning") {
+    // enough merges that the distributed loop re-materializes its word
+    // dictionary (every 64 accepted merges) more than once
+    val words = (0 until 3000).map(i => "w" + Integer.toString(i * 7919 % 20011, 26))
+    val df = words.toDF("text").repartition(4)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val (merges, events) = rddLogEvents {
+      TextAnalysis.learnBpeMerges(df, "text", 192, maxDriverVocab = 0).collect()
+    }
+    assert(merges.length == 192)
+    val warned = events.filter(_.contains("locally checkpointed"))
+    assert(warned.isEmpty, warned.mkString("\n"))
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"RDDs the BPE training registered are still persisted: $left")
+  }
+
   it("incremental distributed tier: 4096 merges over a >1M-word vocabulary") {
     // The scale rehearsal for real tokenizer training: the dictionary
     // exceeds maxDriverVocab, so the run goes through the INCREMENTAL

@@ -51,15 +51,15 @@ class GraftSqlFunctionsSpec extends AnyFunSpec with SparkSessionTestWrapper {
   }
 
   it("scalar simhash ≡ aggregated DataFrame simhash per document") {
-    // the scalar form must reproduce the explode→groupBy implementation
-    // bit-for-bit (docs with no tokens are absent from the aggregated form)
+    // the scalar form must reproduce Dedup.simhash bit-for-bit (docs with
+    // no tokens are absent from the DataFrame form)
     val viaDf = Dedup.simhash(docs, "id", "text")
       .withColumnRenamed("simhash", "agg_simhash")
     val bad = docs.select($"id", Dedup.simhashColumn($"text").as("scalar"))
       .join(viaDf, "id")
       .filter(not($"scalar" <=> $"agg_simhash"))
       .count()
-    assert(bad == 0, "scalar simhash diverged from the aggregated implementation")
+    assert(bad == 0, "scalar simhash diverged from the DataFrame implementation")
     // ids 1,2,3,4,7 tokenize non-empty (5 is empty, 6 null) — the join
     // above must actually have compared them all
     assert(viaDf.count() == 5)

@@ -4,11 +4,10 @@ import org.scalatest.funspec.AnyFunSpec
 
 import graft.pipeline.Dedup
 
-/** Equivalence spec for the two-tier (distinct-hash) formulation of
-  * [[Dedup.hammingPairs]]: output must equal the brute-force O(n²) pair set
-  * on corpora with heavy exact-duplicate mass, near-dup chains, and unique
-  * tails — the duplicate-collapse restructure (round 17) must not change a
-  * single emitted row.
+/** [[Dedup.hammingPairs]] against the brute-force O(n²) pair set on corpora
+  * with heavy exact-duplicate mass, near-dup chains and unique tails, its
+  * bucket-cap semantics against a reference implementation, and its
+  * execution shape: one lazy plan whose upstream runs once per action.
   */
 class HammingPairsSpec extends AnyFunSpec with SparkSessionTestWrapper {
   import spark.implicits._
@@ -118,13 +117,12 @@ class HammingPairsSpec extends AnyFunSpec with SparkSessionTestWrapper {
     }
 
     it("executes the expensive upstream exactly once per call (round-18 pin)") {
-      // VERDICT r17 #4: the gather feeds up to four plan branches; before
-      // the materialize, single execution of the upstream (an image decode,
-      // the simhash aggregation) relied on runtime exchange reuse, which a
-      // stage listener showed NOT firing for the d3/d30 shapes. Count
-      // upstream evaluations with an accumulator-instrumented hash column:
-      // one consume of the operator must evaluate it exactly once per row —
-      // in BOTH regimes (fast path and duplicate-heavy two-tier).
+      // the upstream (an image decode, a text hash) feeds exactly one
+      // exchange — the gather by hash — so it must run once per action
+      // without relying on runtime exchange reuse. Count upstream
+      // evaluations with an accumulator-instrumented hash column: one
+      // consume of the operator must evaluate it exactly once per row,
+      // with and without exact-duplicate groups.
       val acc = spark.sparkContext.longAccumulator("upstreamEvals")
       val hashFn = org.apache.spark.sql.functions.udf { (id: Long, dup: Boolean) =>
         acc.add(1L)
@@ -139,6 +137,75 @@ class HammingPairsSpec extends AnyFunSpec with SparkSessionTestWrapper {
         pairs.collect() // one consume of the full operator output
         assert(acc.value == 64L,
           s"upstream hash evaluated ${acc.value} times for 64 rows (dup=$dup)")
+      }
+    }
+
+    it("simhashPairs hashes each token once per action") {
+      // the per-row SimHash feeds the gather directly: neither the no-token
+      // filter nor the null-hash filter may re-run the token hashing
+      val acc = spark.sparkContext.longAccumulator("tokenHashes")
+      val countingHash = org.apache.spark.sql.functions.udf { (t: String) =>
+        acc.add(1L)
+        t.hashCode.toLong
+      }
+      val texts: Seq[(Long, String)] =
+        (0L until 50L).map(id => (id, s"w${id % 7} common words ${id / 5}")) ++
+          Seq((50L, null), (51L, ""), (52L, " ?! "))
+      val docs = texts.toDF("doc_id", "text")
+      acc.reset()
+      Dedup.simhashPairs(docs, "doc_id", "text", tokenHash = countingHash(_)).collect()
+      assert(acc.value == 50L * 4, s"${acc.value} token hashes for 200 tokens")
+    }
+
+    it("is lazy: building runs no job, a collect is one SQL execution, no blocks stay") {
+      import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+      import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+      val docs = (0L until 200L).map { id =>
+        (id, s"doc ${id / 3} shared words here ${if (id % 3 == 2) "extra" else ""}")
+      }.toDF("doc_id", "text")
+      val hashed = (0L until 100L).map(id => (id, (id / 4) * 0x9E3779B97F4A7C15L))
+        .toDF("id", "h")
+      val assets = graft.pipeline.Multimodal.synthesizePatternPngAssets(
+        spark, spark.range(0, 24).toDF("doc_id"), "doc_id")
+      val builders: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+        "simhashPairs" -> (() => Dedup.simhashPairs(docs, "doc_id", "text")),
+        "hammingPairs" -> (() => Dedup.hammingPairs(hashed, "id", "h")),
+        "imageNearDupPairs" -> (() => graft.pipeline.Multimodal.imageNearDupPairs(assets)))
+      // jobs and SQL executions started under this thread's job group
+      val group = s"hamming-lazy-${System.nanoTime()}"
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      val executions = new java.util.concurrent.atomic.AtomicInteger()
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+            jobs.incrementAndGet()
+        override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+          case s: SparkListenerSQLExecutionStart if s.jobGroupId.contains(group) =>
+            executions.incrementAndGet()
+          case _ =>
+        }
+      }
+      val sc = spark.sparkContext
+      sc.addSparkListener(listener)
+      sc.setJobGroup(group, "hammingPairs laziness")
+      try {
+        for ((name, build) <- builders) {
+          val before = sc.getPersistentRDDs.keySet
+          org.apache.spark.ListenerBusDrain(sc)
+          jobs.set(0); executions.set(0)
+          val pairs = build()
+          org.apache.spark.ListenerBusDrain(sc)
+          assert(jobs.get == 0 && executions.get == 0,
+            s"building $name ran ${jobs.get} jobs in ${executions.get} SQL executions")
+          pairs.collect()
+          org.apache.spark.ListenerBusDrain(sc)
+          assert(executions.get == 1, s"$name collect ran ${executions.get} SQL executions")
+          val left = sc.getPersistentRDDs.keySet -- before
+          assert(left.isEmpty, s"$name left RDDs persisted: $left")
+        }
+      } finally {
+        sc.clearJobGroup()
+        sc.removeSparkListener(listener)
       }
     }
   }

@@ -25,6 +25,31 @@ trait SparkSessionTestWrapper {
 
   def tmpTableDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).resolve("table").toString
+
+  /** `body`'s result and the messages logged under `org.apache.spark.rdd`
+    * on this thread while it ran (where an operator frees its blocks).
+    */
+  def rddLogEvents[T](body: => T): (T, Seq[String]) = {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val thread = Thread.currentThread().getName
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender(s"rdd-events-$thread", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getThreadName == thread) events.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val logger = LogManager.getLogger("org.apache.spark.rdd").asInstanceOf[CoreLogger]
+    logger.addAppender(appender)
+    val result =
+      try body
+      finally { logger.removeAppender(appender); appender.stop() }
+    import scala.jdk.CollectionConverters._
+    (result, events.asScala.toSeq)
+  }
 }
 
 object SparkSessionTestWrapper {
