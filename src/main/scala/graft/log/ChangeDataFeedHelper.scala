@@ -6,7 +6,6 @@ import scala.util.control.Breaks.{break, breakable}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 import graft.tables._
 
@@ -14,10 +13,12 @@ import graft.tables._
   * reference's `ChangeDataFeedHelper` (`ChangeDataFeedHelper.scala:19-377`,
   * SURVEY §2.5 C1–C11), over our `_graft_log` + `_change_data` substrate.
   *
-  * A CDF read is *incremental batch*: per version, either the recorded change
-  * files (update/delete pre/post images) or — for plain writes — the added
-  * data files synthesized as `insert` rows, each stamped with
-  * `_change_type, _commit_version, _commit_timestamp`.
+  * A CDF read is *incremental batch*: per version, the recorded change files
+  * (update/delete pre/post images), the added data files as `insert` rows
+  * for plain writes, or delete+insert rows synthesized for whole-file
+  * replaces, each stamped with `_change_type, _commit_version,
+  * _commit_timestamp`. Which commit yields what is [[ChangeFeedPlanner]]'s
+  * rule, shared with the streaming source.
   */
 object ChangeDataFeedHelper {
   def apply(spark: SparkSession, path: String, startingVersion: Long): ChangeDataFeedHelper =
@@ -42,309 +43,19 @@ case class ChangeDataFeedHelper(
   // =====================================================================
   def readCDF: DataFrame = readCDF(startingVersion, endingVersion)
 
-  /** Batched CDF read: the whole version range resolves to at most TWO
-    * parquet scans — one over every recorded change file, one over every
-    * plain-append data file — instead of one DataFrame per version folded
-    * with union (whose plan explodes at thousands of versions).
-    * `_commit_version` / `_commit_timestamp` are attached by a broadcast
-    * join on the file's base name (each file belongs to exactly one commit).
-    *
-    * Full-overwrite commits (REPLACE TABLE [AS SELECT], INSERT OVERWRITE /
-    * SaveMode.Overwrite) write NO change files — their change rows are
-    * SYNTHESIZED here, per commit: every removed file's live rows as
-    * `delete` (read against the pre-commit snapshot; the bytes stay on disk
-    * until vacuum), every added file's rows as `insert`. Delta's overwrite
-    * posture: materializing them at write time would read the whole old
-    * table and double-write the new one — O(old + new) write amplification
-    * a 100 TB replace cannot afford. The tradeoff is vacuum: written change
-    * rows would survive vacuum of the old data files, synthesized ones
-    * cannot — a post-vacuum read fails loudly below instead of answering
-    * wrong.
+  /** Batched CDF read of versions [s, e]: every commit the
+    * [[ChangeFeedPlanner]] classifies, assembled into at most one
+    * change-file scan, one append scan and the synthesized replace groups
+    * — not one DataFrame per version folded with union (whose plan explodes
+    * at thousands of versions). Commits that removed files without change
+    * data (CDF off) yield no rows.
     */
   def readCDF(s: Long, e: Long): DataFrame = {
-    import org.apache.spark.sql.functions.broadcast
-    // (relPath, version, commitTsMillis) for both mechanisms, in version order
-    val cdcEntries = Seq.newBuilder[(String, Long, Long)]
-    val insEntries = Seq.newBuilder[(AddFile, Long, Long)]
-    // synthesized-overwrite commits (REPLACE / INSERT OVERWRITE): collected
-    // per commit here, then grouped by metadata regime into a BOUNDED number
-    // of stamped scans below — a complete-mode streaming sink with CDF on
-    // commits one overwrite per batch, so a range can hold hundreds of them;
-    // one union branch per commit would re-grow exactly the plan explosion
-    // this batched reader exists to avoid
-    val ovwInfos = Seq.newBuilder[OvwCommit]
-    var firstCdcV, firstInsV, firstOvwV: Option[Long] = None
-    val endSchema = log.snapshot(e).schema
-    // rolling pre-commit state, started LAZILY at the first remove-carrying
-    // commit (one full fold) and advanced per version from the actions this
-    // loop already reads — two full folds per overwrite would be quadratic
-    // over a complete-mode sink's hundreds of in-range overwrites
-    var rolling: Option[Snapshot] = None
-    (s to e).foreach { v =>
-      val actions = log.actionsAt(v)
-      var curState: Option[Snapshot] = None
-      val commitTs = actions.collectFirst { case c: CommitInfo => c.timestamp }.getOrElse(0L)
-      val cdcFiles = actions.collect { case c: AddCDCFile => c.path }
-      if (cdcFiles.nonEmpty) {
-        cdcFiles.foreach(p => cdcEntries += ((p, v, commitTs)))
-        if (firstCdcV.isEmpty) firstCdcV = Some(v)
-      } else {
-        val op = actions.collectFirst { case c: CommitInfo => c.operation }.getOrElse("")
-        val adds = actions.collect { case a: AddFile => a }
-        val removes = actions.collect { case r: RemoveFile => r }
-        // a vacuum-horizon REWRITE without preserved CDC holds the whole
-        // live file set in place of the version's original change content
-        // — reading it as changes would re-emit the entire table (the
-        // same guard the stream source applies)
-        val horizonRewrite = actions.collectFirst { case c: CommitInfo => c }
-          .exists(_.operationParameters.contains(GraftLog.HorizonRewriteParam))
-        if (horizonRewrite && op != "OPTIMIZE" && (adds.nonEmpty || removes.nonEmpty))
-          throw new IllegalStateException(
-            s"version $v of $path is a vacuum-horizon rewrite — its original " +
-              "change content was replaced by a snapshot; read the change feed " +
-              "from a version above the vacuum horizon")
-        // plain append/create: added rows are inserts; rewrites without change
-        // files (OPTIMIZE) or no-op commits produce no change rows
-        if (adds.nonEmpty && removes.isEmpty && op != "OPTIMIZE") {
-          adds.foreach(a => insEntries += ((a, v, commitTs)))
-          if (firstInsV.isEmpty) firstInsV = Some(v)
-        } else if (removes.nonEmpty && op != "OPTIMIZE" && op != "REPARTITION") {
-          // remove-ALL commit = full overwrite (REPLACE / INSERT OVERWRITE),
-          // a dynamic partition overwrite removes WHOLE FILES of the
-          // replaced partitions (self-declared via its commit parameter),
-          // and a RESTORE's remove/re-add sets are whole files by
-          // construction (it never rewrites rows — removed files leave
-          // entirely, re-added files return entirely under the restored
-          // metadata, which IS the committed state this reader uses).
-          // Partial rewrites — merge/update/delete — always carry change
-          // files when CDF is on, so reaching here without them means CDF
-          // was off for that commit. Synthesize iff the COMMITTED state has
-          // CDF enabled — exactly when the old write path would have
-          // materialized change rows.
-          val prev = rolling.getOrElse(log.snapshot(v - 1))
-          val cur = prev.advance(v, actions)
-          curState = Some(cur)
-          val removedSet = removes.map(_.path).toSet
-          val fullOverwrite = removedSet == prev.files.map(_.path).toSet
-          val dynOverwrite = actions.collectFirst { case c: CommitInfo => c }
-            .exists(_.operationParameters.get("partitionOverwriteMode")
-              .exists(_.equalsIgnoreCase("dynamic")))
-          val wholeFileRestore = op == "RESTORE"
-          if ((fullOverwrite || dynOverwrite || wholeFileRestore) && cur.cdfEnabled) {
-            ovwInfos += OvwCommit(v, commitTs, prev, cur,
-              prev.files.filter(f => removedSet.contains(f.path)), adds)
-            if (firstOvwV.isEmpty) firstOvwV = Some(v)
-          }
-        }
-      }
-      rolling = curState.orElse(rolling.map(_.advance(v, actions)))
-    }
-    val cdc = cdcEntries.result()
-    val ins = insEntries.result()
-    val ovw = ovwInfos.result()
-    require(cdc.nonEmpty || ins.nonEmpty || ovw.nonEmpty,
-      s"no change data between versions $s and $e of $path")
-
-    def baseName(rel: String): String = rel.substring(rel.lastIndexOf('/') + 1)
-    // input_file_name() returns the file's URI, whose name may be
-    // percent-encoded — the lookup therefore carries BOTH the raw base name
-    // and its URI-encoded form (driver-side, O(files), no per-row UDF), and
-    // the join is a LEFT join with a raise_error guard: an unmatched change
-    // file fails the read loudly instead of silently dropping its rows.
-    def uriEncoded(name: String): String =
-      new java.net.URI(null, null, "/" + name, null).getRawPath.substring(1)
-    def stamp(df: DataFrame, entries: Seq[(String, Long, Long)]): DataFrame = {
-      import spark.implicits._
-      // One partitioned write job reuses the same base name across partition
-      // directories (part-<task>-<jobUUID> in each dir), so base names are
-      // NOT unique within a commit — but all collisions share that commit's
-      // (version, timestamp), so the name→stamp mapping stays functional:
-      // dedupe to one lookup row per name. A name mapped to TWO different
-      // commits (would double-stamp rows) fails fast — it cannot happen with
-      // job-UUID file names.
-      val variants = entries.flatMap { case (rel, v, ts) =>
-        val raw = baseName(rel)
-        Set(raw, uriEncoded(raw)).map(n => (n, v, ts))
-      }.distinct
-      require(variants.map(_._1).distinct.size == variants.size,
-        s"CDF: change-file base names map to multiple commits between versions $s and $e of $path")
-      val lookup = variants.toDF("__graft_cdf_name", "__graft_cdf_v", "__graft_cdf_ts")
-      df.withColumn("__graft_cdf_name",
-          element_at(split(input_file_name(), "/"), -1))
-        .join(broadcast(lookup), Seq("__graft_cdf_name"), "left")
-        .withColumn("_commit_version",
-          when(col("__graft_cdf_v").isNull,
-            raise_error(concat(lit("CDF: change file not matched to a commit: "),
-              input_file_name())))
-            .otherwise(col("__graft_cdf_v")))
-        // the unmatched-file guard must live on BOTH stamped columns: a
-        // consumer projecting only _commit_timestamp would otherwise prune
-        // the guarded _commit_version away and read NULL timestamps silently
-        .withColumn("_commit_timestamp",
-          when(col("__graft_cdf_ts").isNull,
-            raise_error(concat(lit("CDF: change file not matched to a commit: "),
-              input_file_name())))
-            .otherwise((col("__graft_cdf_ts") / 1000L).cast("timestamp")))
-        .drop("__graft_cdf_name", "__graft_cdf_v", "__graft_cdf_ts")
-    }
-
-    // change files carry the full row physically (incl. partition columns);
-    // mergeSchema reconciles schema evolution across versions in one scan.
-    // Column names in the files are PHYSICAL (stable across RENAME COLUMN)
-    // — BOTH frames translate to the RANGE-END snapshot's logical names,
-    // so a rename landing in-range after the last change file still
-    // surfaces one column under one (current) name instead of splitting
-    // the unioned output into a stale-name and a new-name column
-    val cdcFrame = if (cdc.isEmpty) None else {
-      Some(stamp(
-        graft.tables.ColumnMapping.toLogical(
-          spark.read.option("mergeSchema", "true")
-            .parquet(cdc.map { case (p, _, _) => s"$path/$p" }: _*),
-          endSchema),
-        cdc))
-    }
-    // plain appends read with the newest in-range snapshot schema (older
-    // files surface later columns as null — same as the per-version union),
-    // then relabel to the range-end logical names via the stable physical
-    // names (identity when no in-range rename followed the last insert)
-    val insFrame = if (ins.isEmpty) None else {
-      val maxV = ins.map(_._2).max
-      val atMaxSnap = log.snapshot(maxV)
-      // relabel through the CANONICAL mapping helpers (identity for
-      // unmapped schemas): logical@maxV → stable physical → logical@end
-      def relabel(df: DataFrame): DataFrame = graft.tables.ColumnMapping.toLogical(
-        graft.tables.ColumnMapping.toPhysical(df, atMaxSnap.schema), endSchema)
-      // collision unit is the BASE name across COMMITS: one job reuses the
-      // same task file name in every partition dir (same commit — the
-      // stamp lookup dedupes those), but a name spanning two commits would
-      // double-stamp; stamp() cannot represent it
-      val insByName = ins.groupBy(e => baseName(e._1.path)).values
-      val anyInsDv = ins.exists(_._1.dv.exists(_.cardinality > 0))
-      if (!anyInsDv && insByName.forall(_.map(_._2).distinct.size == 1))
-        Some(stamp(
-          relabel(table.dfForFiles(atMaxSnap, ins.map(_._1)))
-            .withColumn("_change_type", lit("insert")),
-          ins.map { case (a, v, ts) => (a.path, v, ts) }))
-      else
-        // two cases cannot share one stamped scan (the delete side's rule):
-        // a path RE-ADDED by an in-range adds-only RESTORE collides with
-        // its original append (one base name, two commits — the rows are
-        // legitimately emitted twice, once per commit), and a DV-carrying
-        // re-add reads through the position anti-join where
-        // input_file_name() is no longer scan-reliable. Both fall back to
-        // one constant-stamped frame per version (bounded: restore corners
-        // are rare; the common plain-append range stays one scan).
-        Some(ins.groupBy(_._2).toSeq.sortBy(_._1).map { case (v, group) =>
-          relabel(table.dfForFiles(atMaxSnap, group.map(_._1)))
-            .withColumn("_change_type", lit("insert"))
-            .withColumn("_commit_version", lit(v))
-            .withColumn("_commit_timestamp",
-              (lit(group.head._3) / 1000L).cast("timestamp"))
-        }.reduce(_.unionByName(_, allowMissingColumns = true)))
-    }
-
-    // Synthesized overwrite change rows — the delete side read from the
-    // REMOVED files (still on disk until vacuum; deletion vectors applied,
-    // pre-commit LOGICAL names — that lineage's final names), the insert
-    // side from the ADDED files (relabeled to the range-end logical names
-    // exactly as the plain-append frame is). Commits are GROUPED by the
-    // metadata regime that governs how their files read, so N overwrites
-    // collapse to O(regimes) scans, each version-stamped by the same
-    // broadcast name-join as recorded change files — not N union branches.
-    val ovwFrame: Option[DataFrame] = if (ovw.isEmpty) None else {
-      val missing = ovw.flatMap(o => o.removed
-        .filterNot(f => graft.tables.Fs.exists(GraftTable.resolveDataPath(path, f.path)))
-        .map(f => (o.v, f.path)))
-      if (missing.nonEmpty)
-        throw new IllegalStateException(
-          s"version ${missing.head._1} of $path replaced the table, and " +
-            s"${missing.size} of the replaced files were since vacuumed " +
-            s"(first: ${missing.head._2}); the delete-side change rows are no " +
-            "longer reconstructible — read the change feed from a version " +
-            "above the vacuum horizon")
-      def delFrame(snapRep: Snapshot, commits: Seq[OvwCommit]): (Long, Int, DataFrame) = {
-        val files = commits.flatMap(_.removed)
-        val entries = commits.flatMap(o => o.removed.map(f => (f.path, o.v, o.ts)))
-        (commits.iterator.map(_.v).min, 0,
-          stamp(table.dfForFiles(snapRep, files)
-            .withColumn("_change_type", lit("delete")), entries))
-      }
-      def insFrame(snapRep: Snapshot, commits: Seq[OvwCommit]): (Long, Int, DataFrame) = {
-        val files = commits.flatMap(_.adds)
-        val entries = commits.flatMap(o => o.adds.map(f => (f.path, o.v, o.ts)))
-        (commits.iterator.map(_.v).min, 1,
-          stamp(graft.tables.ColumnMapping.toLogical(
-              graft.tables.ColumnMapping.toPhysical(
-                table.dfForFiles(snapRep, files), snapRep.schema),
-              endSchema).withColumn("_change_type", lit("insert")), entries))
-      }
-      val delFrames = ovw.groupBy(_.prev.metadata).values.toSeq.map(_.sortBy(_.v))
-        .flatMap { g =>
-          // two cases cannot share one stamped group scan: a BASE name
-          // removed by TWO in-range commits (a restore re-added the path,
-          // or one job's task file name repeats across partition dirs that
-          // different dynamic overwrites replaced) breaks the name→commit
-          // mapping, and deletion-vector carriers read through a position
-          // anti-join where input_file_name() is no longer scan-reliable.
-          // Both fall back to one constant-literal-stamped frame per
-          // commit (bounded: the common complete-sink shape — clean files,
-          // fresh names — stays one scan per regime). Same-name entries
-          // WITHIN one commit are fine: the stamp lookup dedupes them.
-          val byName = g.flatMap(o => o.removed.map(f => (baseName(f.path), o.v)))
-            .groupBy(_._1).values
-          val anyDv = g.exists(_.removed.exists(_.dv.exists(_.cardinality > 0)))
-          if (!anyDv && byName.forall(_.map(_._2).distinct.size == 1))
-            Seq(delFrame(g.head.prev, g))
-          else g.map(o => (o.v, 0,
-            table.dfForFiles(o.prev, o.removed)
-              .withColumn("_change_type", lit("delete"))
-              .withColumn("_commit_version", lit(o.v))
-              .withColumn("_commit_timestamp", (lit(o.ts) / 1000L).cast("timestamp"))))
-        }
-      val insFrames = ovw.filter(_.adds.nonEmpty)
-        .groupBy(_.cur.metadata).values.toSeq.map(_.sortBy(_.v))
-        .flatMap { g =>
-          // same fallback discipline as delFrames, mirrored on the insert
-          // side: a RESTORE's re-added path can repeat across in-range
-          // commits (breaking the name→commit mapping), and a re-added
-          // DV-CARRYING entry reads through the position anti-join where
-          // input_file_name() is not scan-reliable
-          val byName = g.flatMap(o => o.adds.map(f => (baseName(f.path), o.v)))
-            .groupBy(_._1).values
-          val anyDv = g.exists(_.adds.exists(_.dv.exists(_.cardinality > 0)))
-          if (!anyDv && byName.forall(_.map(_._2).distinct.size == 1))
-            Seq(insFrame(g.last.cur, g))
-          else g.map(o => (o.v, 1,
-            graft.tables.ColumnMapping.toLogical(
-              graft.tables.ColumnMapping.toPhysical(
-                table.dfForFiles(o.cur, o.adds), o.cur.schema), endSchema)
-              .withColumn("_change_type", lit("insert"))
-              .withColumn("_commit_version", lit(o.v))
-              .withColumn("_commit_timestamp", (lit(o.ts) / 1000L).cast("timestamp"))))
-        }
-      // deletes lead inserts at equal first-version (matching the write-time
-      // layout a materialized overwrite produced)
-      (delFrames ++ insFrames).sortBy(t => (t._1, t._2)).map(_._3)
-        .reduceOption(_.unionByName(_, allowMissingColumns = true))
-    }
-
-    // column order: the earliest contributing version's mechanism leads, so
-    // batched output matches the old fold-in-version-order layout
-    val ordered = Seq(
-      firstCdcV.flatMap(v => cdcFrame.map((v, _))),
-      firstInsV.flatMap(v => insFrame.map((v, _))),
-      firstOvwV.flatMap(v => ovwFrame.map((v, _)))).flatten.sortBy(_._1)
-    ordered.map(_._2).reduce(_.unionByName(_, allowMissingColumns = true))
+    val planner = new ChangeFeedPlanner(table)
+    val df = planner.frames(planner.classify(s to e).toSeq, e)
+    require(df.isDefined, s"no change data between versions $s and $e of $path")
+    df.get
   }
-
-  /** One qualifying synthesized-change commit (full overwrite,
-    * dynamic-partition overwrite, or RESTORE — all whole-file by
-    * construction): its pre-state, its committed state, the whole files it
-    * removed, and its added files.
-    */
-  private case class OvwCommit(
-      v: Long, ts: Long, prev: Snapshot, cur: Snapshot,
-      removed: Seq[AddFile], adds: Seq[AddFile])
 
   // =====================================================================
   // C9/C10/C11 — recovery reads

@@ -1075,12 +1075,12 @@ object TableOps {
     // CDF: the replace commit writes NO change rows — readers synthesize
     // every prior row as `delete` (from the removed files, on disk until
     // vacuum) and every new row as `insert` (from the added files) at READ
-    // time, Delta's overwrite posture (ChangeDataFeedHelper.readCDF /
-    // GraftStreamSource.changesFor). Materializing them here would read the
-    // whole old table and double-write the new one — O(old + new) write
-    // amplification per replace. Tradeoff: written change rows would
-    // survive vacuum of the old data files; synthesized ones fail loudly
-    // post-vacuum instead of answering wrong.
+    // time, Delta's overwrite posture (graft.log.ChangeFeedPlanner, shared
+    // by the batch change feed and the stream source). Materializing them
+    // here would read the whole old table and double-write the new one —
+    // O(old + new) write amplification per replace. Tradeoff: written
+    // change rows would survive vacuum of the old data files; synthesized
+    // ones fail loudly post-vacuum instead of answering wrong.
     val frame = data.getOrElse(
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         schema.get))

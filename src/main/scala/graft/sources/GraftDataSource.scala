@@ -333,8 +333,9 @@ object GraftDataSource {
     * `endingTimestamp`, session-timezone rules of [[parseTimestampMillis]]):
     * the start resolves to the EARLIEST commit at-or-after it, the end to
     * the LATEST commit at-or-before — Delta's CDF timestamp contract.
-    * Delegates to [[graft.log.ChangeDataFeedHelper]]'s batched two-scan
-    * plan; the relation serves the assembled rows without re-conversion.
+    * Delegates to [[graft.log.ChangeDataFeedHelper]]'s batched plan (one
+    * change-file scan, one append scan, the synthesized replace groups);
+    * the relation serves the assembled rows without re-conversion.
     */
   private def cdfRelation(
       sqlContext: SQLContext, path: String,
@@ -452,8 +453,9 @@ case class GraftRelation(sqlContext: SQLContext, path: String,
 }
 
 /** Relation backing the `readChangeFeed` reader option: schema and rows come
-  * from [[graft.log.ChangeDataFeedHelper]]'s batched CDF assembly (at most
-  * two parquet scans for the whole version range), served as `InternalRow`s
+  * from [[graft.log.ChangeDataFeedHelper]]'s batched CDF assembly (one
+  * change-file scan and one append scan for the whole version range, plus
+  * the synthesized replace groups), served as `InternalRow`s
   * (`needConversion=false`) so the reader-option path costs nothing over
   * calling the helper directly.
   */

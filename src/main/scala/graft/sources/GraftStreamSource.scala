@@ -7,7 +7,8 @@ import org.apache.spark.sql.execution.streaming.runtime.LongOffset
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
 
-import graft.tables.{AddCDCFile, AddFile, GraftLog, GraftTable, RemoveFile}
+import graft.log.ChangeFeedPlanner
+import graft.tables.{AddCDCFile, AddFile, GraftLog, GraftTable}
 
 /** Streaming SOURCE over a GraftTable: `spark.readStream.format("graft")
   * .load(path)` — the change-data analogue of Delta's streaming source.
@@ -24,14 +25,20 @@ import graft.tables.{AddCDCFile, AddFile, GraftLog, GraftTable, RemoveFile}
   *    "current snapshot, then changes" contract;
   *  - with `option("startingVersion", v)` the initial batch replays changes
   *    from version v (inclusive) instead, with no snapshot;
-  *  - each subsequent batch is the per-commit change set: CDC files when the
-  *    commit wrote them, the commit's added files as `insert` rows for plain
-  *    appends, and a LOUD error for a row-removing commit without CDC (the
-  *    stream cannot represent it — enable CDF).
+  *  - each subsequent batch holds the change rows of its commits exactly as
+  *    the batch change feed reads them — one [[graft.log.ChangeFeedPlanner]]
+  *    decides for both: change files when a commit wrote them, the added
+  *    files as `insert` rows for plain appends, synthesized delete+insert
+  *    rows for a CDF-on whole-file replace, nothing for layout-only
+  *    rewrites (OPTIMIZE, REPARTITION) — minus what the stream's options
+  *    skip, and a LOUD error for a row-removing commit without change data
+  *    (the stream cannot represent it — enable CDF).
   *
   * Scale: a batch reads only the files of its own versions (no table scan
-  * after the initial snapshot); the snapshot batch itself plans as the
-  * native pinned-file-index parquet scan.
+  * after the initial snapshot), in at most one change-file scan, one
+  * append scan and one scan per metadata regime of its replaces however
+  * many versions it spans; the snapshot batch itself plans as the native
+  * pinned-file-index parquet scan.
   *
   * Admission control: `option("maxVersionsPerTrigger", n)` (default 100)
   * bounds how many commits one micro-batch may span;
@@ -42,9 +49,9 @@ import graft.tables.{AddCDCFile, AddFile, GraftLog, GraftTable, RemoveFile}
   * admitted so the stream cannot stall on a single large commit.
   * Together they are the analogue of Delta's `maxFilesPerTrigger` /
   * `maxBytesPerTrigger`: a stream recovering from downtime drains its
-  * backlog in bounded micro-batches instead of one unbounded union (both
-  * the analyzer cost and the batch's work are linear in the versions it
-  * spans, so the bound is what keeps a 10k-commit gap processable).
+  * backlog in bounded micro-batches instead of one unbounded batch (the
+  * batch's work and its log reads are linear in the versions it spans, so
+  * the bound is what keeps a 10k-commit gap processable).
   * Exactly-once is unaffected: offsets are still plain versions and a
   * bounded range replays deterministically. The FIRST offer of a source
   * instance is exempt — the snapshot batch is one pinned-version table scan
@@ -213,39 +220,20 @@ class GraftStreamSource(
     var admitted = base
     var bytes = 0L
     var files = 0L
-    val pending = vs.filter(v => v > base && v <= versionCapped)
-    pending.foreach { v =>
-      val withinBudgets =
-        maxBytesPerTrigger.forall(bytes < _) && maxFilesPerTrigger.forall(files < _)
-      if (admitted == base || withinBudgets) {
-        val actions = log.actionsAt(v)
-        // commits changesFor will DROP contribute no rows, so charging
-        // their bytes/counts would drain the backlog one near-empty batch
-        // at a time: OPTIMIZE rewrites always, rewriting commits under
-        // skipChangeCommits, and pure deletes under ignoreDeletes
-        val removedP = actions.collect { case r: RemoveFile => r.path }.toSet
-        val removesAny = removedP.nonEmpty
-        // DV re-adds of removed paths are not new data (same rule changesFor
-        // applies) — a dv-only delete must count as adds-free here too
-        val addsAny = actions.exists {
-          case a: AddFile => !removedP.contains(a.path)
-          case _          => false
-        }
-        val layoutOnly = actions.collectFirst {
-          case c: graft.tables.CommitInfo => c.operation
-        }.contains("OPTIMIZE") ||
-          (skipChangeCommits && removesAny) ||
-          (ignoreDeletes && removesAny && !addsAny)
-        if (!layoutOnly) {
-          bytes += actions.collect {
-            case a: AddFile => a.size
-            case c: AddCDCFile => c.size
-          }.sum
-          files += actions.count(a =>
-            a.isInstanceOf[AddFile] || a.isInstanceOf[AddCDCFile])
-        }
-        admitted = v
+    // charge exactly the commits a batch emits: skipped ones contribute no
+    // rows, and charging them would drain the backlog one near-empty batch
+    // at a time
+    val pending = new ChangeFeedPlanner(table)
+      .classify(vs.filter(v => v > base && v <= versionCapped))
+    while (pending.hasNext && (admitted == base ||
+        (maxBytesPerTrigger.forall(bytes < _) && maxFilesPerTrigger.forall(files < _)))) {
+      val c = pending.next()
+      if (keeps(c)) c.actions.foreach {
+        case a: AddFile    => bytes += a.size; files += 1
+        case f: AddCDCFile => bytes += f.size; files += 1
+        case _             => ()
       }
+      admitted = c.version
     }
     if (admitted == base) versionCapped else admitted
   }
@@ -286,22 +274,22 @@ class GraftStreamSource(
         startingVersion match {
           case Some(sv) =>
             guardCleaned(sv)
-            changesFor(vs.filter(v => v >= sv && v <= endV))
+            changes(vs.filter(v => v >= sv && v <= endV), endV)
           case None     => snapshotAsInserts(endV)
         }
       case Some(s) =>
         val startV = versionOf(s)
         guardCleaned(startV + 1)
-        changesFor(vs.filter(v => v > startV && v <= endV))
+        changes(vs.filter(v => v > startV && v <= endV), endV)
     }
     val aligned = out.select(schema.fieldNames.map(col).toIndexedSeq: _*)
     org.apache.spark.sql.graft.SparkBridge.streamingDataFrame(
       spark, aligned.queryExecution.toRdd, schema)
   }
 
-  /** Align a per-version frame to the stream schema: a version before a
-    * schema-evolving append lacks the later columns — they become typed
-    * nulls, exactly what the batch mergeSchema read of those files yields.
+  /** Align a batch frame to the stream schema: versions older than a
+    * schema-evolving append lack the later columns — they become typed
+    * nulls, as in the batch change feed's read of those files.
     * A column NOT in the stream schema means the table evolved mid-stream
     * (the schema was pinned at source creation) — silently selecting it away
     * would drop data, so fail the query loudly instead; a restart picks up
@@ -351,199 +339,54 @@ class GraftStreamSource(
       .withColumn("_change_type", lit("insert"))
       .withColumn("_commit_version", lit(v)))
 
-  private def changesFor(versions: Seq[Long]): DataFrame = {
-    // rolling snapshot across the batch: a catch-up batch spans hundreds of
-    // versions, and folding the log from scratch per version (worse, twice
-    // for remove-carrying commits) is quadratic — advance the state with
-    // the actions this loop already reads, re-folding only on a version
-    // gap (cleaned-log edge) or at the batch head
-    var rolling: Option[graft.tables.Snapshot] = None
-    // the metadata plane alone (its file list is NOT the table's), rolled
-    // forward while no full state is: what the change-file and append
-    // branches read, so a batch of such commits folds no file list at all
-    var rollingMeta: Option[graft.tables.Snapshot] = None
-    val frames = versions.flatMap { v =>
-      val actions = log.actionsAt(v)
-      // LAZY pre/post states: folding must happen only when a branch needs
-      // one — an eager v-1 fold dies at the vacuum horizon, where v-1 is
-      // legitimately gone (the earliest retained version has no
-      // predecessor, and the horizon-rewrite guard below must fire first)
-      var curMemo: Option[graft.tables.Snapshot] = None
-      def prevSnap: graft.tables.Snapshot =
-        rolling.filter(_.version == v - 1).getOrElse(table.snapshotAt(v - 1))
-      def curSnap: graft.tables.Snapshot = {
-        if (curMemo.isEmpty)
-          curMemo = Some(
-            if (v == 0L) table.snapshotAt(0L)
-            else rolling.filter(_.version == v - 1) match {
-              case Some(p) => p.advance(v, actions)
-              case None    => table.snapshotAt(v)
-            })
-        curMemo.get
-      }
-      // schema, properties and partitioning at v — for branches that read
-      // only files this version's own actions name: the full post-state
-      // when one is at hand, else the segment head (no fold) or the rolled
-      // metadata plane
-      var metaMemo: Option[graft.tables.Snapshot] = None
-      def curMeta: graft.tables.Snapshot =
-        if (curMemo.isDefined || rolling.exists(_.version == v - 1)) curSnap
-        else {
-          if (metaMemo.isEmpty)
-            metaMemo = Some(rollingMeta.filter(_.version == v - 1)
-              .map(_.advance(v, actions).copy(files = Nil)).getOrElse(log.head(v)))
-          metaMemo.get
-        }
-      val cdc = actions.collect { case c: AddCDCFile => c.path }
-      val adds = actions.collect { case a: AddFile => a }
-      val removes = actions.collect { case r: RemoveFile => r }
-      // a deletion-vector update re-adds a REMOVED path with a new position
-      // mask — that add is part of the delete, not new data: classifying on
-      // it as a blind append would re-emit the file's surviving rows
-      val removedPaths = removes.map(_.path).toSet
-      val dataAdds = adds.filterNot(a => removedPaths.contains(a.path))
-      val ci = actions.collectFirst { case c: graft.tables.CommitInfo => c }
-      val op = ci.map(_.operation)
-      // a vacuum-horizon REWRITE carries the table's whole live file set in
-      // place of the version's original change content — emitting it as a
-      // change batch would re-deliver every row as an insert (silent
-      // duplication downstream). The throw is gated on the ORIGINAL change
-      // content being gone: preserved CDC files still replay exactly, and a
-      // layout-only OPTIMIZE horizon still (correctly) skips.
-      if (ci.exists(_.operationParameters.contains(GraftLog.HorizonRewriteParam)) &&
-          cdc.isEmpty && !op.contains("OPTIMIZE"))
-        throw new IllegalStateException(
-          s"version $v of $tablePath is a vacuum-horizon rewrite — its original " +
-            "change content was replaced by a snapshot; the stream cannot emit " +
-            "changes at or below the vacuum horizon. Restart the stream from a " +
-            "fresh checkpoint (snapshot batch), or vacuum with a horizon older " +
-            "than the slowest stream's offset")
-      val frame: Option[DataFrame] =
-      if (op.contains("OPTIMIZE")) {
-        // layout-only rewrite (compaction / Z-order): rows are unchanged, so
-        // the commit contributes nothing to the change stream — the same
-        // skip the batch CDF reader applies (Delta: dataChange=false files)
-        None
-      } else if (skipChangeCommits && removes.nonEmpty) {
-        // option("skipChangeCommits", true): data-CHANGING commits (delete,
-        // update, merge rewrites) are dropped from the stream wholesale —
-        // the caller has declared the stream append-only (Delta's option of
-        // the same name; unlike the legacy ignoreChanges it never re-emits
-        // the rewritten files' copied rows)
-        None
-      } else if (cdc.nonEmpty) {
-        // rows-only mode (dropChangeColumns — the readStream.table shape)
-        // cannot represent a change commit's deletes/updates as plain
-        // rows: stripping the _change_type tag would append every DELETED
-        // row back to the sink (resurrection) and emit update pre/post
-        // images as two indistinguishable rows. Same loud/skip policy as
-        // the no-CDC branch below; insert-only change content stays fine.
-        if (dropChangeColumns && removes.nonEmpty) {
-          if (ignoreDeletes && dataAdds.isEmpty) None
-          else throw new IllegalStateException(
-            s"version $v of $tablePath is a data-changing commit, which a " +
-              "rows-only stream (readStream.table) cannot represent; set " +
-              "skipChangeCommits/ignoreDeletes to skip such commits, or " +
-              "stream the change feed via readStream.format(\"graft\")")
-        } else {
-          val paths = cdc.map(p => graft.tables.Fs.child(tablePath, p))
-          // change files carry PHYSICAL column names (stable across
-          // renames) — read them physically, surface them logically
-          val snapSchema = curMeta.schema
-          val physSchema = graft.tables.ColumnMapping.physicalSchema(snapSchema)
-            .add("_change_type", StringType)
-          Some(widen(graft.tables.ColumnMapping.toLogical(
-            spark.read.schema(physSchema).parquet(paths: _*), snapSchema)
-            .withColumn("_commit_version", lit(v))))
-        }
-      } else if (removes.nonEmpty) {
-        // pure delete with option("ignoreDeletes", true): skip the commit
-        // (Delta's option for retention deletes under an append-only reader);
-        // a DV-only delete qualifies — its re-adds carry no new rows. A
-        // RESTORE never qualifies: its same-path re-add (undoing a DV
-        // delete) CARRIES returning rows, so skipping it would silently
-        // lose the resurrected inserts — it falls through to the synthesis
-        // branch (or the loud refusal) like any other data change.
-        if (ignoreDeletes && dataAdds.isEmpty && !op.contains("RESTORE")) None
-        else {
-          // full overwrite (REPLACE TABLE / INSERT OVERWRITE), a dynamic
-          // PARTITION overwrite (self-declared via its commit parameter;
-          // whole-file removes by construction), or a RESTORE (whole-file
-          // remove/re-add by construction — it never rewrites rows) with
-          // CDF on in the committed state: the commit writes no change
-          // files — the change rows are synthesized from its remove/add
-          // actions, the same rule as the batch reader
-          // (ChangeDataFeedHelper). Other partial rewrites with CDF on
-          // always carry change files, so reaching here means CDF was off
-          // for that commit.
-          val prev = prevSnap // removes exist => v > 0
-          val removedSet = removes.map(_.path).toSet
-          val dynOverwrite = ci.exists(_.operationParameters
-            .get("partitionOverwriteMode").exists(_.equalsIgnoreCase("dynamic")))
-          val fullOverwrite = op.exists(o => o != "OPTIMIZE" && o != "REPARTITION") &&
-            (removedSet == prev.files.map(_.path).toSet || dynOverwrite ||
-              op.contains("RESTORE")) &&
-            curSnap.cdfEnabled
-          if (fullOverwrite && dropChangeColumns)
-            // rows-only streams cannot represent the delete side — same
-            // loud/skip policy as the change-file branch above
-            throw new IllegalStateException(
-              s"version $v of $tablePath is a data-changing commit, which a " +
-                "rows-only stream (readStream.table) cannot represent; set " +
-                "skipChangeCommits/ignoreDeletes to skip such commits, or " +
-                "stream the change feed via readStream.format(\"graft\")")
-          else if (fullOverwrite) {
-            val removedAdds = prev.files.filter(f => removedSet.contains(f.path))
-            val missing = removedAdds.filterNot(f => graft.tables.Fs.exists(
-              graft.tables.GraftTable.resolveDataPath(tablePath, f.path)))
-            if (missing.nonEmpty)
-              throw new IllegalStateException(
-                s"version $v of $tablePath replaced the table, and " +
-                  s"${missing.size} of the replaced files were since vacuumed; " +
-                  "its delete-side change rows are no longer reconstructible — " +
-                  "restart the stream from a fresh checkpoint (snapshot batch)")
-            val deletes = widen(table.dfForFiles(prev, removedAdds)
-              .withColumn("_change_type", lit("delete"))
-              .withColumn("_commit_version", lit(v)))
-            // insert side = ALL adds, not dataAdds: a RESTORE undoing a DV
-            // delete re-ADDS the removed path (target entry, different dv)
-            // — that add carries the returning rows, unlike a DV update's
-            // same-path re-add (which never reaches this branch: DV deletes
-            // carry change files when CDF is on, and are not overwrites)
-            val inserts =
-              if (adds.isEmpty) None
-              else Some(widen(table.dfForFiles(curSnap, adds)
-                .withColumn("_change_type", lit("insert"))
-                .withColumn("_commit_version", lit(v))))
-            Some(inserts.fold(deletes)(i => deletes.unionByName(i)))
-          } else
-            // rewriting commit without change files: the stream cannot
-            // represent the removed rows — failing loudly beats silently
-            // emitting wrong changes (Delta raises the same way for CDF gaps)
-            throw new IllegalStateException(
-              s"version $v of $tablePath removed files but wrote no change data; " +
-                "enable CDF (graft.enableChangeDataFeed) for streamed tables, " +
-                "or set ignoreDeletes/skipChangeCommits to skip such commits")
-        }
-      } else if (dataAdds.nonEmpty) {
-        // blind append: the added files ARE the change set
-        Some(widen(table.dfForFiles(curMeta, dataAdds)
-          .withColumn("_change_type", lit("insert"))
-          .withColumn("_commit_version", lit(v))))
-      } else None // metadata-only commit
-      // carry the rolling state forward: the computed post-state when a
-      // branch folded one, else advance an existing state (O(actions));
-      // stay lazy otherwise
-      rolling = curMemo.orElse(rolling.map(_.advance(v, actions)))
-      rollingMeta =
-        if (rolling.isDefined) None
-        else metaMemo.orElse(rollingMeta.filter(_.version == v - 1)
-          .map(_.advance(v, actions).copy(files = Nil)))
-      frame
-    }
-    // batch-shaped here; getBatch re-tags the final frame as streaming
-    frames.reduceOption(_ unionByName _).getOrElse(
-      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema))
+  /** The batch of `versions` (ending at `end`): the commits this stream
+    * keeps, through the same planner as the batch change feed — at most one
+    * change-file scan and one append scan however many versions it spans —
+    * without `_commit_timestamp`, which the stream schema does not carry.
+    */
+  private def changes(versions: Seq[Long], end: Long): DataFrame = {
+    val planner = new ChangeFeedPlanner(table)
+    planner.frames(planner.classify(versions).filter(keeps).toSeq, end)
+      .map(df => widen(df.drop("_commit_timestamp")))
+      // batch-shaped here; getBatch re-tags the final frame as streaming
+      .getOrElse(spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema))
+  }
+
+  /** This stream's policy over the planner's kinds: whether a batch emits
+    * the commit (and the trigger budgets charge it), or a loud error for a
+    * commit the stream can neither emit nor skip.
+    *  - Appends and insert-only change files always flow; layout-only and
+    *    metadata-only commits never carry rows.
+    *  - `skipChangeCommits` drops every commit that removes files (Delta's
+    *    option: the caller declared the stream append-only; it never
+    *    re-emits a rewrite's copied rows).
+    *  - Change rows — recorded or synthesized — flow with the change
+    *    columns; a rows-only stream (`dropChangeColumns`, the
+    *    readStream.table shape) cannot represent deletes and updates as
+    *    plain rows (a deleted row would be appended back), so it fails.
+    *  - `ignoreDeletes` skips a pure delete the stream cannot represent
+    *    (Delta's option for retention deletes under an append-only reader).
+    *  - Files removed with no change data (CDF off) fail: the stream cannot
+    *    represent the removed rows.
+    */
+  private def keeps(c: ChangeFeedPlanner.Commit): Boolean = c match {
+    case _: ChangeFeedPlanner.LayoutOnly | _: ChangeFeedPlanner.MetadataOnly => false
+    case _ if !c.rewrites => true
+    case _ if skipChangeCommits => false
+    case _: ChangeFeedPlanner.ChangeFiles if !dropChangeColumns => true
+    case _ if ignoreDeletes && c.pureDelete => false
+    case _: ChangeFeedPlanner.Replace if !dropChangeColumns => true
+    case _: ChangeFeedPlanner.Unrecorded =>
+      throw new IllegalStateException(
+        s"version ${c.version} of $tablePath removed files but wrote no change data; " +
+          "enable CDF (graft.enableChangeDataFeed) for streamed tables, " +
+          "or set ignoreDeletes/skipChangeCommits to skip such commits")
+    case _ =>
+      throw new IllegalStateException(
+        s"version ${c.version} of $tablePath is a data-changing commit, which a " +
+          "rows-only stream (readStream.table) cannot represent; set " +
+          "skipChangeCommits/ignoreDeletes to skip such commits, or " +
+          "stream the change feed via readStream.format(\"graft\")")
   }
 
   override def commit(end: Offset): Unit = ()

@@ -189,6 +189,26 @@ class ChangeDataFeedHelperSpec extends AnyFunSpec with SparkSessionTestWrapper {
     assert(cdf.filter("_change_type = 'update_postimage'").count() == 1)
   }
 
+  it("readCDF refuses a vacuum-horizon rewrite that holds no file actions") {
+    // CDF off: v1 deletes the only file; vacuuming to v1 rewrites it as a
+    // snapshot of an EMPTY table. Its original change content (the removed
+    // row) is gone whatever the rewrite holds, so the read must fail, not
+    // silently skip the version
+    val dir = tmpTableDir("cdf-horizon-empty")
+    val t = GraftTable.create(spark, dir, Seq((1, "a")).toDF("id", "name").coalesce(1))
+    TableOps.delete(t, Some("id = 1"))                                // v1
+    GraftTable.forPath(spark, dir).append(Seq((2, "b")).toDF("id", "name")) // v2
+    TableOps.vacuum(GraftTable.forPath(spark, dir), retainVersion = 1L)
+    assert(!t.log.actionsAt(1L).exists {
+      case _: graft.tables.AddFile | _: graft.tables.RemoveFile => true
+      case _ => false
+    }, "fixture must be a horizon rewrite without file actions")
+    val e = intercept[IllegalStateException] {
+      ChangeDataFeedHelper(spark, dir, 1, 2).readCDF
+    }
+    assert(e.getMessage.contains("vacuum-horizon rewrite"), e.getMessage)
+  }
+
   it("dryRun passes on an intact range and the helper returns itself") {
     val t = cdfTable(tmpTableDir("cdf-dry"))
     upsert(t, Seq((1, "A")))

@@ -429,7 +429,72 @@ class GraftStreamSourceSpec extends AnyFunSpec with SparkSessionTestWrapper {
       assert(rows.length == 40, s"expected the full backlog, got ${rows.length}")
       assert(spark.table(sink).agg(org.apache.spark.sql.functions.countDistinct($"_commit_version"))
         .head().getLong(0) == 40)
+      // the batch reads its 40 appends in ONE stamped scan, not one union
+      // branch per version: its RDD lineage holds at most 2 file scans
+      val batchRdd = query.asInstanceOf[
+        org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+        .streamingQuery.lastExecution.executedPlan
+        .collectFirst { case r: org.apache.spark.sql.execution.RDDScanExec => r.rdd }
+        .getOrElse(fail("no source RDD in the last batch's plan"))
+      def lineage(r: org.apache.spark.rdd.RDD[_]): Seq[org.apache.spark.rdd.RDD[_]] =
+        r +: r.dependencies.flatMap(d => lineage(d.rdd))
+      val scans = lineage(batchRdd)
+        .count(_.isInstanceOf[org.apache.spark.sql.execution.datasources.FileScanRDD])
+      assert(scans >= 1 && scans <= 2, s"expected <=2 FileScanRDDs for 40 versions, got $scans")
     } finally query.stop()
+  }
+
+  it("a REPARTITION is layout-only: no error and no rows, in the stream and the batch feed") {
+    // re-partitioning rewrites every file as a whole-file overwrite and
+    // records no change files — like OPTIMIZE it leaves every row as it
+    // was, so a CDF-on stream must neither die ("wrote no change data") nor
+    // emit rows for it
+    val (dir, t) = mkTable("gss_repartition")
+    val sink = "gss_sink_" + System.nanoTime()
+    val query = spark.readStream.format("graft").load(dir)
+      .writeStream.format("memory").queryName(sink).outputMode("append").start()
+    try {
+      query.processAllAvailable()
+      val before = rowsOf(sink)
+      val vRep = TableOps.repartitionTable(t, Seq("name"))              // v1
+      GraftTable.forPath(spark, dir).append(Seq((3, "delta")).toDF("id", "name")) // v2
+      query.processAllAvailable()
+      assert(rowsOf(sink) == before + ((3, "delta", "insert", vRep + 1)),
+        s"got ${rowsOf(sink)}")
+      val batch = graft.log.ChangeDataFeedHelper(spark, dir, vRep, vRep + 1).readCDF
+        .select($"id", $"_change_type", $"_commit_version").as[(Int, String, Long)].collect()
+      assert(batch.toSeq == Seq((3, "insert", vRep + 1)), batch.toSeq.toString)
+    } finally query.stop()
+  }
+
+  it("the trigger budget charges the change files a full-file delete streams under ignoreDeletes") {
+    // with the change columns on, ignoreDeletes does not skip a CDF-on
+    // full-file DELETE — its change files stream — so maxFilesPerTrigger
+    // must charge them: one file per trigger puts v1 and v2 in two batches
+    val dir = tmpTableDir("gss_ign_budget")
+    val t = GraftTable.create(spark, dir, Seq((0, "seed")).toDF("id", "name").coalesce(1),
+      properties = Map(GraftLog.CdfProperty -> "true"))
+    TableOps.delete(t, Some("id = 0"))                                  // v1: whole-file remove
+    assert(!t.log.actionsAt(1L).exists(_.isInstanceOf[graft.tables.AddFile]) &&
+      t.log.actionsAt(1L).exists(_.isInstanceOf[graft.tables.AddCDCFile]),
+      "fixture must be a remove-only delete with change files")
+    GraftTable.forPath(spark, dir).append(Seq((1, "a")).toDF("id", "name")) // v2
+    val batches = java.util.Collections.synchronizedList(
+      new java.util.ArrayList[Seq[(Int, String, Long)]]())
+    val query = spark.readStream.format("graft")
+      .option("startingVersion", 1)
+      .option("ignoreDeletes", "true")
+      .option("maxFilesPerTrigger", 1)
+      .load(dir)
+      .writeStream
+      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+        batches.add(batch.select($"id", $"_change_type", $"_commit_version")
+          .as[(Int, String, Long)].collect().toSeq); ()
+      }.start()
+    try query.processAllAvailable() finally query.stop()
+    import scala.jdk.CollectionConverters._
+    val nonEmpty = batches.asScala.filter(_.nonEmpty).toSeq
+    assert(nonEmpty == Seq(Seq((0, "delete", 1L)), Seq((1, "insert", 2L))), s"got $nonEmpty")
   }
 
   it("bounds catch-up batches to maxVersionsPerTrigger versions each") {
@@ -723,9 +788,9 @@ class GraftStreamSourceSpec extends AnyFunSpec with SparkSessionTestWrapper {
   }
 
   it("agrees with the batch CDF reader over a mixed commit history") {
-    // two INDEPENDENT implementations of change-data semantics — the
-    // streaming source (per-commit micro-batches) and the batch CDF reader
-    // (two-scan plan) — must produce the same (row, _change_type,
+    // the streaming source and the batch CDF reader are two policies over
+    // one change-feed planner; with no skipping option set they keep the
+    // same commits, so they must produce the same (row, _change_type,
     // _commit_version) multiset over the same version range
     val (dir, t) = mkTable("gss_xval")
     t.append(Seq((10, "ten"), (11, "eleven")).toDF("id", "name"))  // v1 insert
