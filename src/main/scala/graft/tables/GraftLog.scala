@@ -15,10 +15,11 @@ import com.fasterxml.jackson.module.scala.DefaultScalaModule
   * [[LogStore]]'s atomic conditional put (POSIX: hard-link creation fails
   * on EEXIST; object stores: `If-None-Match`-style preconditions), so
   * concurrent writers get exactly one winner per version; losers receive
-  * [[CommitConflictException]] — blind appends retry automatically in
-  * TableWriter, removal-bearing commits abort (see TableWriter.write
-  * step 5). The store resolves per-path ([[LogStore.forPath]]) so one JVM
-  * can serve tables on different storage systems.
+  * [[CommitConflictException]], which [[Transaction.run]] answers: it reads
+  * the winning commits once and rebases (blind appends, and removal-bearing
+  * commits file-disjoint from the winners) or aborts. The store resolves
+  * per-path ([[LogStore.forPath]]) so one JVM can serve tables on different
+  * storage systems.
   */
 class GraftLog(val tablePath: String, val store: LogStore) {
   import GraftLog._
@@ -491,7 +492,7 @@ class GraftLog(val tablePath: String, val store: LogStore) {
     *
     * Every [[GraftLog.CheckpointInterval]]th version also materializes a
     * checkpoint sidecar (best-effort: a failed checkpoint never fails the
-    * commit — the next interval retries).
+    * commit — it is reported on stderr and the next interval retries).
     */
   def commit(version: Long, actions: Seq[Action]): Unit = {
     store.createDirectories(logDir)
@@ -504,7 +505,9 @@ class GraftLog(val tablePath: String, val store: LogStore) {
     }
     if (version > 0 && version % CheckpointInterval == 0)
       try writeCheckpoint(version)
-      catch { case scala.util.control.NonFatal(_) => () }
+      catch { case scala.util.control.NonFatal(e) =>
+        Console.err.println(s"graft checkpoint of $tablePath at version $version skipped: ${e.getMessage}")
+      }
   }
 
   /** Spec-visible shim over [[PosixLogStore.publishWithoutLink]] (the
@@ -619,52 +622,12 @@ object GraftLog {
   val ExpiredLogCleanupProperty = "graft.enableExpiredLogCleanup"
   val DefaultLogRetentionHours: Double = 7 * 24.0
 
-  /** Table features this build implements. READER features change what a
-    * scan must do to be correct; WRITER features change what a commit must
-    * maintain. The writer set includes the reader set (a writer rewrites
-    * what it reads).
+  /** Reader features this build implements: they change what a scan must
+    * do to be correct ([[Transaction.SupportedWriterFeatures]] adds the
+    * features that change what a commit must maintain).
     */
   val SupportedReaderFeatures: Set[String] =
     Set("deletionVectors", "columnMapping", "typeWidening", "parquetCheckpoint")
-  val SupportedWriterFeatures: Set[String] =
-    SupportedReaderFeatures ++ Set("identityColumns", "checkConstraints",
-      "generatedColumns", "defaultColumns")
-
-  /** The features a property map's configuration requires, as
-    * (readerFeatures, writerFeatures) — the auto-upgrade rule: a commit
-    * whose properties first enable one of these adds it to the protocol.
-    */
-  def requiredFeatures(props: Map[String, String]): (Set[String], Set[String]) = {
-    val reader = scala.collection.mutable.Set.empty[String]
-    val writer = scala.collection.mutable.Set.empty[String]
-    if (props.get(DeletionVectors.Property).exists(_.equalsIgnoreCase("true"))) {
-      reader += "deletionVectors"; writer += "deletionVectors"
-    }
-    // gate on the VALUE, not mere presence: a property explicitly set to
-    // 'none' (or empty) does not use the feature, and the protocol never
-    // downgrades — presence-branding would mark the table permanently
-    if (props.get(ColumnMapping.ModeProperty)
-          .exists(v => v.nonEmpty && !v.equalsIgnoreCase("none"))) {
-      reader += "columnMapping"; writer += "columnMapping"
-    }
-    if (props.get(TableWriter.TypeWideningProperty).exists(_.equalsIgnoreCase("true"))) {
-      reader += "typeWidening"; writer += "typeWidening"
-    }
-    // same value-gating rule as columnMapping: only the enabling value
-    // brands the protocol (an explicit 'json' is the default format)
-    if (props.get(CheckpointFormatProperty).exists(_.equalsIgnoreCase("parquet"))) {
-      reader += "parquetCheckpoint"; writer += "parquetCheckpoint"
-    }
-    if (props.keysIterator.exists(_.startsWith(GraftTable.IdentityPropertyPrefix)))
-      writer += "identityColumns"
-    if (props.keysIterator.exists(_.startsWith(GraftTable.ConstraintPropertyPrefix)))
-      writer += "checkConstraints"
-    if (props.keysIterator.exists(_.startsWith(GraftTable.GeneratedPropertyPrefix)))
-      writer += "generatedColumns"
-    if (props.keysIterator.exists(_.startsWith(GraftTable.DefaultPropertyPrefix)))
-      writer += "defaultColumns"
-    (reader.toSet, writer.toSet)
-  }
 
   /** CommitInfo operationParameters key marking a vacuum-horizon REWRITE: a
     * version whose log content was replaced by a self-contained snapshot

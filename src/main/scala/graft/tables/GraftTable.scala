@@ -198,7 +198,7 @@ class GraftTable private (val spark: SparkSession, val path: String) {
     }
     require(inListDup.isEmpty,
       s"ADD COLUMNS lists column(s) more than once: ${inListDup.mkString(", ")}")
-    retryMetadataCommit("ADD COLUMNS") { s =>
+    Transaction.alter(log, "ADD COLUMNS") { s =>
       // re-validate per attempt: a concurrent winner may have added one
       val existing = s.schema.fieldNames.map(_.toLowerCase).toSet
       val dup = cols.fieldNames.filter(c => existing.contains(c.toLowerCase))
@@ -209,10 +209,9 @@ class GraftTable private (val spark: SparkSession, val path: String) {
       val assigned = ColumnMapping.assignPhysicalNames(
         s.schema, cols.fields.toSeq, s.metadata.properties)
       val widened = org.apache.spark.sql.types.StructType(s.schema.fields ++ assigned)
-      Seq(
+      (
         graft.tables.Metadata(widened.json, s.metadata.partitionColumns, s.metadata.properties),
-        CommitInfo(System.currentTimeMillis(), "ADD COLUMNS",
-          operationParameters = Map("columns" -> cols.fieldNames.mkString("[", ",", "]"))))
+        Map("columns" -> cols.fieldNames.mkString("[", ",", "]")))
     }
   }
 
@@ -224,7 +223,7 @@ class GraftTable private (val spark: SparkSession, val path: String) {
     */
   def addNestedColumn(parentPath: Seq[String], col: org.apache.spark.sql.types.StructField): Long = {
     require(parentPath.nonEmpty, "ADD COLUMNS nested target needs a parent path")
-    retryMetadataCommit("ADD COLUMNS") { s =>
+    Transaction.alter(log, "ADD COLUMNS") { s =>
       val chain = ColumnMapping.fieldChain(s.schema, parentPath).getOrElse(
         throw new IllegalArgumentException(
           s"struct ${parentPath.mkString(".")} does not exist in $path"))
@@ -249,11 +248,9 @@ class GraftTable private (val spark: SparkSession, val path: String) {
       val widened = ColumnMapping.updateFieldAt(s.schema, parentPath) { f =>
         Some(f.copy(dataType = StructType(st.fields :+ assigned)))
       }
-      Seq(
+      (
         graft.tables.Metadata(widened.json, s.metadata.partitionColumns, s.metadata.properties),
-        CommitInfo(System.currentTimeMillis(), "ADD COLUMNS",
-          operationParameters =
-            Map("columns" -> s"[${(parentPath :+ col.name).mkString(".")}]")))
+        Map("columns" -> s"[${(parentPath :+ col.name).mkString(".")}]"))
     }
   }
 
@@ -274,7 +271,7 @@ class GraftTable private (val spark: SparkSession, val path: String) {
     // positional struct casts, and not one data byte moves
     val parts = existing.split('.').toSeq.map(_.trim).filter(_.nonEmpty)
     require(parts.nonEmpty, "empty column name")
-    retryMetadataCommit("RENAME COLUMN") { s =>
+    Transaction.alter(log, "RENAME COLUMN") { s =>
       val schema = s.schema
       val chain = ColumnMapping.fieldChain(schema, parts).getOrElse(
         throw new IllegalArgumentException(
@@ -301,11 +298,10 @@ class GraftTable private (val spark: SparkSession, val path: String) {
       }
       val newParts = s.metadata.partitionColumns.map(c =>
         if (parts.length == 1 && c.equalsIgnoreCase(existing)) newName else c)
-      Seq(
+      (
         graft.tables.Metadata(widened.json, newParts,
           s.metadata.properties + (ColumnMapping.ModeProperty -> "name")),
-        CommitInfo(System.currentTimeMillis(), "RENAME COLUMN",
-          operationParameters = Map("from" -> existing, "to" -> newName)))
+        Map("from" -> existing, "to" -> newName))
     }
   }
 
@@ -326,7 +322,7 @@ class GraftTable private (val spark: SparkSession, val path: String) {
     // evolution leaf by leaf, so nesting depth does not change the rule)
     val parts = name.split('.').toSeq.map(_.trim).filter(_.nonEmpty)
     require(parts.nonEmpty, "empty column name")
-    retryMetadataCommit("ALTER COLUMN TYPE") { s =>
+    Transaction.alter(log, "ALTER COLUMN TYPE") { s =>
       val chain = ColumnMapping.fieldChain(s.schema, parts).getOrElse(
         throw new IllegalArgumentException(
           s"column $name does not exist in $path" +
@@ -345,12 +341,11 @@ class GraftTable private (val spark: SparkSession, val path: String) {
           "rewrite)")
       val widened = ColumnMapping.updateFieldAt(s.schema, parts)(
         of => Some(of.copy(dataType = newType)))
-      Seq(
+      (
         graft.tables.Metadata(widened.json, s.metadata.partitionColumns,
           s.metadata.properties + (TableWriter.TypeWideningProperty -> "true")),
-        CommitInfo(System.currentTimeMillis(), "ALTER COLUMN TYPE",
-          operationParameters = Map("column" -> name,
-            "from" -> f.dataType.simpleString, "to" -> newType.simpleString)))
+        Map("column" -> name,
+          "from" -> f.dataType.simpleString, "to" -> newType.simpleString))
     }
   }
 
@@ -370,7 +365,7 @@ class GraftTable private (val spark: SparkSession, val path: String) {
     val parts = name.split('.').toSeq.map(_.trim).filter(_.nonEmpty)
     require(parts.nonEmpty, "empty column name")
     val op = if (nullable) "DROP NOT NULL" else "SET NOT NULL"
-    retryMetadataCommit(op) { s =>
+    Transaction.alter(log, op) { s =>
       val chain = ColumnMapping.fieldChain(s.schema, parts).getOrElse(
         throw new IllegalArgumentException(s"column $name does not exist in $path"))
       if (chain.last.nullable == nullable)
@@ -405,11 +400,10 @@ class GraftTable private (val spark: SparkSession, val path: String) {
       }
       val updated = ColumnMapping.updateFieldAt(s.schema, parts)(
         of => Some(of.copy(nullable = nullable)))
-      Seq(
+      (
         graft.tables.Metadata(updated.json, s.metadata.partitionColumns,
           s.metadata.properties),
-        CommitInfo(System.currentTimeMillis(), op,
-          operationParameters = Map("column" -> name)))
+        Map("column" -> name))
     }
   }
 
@@ -445,7 +439,7 @@ class GraftTable private (val spark: SparkSession, val path: String) {
     // no-op escape: when no mark needs to move, commit nothing and report
     // the current version (an empty commit would be log noise per sync)
     case class NoMarkMoved(version: Long) extends Exception
-    try retryMetadataCommit("SYNC IDENTITY") { s =>
+    try Transaction.alter(log, "SYNC IDENTITY") { s =>
       val defs = GraftTable.identityColumnsOf(s.metadata.properties)
       val aggs = targets.map { c =>
         val (_, step) = defs(c)
@@ -471,12 +465,11 @@ class GraftTable private (val spark: SparkSession, val path: String) {
         }
       }
       if (advanced.isEmpty) throw NoMarkMoved(s.version)
-      Seq(
+      (
         graft.tables.Metadata(s.metadata.schemaJson,
           s.metadata.partitionColumns,
           s.metadata.properties ++ advanced),
-        CommitInfo(System.currentTimeMillis(), "SYNC IDENTITY",
-          operationParameters = Map("columns" -> targets.mkString(","))))
+        Map("columns" -> targets.mkString(",")))
     }
     catch { case NoMarkMoved(v) => v }
   }
@@ -489,7 +482,7 @@ class GraftTable private (val spark: SparkSession, val path: String) {
     */
   def dropColumns(names: Seq[String]): Long = {
     require(names.nonEmpty, "DROP COLUMN needs at least one column")
-    retryMetadataCommit("DROP COLUMNS") { s =>
+    Transaction.alter(log, "DROP COLUMNS") { s =>
       val schema = s.schema
       // dotted = NESTED struct field; its retired key is the dotted
       // PHYSICAL path, so a later re-add of the same logical name inside
@@ -529,80 +522,29 @@ class GraftTable private (val spark: SparkSession, val path: String) {
       }
       require(current.fields.nonEmpty, s"cannot drop every column of $path")
       val retired = ColumnMapping.droppedPhysicals(s.metadata.properties) ++ retiring
-      Seq(
+      (
         graft.tables.Metadata(current.json, s.metadata.partitionColumns,
           s.metadata.properties +
             (ColumnMapping.ModeProperty -> "name") +
             (ColumnMapping.DroppedProperty -> retired.toSeq.sorted.mkString(","))),
-        CommitInfo(System.currentTimeMillis(), "DROP COLUMNS",
-          operationParameters = Map("columns" -> names.mkString("[", ",", "]"))))
+        Map("columns" -> names.mkString("[", ",", "]")))
     }
   }
 
   private def updateProperties(
       merge: Map[String, String], remove: Set[String], operation: String): Long =
-    retryMetadataCommit(operation) { s =>
+    Transaction.alter(log, operation) { s =>
       // setting the stats-columns knob validates NOW, not at the next
       // write — a typo'd column would otherwise silently disable stats for
       // every write until someone notices the skipping stopped
       if (merge.contains(ParquetStats.StatsColumnsProperty)) {
         ParquetStats.statsColumnsOf(merge, s.schema); ()
       }
-      Seq(
+      (
         graft.tables.Metadata(s.metadata.schemaJson, s.metadata.partitionColumns,
           (s.metadata.properties -- remove) ++ merge),
-        CommitInfo(System.currentTimeMillis(), operation,
-          operationParameters = Map("properties" -> (merge ++ remove.map(_ -> "<removed>")).toString)))
+        Map("properties" -> (merge ++ remove.map(_ -> "<removed>")).toString))
     }
-
-  /** Retry discipline shared by every metadata-only commit (property
-    * updates, constraints, ADD COLUMNS): re-derive (and thereby
-    * RE-VALIDATE) the action set from a fresh snapshot on each lost
-    * version race — a blind retry could commit over a concurrent change
-    * the validation never saw — bounded at 20 attempts so a writer storm
-    * surfaces ConcurrentModificationException instead of spinning forever.
-    */
-  private def retryMetadataCommit(operation: String)(
-      mkActions: Snapshot => Seq[Action]): Long = {
-    val maxAttempts = 20
-    var attempt = 0
-    var committed = -1L
-    while (committed < 0) {
-      attempt += 1
-      val s = snapshot
-      val v = s.version + 1
-      // writer gate + protocol auto-upgrade apply to metadata-only DDL too:
-      // DDL can ENABLE a feature (rename sets column mapping, SET
-      // TBLPROPERTIES can turn on DVs), and a build lacking a declared
-      // writer feature must not alter the table either
-      val unknown = s.protocol.writerFeatures.filterNot(GraftLog.SupportedWriterFeatures)
-      if (unknown.nonEmpty)
-        throw new IllegalStateException(
-          s"$path requires writer feature(s) ${unknown.mkString(", ")} this " +
-            "build does not implement; upgrade the library to alter this table")
-      val base = mkActions(s)
-      val protoUpgrade: Seq[Action] = base.collectFirst { case m: graft.tables.Metadata => m }
-        .toSeq.flatMap { m =>
-          val (rr, ww) = GraftLog.requiredFeatures(m.properties)
-          val cur = s.protocol
-          if (rr.subsetOf(cur.readerFeatures.toSet) && ww.subsetOf(cur.writerFeatures.toSet)) Nil
-          else Seq(Protocol(cur.minReaderVersion, cur.minWriterVersion,
-            (cur.readerFeatures.toSet ++ rr).toSeq.sorted,
-            (cur.writerFeatures.toSet ++ ww).toSeq.sorted))
-        }
-      try {
-        log.commit(v, base ++ protoUpgrade)
-        committed = v
-      } catch {
-        case e: CommitConflictException =>
-          if (attempt >= maxAttempts)
-            throw new java.util.ConcurrentModificationException(
-              s"$operation on $path lost ${maxAttempts} version races in a row " +
-                s"(last at version ${e.version}); re-run the operation")
-      }
-    }
-    committed
-  }
 
   /** ADD CONSTRAINT (Delta's `ALTER TABLE ... ADD CONSTRAINT name CHECK
     * (predicate)`): stores the predicate as table property
@@ -620,7 +562,7 @@ class GraftTable private (val spark: SparkSession, val path: String) {
     // means rows may have changed since the scan, so each retry RE-VALIDATES
     // against the fresh snapshot before reapplying (a blind property retry
     // could commit the constraint over a concurrently appended violator)
-    retryMetadataCommit("ADD CONSTRAINT") { s =>
+    Transaction.alter(log, "ADD CONSTRAINT") { s =>
       if (GraftTable.constraintsOf(s.metadata.properties).contains(name))
         throw new IllegalArgumentException(
           s"CHECK constraint $name already exists on $path; drop it first " +
@@ -630,12 +572,11 @@ class GraftTable private (val spark: SparkSession, val path: String) {
       if (violations > 0)
         throw new IllegalArgumentException(
           s"cannot add CHECK constraint $name ($predicate): existing rows of $path violate it")
-      Seq(
+      (
         graft.tables.Metadata(s.metadata.schemaJson, s.metadata.partitionColumns,
           s.metadata.properties +
             (GraftTable.ConstraintPropertyPrefix + name -> predicate)),
-        CommitInfo(System.currentTimeMillis(), "ADD CONSTRAINT",
-          operationParameters = Map("name" -> name, "expr" -> predicate)))
+        Map("name" -> name, "expr" -> predicate))
     }
   }
 
@@ -725,7 +666,7 @@ object GraftTable {
     val copyMemory = cloneCopyIntoMemory(spark, src.log, srcRoot, snap.version, destPath)
     val log = new GraftLog(destPath)
     Fs.mkdirs(destPath)
-    log.commit(0L, Seq[Action](snap.metadata, snap.protocol) ++ external :+
+    Transaction.create(log, snap.metadata, external,
       CommitInfo(System.currentTimeMillis(), "CLONE",
         operationParameters = Map(
           "source" -> srcRoot, "sourceVersion" -> snap.version.toString,
@@ -734,7 +675,8 @@ object GraftTable {
           "numFiles" -> external.size.toString,
           "numOutputRows" -> external.flatMap(a => GraftLog.parseStats(a.stats))
             .map(_.numRecords).sum.toString,
-          "numOutputBytes" -> external.map(_.size).sum.toString)))
+          "numOutputBytes" -> external.map(_.size).sum.toString)),
+      protocol = Some(snap.protocol))
     new GraftTable(spark, destPath)
   }
 
@@ -853,7 +795,7 @@ object GraftTable {
     val copyMemory = cloneCopyIntoMemory(spark, src.log, srcRoot, snap.version, destRoot)
     val log = new GraftLog(destPath)
     Fs.mkdirs(destPath)
-    log.commit(0L, Seq[Action](snap.metadata, snap.protocol) ++ cloned :+
+    Transaction.create(log, snap.metadata, cloned,
       CommitInfo(System.currentTimeMillis(), "CLONE",
         operationParameters = Map(
           "source" -> srcRoot, "sourceVersion" -> snap.version.toString,
@@ -863,7 +805,8 @@ object GraftTable {
           "numCopiedFiles" -> plan.size.toString,
           "numOutputRows" -> cloned.flatMap(a => GraftLog.parseStats(a.stats))
             .map(_.numRecords).sum.toString,
-          "numOutputBytes" -> cloned.map(_.size).sum.toString)))
+          "numOutputBytes" -> cloned.map(_.size).sum.toString)),
+      protocol = Some(snap.protocol))
     new GraftTable(spark, destPath)
   }
 
@@ -1152,13 +1095,8 @@ object GraftTable {
     val log = new GraftLog(path)
     require(!log.tableExists, s"$path already exists")
     Fs.mkdirs(path)
-    val props = sessionDefaultProperties(spark) ++ properties
-    val (rr, ww) = GraftLog.requiredFeatures(props)
-    val proto: Seq[Action] =
-      if (rr.isEmpty && ww.isEmpty) Nil
-      else Seq(Protocol(1, 1, rr.toSeq.sorted, ww.toSeq.sorted))
-    log.commit(0L, Seq[Action](
-      graft.tables.Metadata(schema.json, partitionColumns, props)) ++ proto :+
+    Transaction.create(log, graft.tables.Metadata(schema.json, partitionColumns,
+      sessionDefaultProperties(spark) ++ properties), Nil,
       CommitInfo(System.currentTimeMillis(), "CREATE TABLE"))
     new GraftTable(spark, path)
   }
@@ -1234,7 +1172,9 @@ object GraftTable {
     })
     val partCols = inferred.fieldNames.filter(partKeySets.head.contains).toSeq
     val conf = spark.sessionState.newHadoopConf()
-    val statsSel = ParquetStats.statsColumnsOf(properties, schema)
+    // a new table: session defaults apply as in create/createEmpty
+    val props = sessionDefaultProperties(spark) ++ properties
+    val statsSel = ParquetStats.statsColumnsOf(props, schema)
     val adds = TableWriter.harvestParallel(files.zip(rels).zip(partValues)) {
       case ((abs, rel), pv) =>
         AddFile(
@@ -1248,13 +1188,8 @@ object GraftTable {
             .copy(tightBounds = false)))
     }
     val numRows = adds.flatMap(a => GraftLog.parseStats(a.stats)).map(_.numRecords).sum
-    val (convRr, convWw) = GraftLog.requiredFeatures(properties)
-    val convProto: Seq[Action] =
-      if (convRr.isEmpty && convWw.isEmpty) Nil
-      else Seq(Protocol(1, 1, convRr.toSeq.sorted, convWw.toSeq.sorted))
-    log.commit(0L,
-      Seq[Action](graft.tables.Metadata(schema.json, partCols, properties)) ++
-        convProto ++ adds :+ CommitInfo(
+    Transaction.create(log, graft.tables.Metadata(schema.json, partCols, props), adds,
+      CommitInfo(
         timestamp = System.currentTimeMillis(),
         operation = "CONVERT",
         operationParameters = Map(

@@ -154,15 +154,7 @@ object TableWriter {
     // writer gate (snapshot() above already gated READER features): a
     // writer missing a declared writer feature could corrupt invariants it
     // does not know exist — fail before anything is staged
-    prevSnapshot.foreach { sn =>
-      val unknown = sn.protocol.writerFeatures.filterNot(GraftLog.SupportedWriterFeatures)
-      if (unknown.nonEmpty)
-        throw new IllegalStateException(
-          s"$tablePath requires writer feature(s) ${unknown.mkString(", ")} this " +
-            "build does not implement (supported: " +
-            s"${GraftLog.SupportedWriterFeatures.toSeq.sorted.mkString(", ")}); " +
-            "upgrade the library to write this table")
-    }
+    prevSnapshot.foreach(Transaction.gate(_, tablePath))
 
     val partCols =
       if (exists && partitionColumns.isEmpty && !explicitPartitioning)
@@ -223,7 +215,7 @@ object TableWriter {
     // GENERATED BY DEFAULT AS IDENTITY): a frame LACKING the column gets
     // dense values continuing from the table's high-water mark; the new
     // mark commits in the SAME metadata action, and a concurrent writer
-    // advancing the same mark aborts the commit (identityRace below) so two
+    // advancing the same mark aborts the commit (Transaction.verdict) so two
     // writers can never hand out overlapping ranges. Assignment runs the
     // input one extra time (per-partition counts), so feed a deterministic
     // frame — the post-write stats verification fails the commit if the
@@ -475,21 +467,20 @@ object TableWriter {
         case _                    => Nil
       }
 
-      // 5. assemble + commit, with optimistic-concurrency retry.
-      // A blind append (no removed files, no read footprint, no overwrite)
-      // commutes with any concurrent commit: on conflict, re-read the
-      // snapshot, re-merge the schema and retry at the next version. Any
-      // other commit gets the SEMANTIC check (Delta's WriteSerializable
-      // rule, inherited by the reference via DeltaHelpers.scala:112
-      // withNewTransaction): it rebases and retries only when every winning
-      // commit is file-disjoint from BOTH this commit's removes AND its
-      // read footprint (`readFiles` — e.g. a merge's candidate files, a
-      // superset of the files it rewrites), and no winner changed table
-      // metadata. A winner that rewrote a candidate-but-untouched file may
-      // have changed which rows match, so retrying would re-commit stale
-      // match decisions — Delta raises ConcurrentDeleteReadException for
-      // exactly this remove-vs-read conflict. Two writers deleting
-      // different partitions still both succeed.
+      // 5. assemble + commit through the one optimistic step
+      // (Transaction.run): each attempt rebuilds its actions from a fresh
+      // snapshot, and a lost race asks Transaction.verdict — over the
+      // winners, read once — whether this commit may rebase past them. A
+      // blind append (no removed files, no read footprint, no overwrite)
+      // commutes with any winner that leaves the CHECK constraints and the
+      // identity marks its staged rows were written under alone. Any other
+      // commit gets Delta's WriteSerializable rule (inherited by the
+      // reference via DeltaHelpers.scala:112 withNewTransaction): it rebases
+      // only when every winner is file-disjoint from BOTH its removes AND
+      // its read footprint (`readFiles` — e.g. a merge's candidate files,
+      // a superset of the files it rewrites) and changed no table metadata.
+      // Two writers deleting different partitions both succeed. With
+      // `readVersion` the winners since that version are checked too.
       // operation-specific file-count keys are computed here (the caller
       // can't know them before the write); the Delta metric vocabulary is
       // what the metric helpers parse (graft.log.OperationMetric)
@@ -508,82 +499,33 @@ object TableWriter {
         "numOutputRows" -> numOutputRows.toString,
         "numOutputBytes" -> adds.map(_.size).sum.toString
       ) ++ extraMetrics ++ opSpecific
-      val commutable = mode == Append && removeFiles.isEmpty && readFiles.isEmpty
-      // A transaction that DECIDED its writes from an earlier snapshot
-      // (`readVersion`) must validate every commit that landed since — not
-      // just commits that collide on a version number. Without this, a
-      // winner landing between the caller's snapshot read and this point is
-      // invisible: the commit lands on top at latest+1 with no conflict
-      // check at all (Delta validates from txn.readVersion for the same
-      // reason). The same footprint rule applies: a winner removing any
-      // file we removed OR read invalidates our decisions.
-      val ourTxnApps = extraActions.collect { case t: SetTransaction => t.appId }.toSet
-      readVersion.foreach { rv =>
-        val footprint = removeFiles.toSet ++ readFiles
-        val conflicted = !disjointFromWinners(log, rv + 1, footprint,
-          metadataOverride.getOrElse(Metadata(newSchema.json, partCols, newProps)), ourTxnApps,
-          removeFiles.toSet)
-        if (conflicted)
-          throw new java.util.ConcurrentModificationException(
-            s"commit of $operation to $tablePath conflicts with a concurrent writer " +
-              s"that committed after version $rv (the winner removed a file this " +
-              "operation read or rewrote, changed table metadata, or advanced an " +
-              "idempotence watermark this operation carries); re-run the operation")
-      }
-      val maxAttempts = 20
-      var attemptSnap = prevSnapshot
-      var attempt = 0
-      var committed = -1L
-      while (committed < 0) {
-        attempt += 1
-        // re-check the writer gate per attempt: a conflicting winner may
-        // have upgraded the protocol past this build between retries
-        attemptSnap.foreach { sn =>
-          val unknown = sn.protocol.writerFeatures.filterNot(GraftLog.SupportedWriterFeatures)
-          if (unknown.nonEmpty)
-            throw new IllegalStateException(
-              s"$tablePath now requires writer feature(s) ${unknown.mkString(", ")} this " +
-                "build does not implement (a concurrent writer upgraded the protocol); " +
-                "upgrade the library to write this table")
+      val staged = Option.when(!skipDataWrite)(
+        Transaction.Staged(constraints, Option.when(idProps.nonEmpty)(writeProps)))
+      val committed = Transaction.run(log, operation, prevSnapshot, () => loadSnapshot(),
+          readVersion) { attemptSnap =>
+        // appends re-merge onto the attempt's schema; so does a dynamic
+        // overwrite, which keeps non-replaced partitions readable (the
+        // schema evolves by the append MERGE rule, never narrows)
+        val schemaNow = attemptSnap match {
+          case Some(s) if metadataOverride.isEmpty &&
+              (mode == Append || dynamicPartitionOverwrite) => mergeWithMapping(s, dfI.schema)
+          case _ => newSchema
         }
-        val v = attemptSnap.map(_.version + 1).getOrElse(0L)
-        val schemaNow = metadataOverride.map(m =>
-          org.apache.spark.sql.types.DataType.fromJson(m.schemaJson)
-            .asInstanceOf[StructType])
-          .getOrElse((mode, attemptSnap) match {
-            case (Append, Some(s)) => mergeWithMapping(s, dfI.schema)
-            // dynamic overwrite keeps non-replaced partitions readable:
-            // schema evolves by the append MERGE rule, never narrows
-            case (Overwrite, Some(s)) if dynamicPartitionOverwrite =>
-              mergeWithMapping(s, dfI.schema)
-            case _                 => newSchema
-          })
         val propsNow = metadataOverride.map(_.properties).getOrElse(
           baseProps(attemptSnap) ++ properties ++ idProps)
-        val removes: Seq[Action] = (mode match {
+        val rebased: Seq[RemoveFile] = mode match {
           case Overwrite if dynamicPartitionOverwrite =>
             val touched = adds.map(_.partitionValues).toSet
             attemptSnap.map(_.files.filter(f => touched.contains(f.partitionValues))
               .map(f => RemoveFile(f.path))).getOrElse(Nil)
           case Overwrite => attemptSnap.map(_.files.map(f => RemoveFile(f.path))).getOrElse(Nil)
           case Append    => Nil
-        }) ++ removeFiles.map(RemoveFile(_))
+        }
         val partColsNow = metadataOverride.map(_.partitionColumns).getOrElse(partCols)
+        val meta = Metadata(schemaNow.json, partColsNow, propsNow)
         val metaChanged = attemptSnap.forall { s =>
           s.schema != schemaNow || s.metadata.properties != propsNow ||
           s.metadata.partitionColumns != partColsNow
-        }
-        val metaActions: Seq[Action] =
-          if (metaChanged) Seq(Metadata(schemaNow.json, partColsNow, propsNow)) else Nil
-        // protocol auto-upgrade: properties enabling a feature for the
-        // first time add it to the table's feature sets (never downgrades)
-        val protoActions: Seq[Action] = {
-          val (rr, ww) = GraftLog.requiredFeatures(propsNow)
-          val cur = attemptSnap.map(_.protocol).getOrElse(Protocol())
-          if (rr.subsetOf(cur.readerFeatures.toSet) && ww.subsetOf(cur.writerFeatures.toSet)) Nil
-          else Seq(Protocol(cur.minReaderVersion, cur.minWriterVersion,
-            (cur.readerFeatures.toSet ++ rr).toSeq.sorted,
-            (cur.writerFeatures.toSet ++ ww).toSeq.sorted))
         }
         val commitInfo = CommitInfo(
           timestamp = System.currentTimeMillis(),
@@ -591,63 +533,15 @@ object TableWriter {
           operationParameters = operationParameters,
           operationMetrics = metrics
         )
-        try {
-          log.commit(v, metaActions ++ protoActions ++ indexedAdds ++ removes ++ cdcActions ++ extraActions :+ commitInfo)
-          committed = v
-        } catch {
-          case e: CommitConflictException =>
-            // an idempotent-writer commit (carries SetTransaction) must NOT
-            // blind-retry past a winner that advanced the same appId — that
-            // is a zombie instance of the same stream double-writing an
-            // epoch; surface it so the sink re-reads the watermark and skips
-            val txnRace = ourTxnApps.nonEmpty &&
-              (v to log.latestVersion()).exists { w =>
-                (try log.actionsAt(w) catch { case _: Exception => Nil }).exists {
-                  case t: SetTransaction => ourTxnApps.contains(t.appId)
-                  case _                 => false
-                }
-              }
-            // a winner that changed the CHECK-constraint set invalidates the
-            // STAGED files — they were written through the old constraint
-            // filters, and a blind-append retry would land rows a just-added
-            // constraint never saw. The non-commutable path already aborts
-            // on any metadata change via disjointFromWinners.
-            val constraintRace = !skipDataWrite &&
-              (v to log.latestVersion()).exists { w =>
-                (try log.actionsAt(w) catch { case _: Exception => Nil }).exists {
-                  case m: Metadata =>
-                    GraftTable.constraintsOf(m.properties) != constraints
-                  case _ => false
-                }
-              }
-            // a winner that advanced an identity high-water mark this commit
-            // also advances handed out the SAME id range — the staged files
-            // carry colliding values, so no retry can save them; the caller
-            // must re-run (and re-assign) the whole write
-            val identityRace = idProps.nonEmpty &&
-              (v to log.latestVersion()).exists { w =>
-                (try log.actionsAt(w) catch { case _: Exception => Nil }).exists {
-                  case m: Metadata =>
-                    m.properties.exists { case (k, vv) =>
-                      k.startsWith(GraftTable.IdentityPropertyPrefix) &&
-                        k.endsWith(".high") && !writeProps.get(k).contains(vv)
-                    }
-                  case _ => false
-                }
-              }
-            val retryable = !txnRace && !constraintRace && !identityRace && (commutable ||
-              disjointFromWinners(log, v,
-                removes.collect { case r: RemoveFile => r.path }.toSet ++ readFiles,
-                Metadata(schemaNow.json, partColsNow, propsNow), ourTxnApps,
-                removes.collect { case r: RemoveFile => r.path }.toSet))
-            if (!retryable || attempt >= maxAttempts)
-              throw new java.util.ConcurrentModificationException(
-                s"commit of $operation at version ${e.version} of $tablePath lost a race with " +
-                  "a concurrent writer and is not safely retryable " +
-                  "(the winner touched the same files, table metadata, or idempotence " +
-                  "watermark); re-run the operation")
-            attemptSnap = Some(loadSnapshot()) // same head-vs-fold rule per retry
-        }
+        Transaction.Attempt(
+          (if (metaChanged) Seq[Action](meta) else Nil) ++
+            Transaction.upgrade(attemptSnap.fold(Protocol())(_.protocol), propsNow) ++
+            indexedAdds ++ rebased ++ removeFiles.map(RemoveFile(_)) ++ cdcActions ++
+            extraActions :+ commitInfo,
+          Some(Transaction.Footprint(removeFiles.toSet, readFiles.toSet, meta,
+            extraActions.collect { case t: SetTransaction => t.appId }.toSet,
+            commutable = mode == Append && removeFiles.isEmpty && readFiles.isEmpty,
+            staged, rebased.map(_.path).toSet)))
       }
       if (operation != "OPTIMIZE" && !skipDataWrite)
         autoCompact(spark, tablePath, log, committed, effectiveProps,
@@ -661,19 +555,6 @@ object TableWriter {
         try { SymlinkManifest.write(tablePath, log.snapshot()); () }
         catch { case e: Exception =>
           Console.err.println(s"graft manifest refresh of $tablePath skipped: ${e.getMessage}")
-        }
-      // expired-log cleanup (Delta's `delta.enableExpiredLogCleanup`):
-      // opt-in, piggybacks on the checkpoint cadence so it is O(expired)
-      // every N commits and free otherwise; best-effort like the other
-      // post-commit hooks — the commit has already landed
-      if (committed > 0 && committed % GraftLog.CheckpointInterval == 0 &&
-          effectiveProps.get(GraftLog.ExpiredLogCleanupProperty).contains("true"))
-        try {
-          log.retentionHorizon(effectiveProps, System.currentTimeMillis())
-            .foreach(h => log.cleanupBelow(h))
-          ()
-        } catch { case scala.util.control.NonFatal(e) =>
-          Console.err.println(s"graft expired-log cleanup of $tablePath skipped: ${e.getMessage}")
         }
       committed
     } finally Fs.deleteRecursively(staging)
@@ -797,47 +678,6 @@ object TableWriter {
       // property may fail it — warn and move on
       case scala.util.control.NonFatal(e) =>
         Console.err.println(s"graft autoCompact of $tablePath skipped: ${e.getMessage}")
-    }
-  }
-
-  /** Semantic OCC check for a commit that lost the race at
-    * `attemptedVersion`: true when every winning commit (attemptedVersion up
-    * to the current latest) removed no file in `ourFootprint` — this
-    * commit's removes PLUS everything it read to decide them (candidate
-    * files for MERGE/DELETE/UPDATE; Delta's
-    * checkForDeletedFilesAgainstCurrentTxnReadFiles) — and none changed
-    * table metadata. Then the loser can rebase and retry without dropping
-    * any winner's work or re-committing stale match decisions. Winner ADDS
-    * never conflict at file level (new unique names); ignoring them is
-    * Delta's WriteSerializable relaxation: the outcome is as if this commit
-    * ran first and the winner's appended rows arrived after.
-    */
-  private def disjointFromWinners(
-      log: GraftLog,
-      attemptedVersion: Long,
-      ourFootprint: Set[String],
-      ourMetadata: Metadata,
-      ourTxnApps: Set[String] = Set.empty,
-      ourRemoves: Set[String] = Set.empty): Boolean = {
-    val latest = log.latestVersion()
-    (attemptedVersion to latest).forall { w =>
-      val actions = try log.actionsAt(w) catch { case _: Exception => return false }
-      actions.forall {
-        // a winner Metadata identical to what this attempt would write is
-        // benign (e.g. both normalize create-time nullability); any real
-        // schema/partitioning/property change under us aborts
-        case m: Metadata       => m == ourMetadata
-        case r: RemoveFile     => !ourFootprint.contains(r.path)
-        // fresh winner adds never collide (unique names) — EXCEPT a RESTORE
-        // re-adding a path this commit is removing (e.g. fsck dropping a
-        // reference a concurrent restore just revived): removing it now
-        // would silently lose the restored rows
-        case a: AddFile        => !ourRemoves.contains(a.path)
-        // a winner advancing an idempotence watermark this commit carries is
-        // the same logical stream double-writing an epoch (zombie instance)
-        case t: SetTransaction => !ourTxnApps.contains(t.appId)
-        case _                 => true
-      }
     }
   }
 

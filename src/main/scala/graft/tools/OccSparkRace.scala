@@ -11,8 +11,8 @@ import graft.tables.GraftTable
 /** Cross-process SEMANTIC OCC race driver (test-harness main): one real
   * Spark operation per JVM, interleaved deterministically through file-based
   * gates, against a shared table. `OccSparkRaceSpec` spawns pairs of these to
-  * prove the logical conflict-resolution rules (`TableWriter.write` step 5 /
-  * `disjointFromWinners`) across REAL process boundaries — the in-JVM OccGate
+  * prove the logical conflict-resolution rules (`Transaction.verdict`)
+  * across REAL process boundaries — the in-JVM OccGate
   * specs share one page cache and one `GraftLog` view; two JVMs do not.
   *
   * Gate protocol (files beside the table, driven by a UDF evaluated inside
@@ -115,7 +115,7 @@ object OccSparkRace {
       // identity-range race: the blocked appender reserves ids from a
       // snapshot the winner then invalidates by advancing the SAME
       // high-water mark — its staged files carry colliding values, so the
-      // only safe outcome is an abort (identityRace in TableWriter)
+      // only safe outcome is an abort (Transaction.verdict's identity rule)
       case "identity-blocked-abort" :: Nil =>
         val df = Seq((1, "blocked-a"), (2, "blocked-b")).toDF("n", "payload")
           .withColumn("n", gateUdf(tablePath)(col("n")))

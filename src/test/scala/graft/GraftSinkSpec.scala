@@ -161,13 +161,16 @@ class GraftSinkSpec extends AnyFunSpec with SparkSessionTestWrapper {
     log.commit(v0 + 1, Seq(
       SetTransaction("appA", 1L),
       graft.tables.CommitInfo(System.currentTimeMillis(), "STREAMING UPDATE")))
-    intercept[java.util.ConcurrentModificationException] {
+    val e = intercept[java.util.ConcurrentModificationException] {
       graft.tables.TableWriter.write(
         spark, dir, Seq((1L, "dup")).toDF("id", "v"), graft.tables.TableWriter.Append,
         operation = "STREAMING UPDATE",
         extraActions = Seq(SetTransaction("appA", 1L)),
         readVersion = Some(v0))
     }
+    // the abort names the watermark's appId and the winning version
+    assert(e.getMessage.contains("appId appA") &&
+      e.getMessage.contains(s"version ${v0 + 1}"), e.getMessage)
     // an unrelated appId racing the same window is fine (blind append)
     graft.tables.TableWriter.write(
       spark, dir, Seq((7L, "ok")).toDF("id", "v"), graft.tables.TableWriter.Append,

@@ -491,6 +491,21 @@ class GraftSqlCommandSpec extends AnyFunSpec with SparkSessionTestWrapper {
       assert(t.toDF.filter(col("part") === "01").count() == 30)
     }
 
+    it("a converted table inherits session default properties, like create") {
+      val dir = tmpTableDir("convert-defaults")
+      (1 to 10).map(i => (i, s"v$i")).toDF("id", "name").coalesce(1).write.parquet(dir)
+      spark.conf.set(GraftTable.DefaultsPrefix + "enableChangeDataFeed", "true")
+      try {
+        val t = GraftTable.convert(spark, dir)
+        assert(t.snapshot.cdfEnabled, t.snapshot.metadata.properties)
+        graft.operators.TableOps.update(t, Some("id = 3"), Map("name" -> "'x'"))
+        val changes = graft.log.ChangeDataFeedHelper(spark, dir, 1, 1).readCDF
+          .select("id", "name", "_change_type").collect()
+          .map(r => (r.getInt(0), r.getString(1), r.getString(2))).toSet
+        assert(changes == Set((3, "v3", "update_preimage"), (3, "x", "update_postimage")))
+      } finally spark.conf.unset(GraftTable.DefaultsPrefix + "enableChangeDataFeed")
+    }
+
     it("refuses an existing graft table and an empty directory") {
       val t = GraftTable.create(spark, tmpTableDir("convert-already"),
         Seq((1, "a")).toDF("id", "name"))

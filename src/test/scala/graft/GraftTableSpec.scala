@@ -443,6 +443,9 @@ class GraftTableSpec extends AnyFunSpec with SparkSessionTestWrapper {
       b.join(60000)
       assert(bError.exists(_.isInstanceOf[java.util.ConcurrentModificationException]),
         s"append must abort after a concurrent ADD CONSTRAINT, got: $bError")
+      // the abort names the rule that fired: the winner's new constraint
+      assert(bError.get.getMessage.contains("CHECK constraints") &&
+        bError.get.getMessage.contains("pos_id"), bError.get.getMessage)
       // the violating row never landed; the constraint stands
       assert(t.toDF.count() == 1)
       assert(t.checkConstraints.contains("pos_id"))
@@ -690,6 +693,8 @@ class GraftTableSpec extends AnyFunSpec with SparkSessionTestWrapper {
           readVersion = Some(0L), skipDataWrite = true)
       }
       assert(e.getMessage.contains("conflict"), e.getMessage)
+      // ... and names the re-added path and the winning version
+      assert(e.getMessage.contains(s"version 1 re-added $victim"), e.getMessage)
     }
 
     it("autoCompact rewrites accumulated small files once the threshold is hit") {

@@ -121,6 +121,28 @@ class MetadataCleanupSpec extends AnyFunSpec with SparkSessionTestWrapper {
       assert(GraftTable.forPath(spark, dir).toDF.count() == GraftLog.CheckpointInterval + 1)
     }
 
+    it("graft.enableExpiredLogCleanup also expires log files when the checkpoint commit is DDL") {
+      val dir = tmpTableDir("mc-auto-ddl")
+      GraftTable.create(spark, dir, Seq((0, "v0")).toDF("id", "payload"),
+        properties = Map(
+          GraftLog.ExpiredLogCleanupProperty -> "true",
+          TableOps.LogRetentionProperty -> "interval 0 hours"))
+      (1 until GraftLog.CheckpointInterval).foreach { i =>
+        Thread.sleep(2)
+        GraftTable.forPath(spark, dir).append(Seq((i, s"v$i")).toDF("id", "payload"))
+      }
+      Thread.sleep(2)
+      // version 10 — the checkpoint commit — is metadata-only DDL
+      val v = GraftTable.forPath(spark, dir).addColumns(
+        org.apache.spark.sql.types.StructType.fromDDL("extra STRING"))
+      assert(v == GraftLog.CheckpointInterval.toLong)
+      val t2 = GraftTable.forPath(spark, dir)
+      assert(t2.log.versions().length < GraftLog.CheckpointInterval + 1,
+        s"no log file expired: ${t2.log.versions()}")
+      assert(t2.toDF.count() == GraftLog.CheckpointInterval)
+      assert(t2.snapshot.schema.fieldNames.contains("extra"))
+    }
+
     it("a cleaned log is exactly the missing-delta-log shape the CDF recovery reads handle") {
       val dir = tmpTableDir("mc-cdf")
       val t = GraftTable.create(spark, dir, Seq((0, "a"), (1, "b"), (2, "c")).toDF("id", "v"),
