@@ -122,7 +122,8 @@ object GraftHelpers {
       "equals" -> equalsF.size,
       "leftOver" -> leftOver.size,
       "unresolved" -> unresolvedF.size,
-      "totalFilesInTable" -> table.snapshot.numFiles,
+      // the unresolved bucket is every file of the one snapshot classified
+      "totalFilesInTable" -> unresolvedF.size.toLong,
       "unresolvedColumns" -> cls.unresolvedColumns.toList
     )
   }
@@ -136,7 +137,7 @@ object GraftHelpers {
 
   private def shuffleFileSets(table: GraftTable, condition: String) = {
     val snap = table.snapshot
-    val cls = FileSkipping.classify(table.spark, table.toDF, condition)
+    val cls = FileSkipping.classify(table.spark, snap.schema, condition)
     val bloomCtx = Some(BloomIndex.ProbeContext(table.spark, table.path))
     (
       FileSkipping.filesMatching(snap, cls.all, bloomCtx),

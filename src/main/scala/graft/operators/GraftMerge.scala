@@ -167,11 +167,14 @@ object GraftMerge {
       bySource: Seq[NotMatchedBySourceClause] = Nil): Long = {
     val spark = table.spark
     val t0 = System.currentTimeMillis()
-    // head past the driver-file limit: candidate selection runs executor-
-    // side (TableOps.dmlCandidates) and everything else the merge reads is
-    // metadata-plane; by-source merges (below) still need the full file
-    // list — every file is a rewrite candidate by construction
-    val (snap, lazyHead) = TableOps.dmlSnap(table)
+    // the merge's one resolution of the target — planning, skipping and
+    // the commit all read it. Head past the driver-file limit: candidate
+    // selection runs executor-side (TableOps.dmlCandidates) and everything
+    // else the merge reads is metadata-plane; by-source merges (below)
+    // still need the full file list — every file is a rewrite candidate by
+    // construction
+    val read = table.resolveRead(-1L)
+    val snap = read.fold(identity, _.snapshot)
     val targetCols = snap.schema.fieldNames.toSeq
     // schema evolution: the OUTPUT schema appends source-only columns to the
     // target's (type conflicts rejected up front); without the flag the
@@ -219,7 +222,7 @@ object GraftMerge {
     }))
 
     // --- 1. candidate-file pruning on target-only conjuncts ---------------
-    val classified = FileSkipping.classify(spark, table.toDF.alias(targetAlias), condition)
+    val classified = FileSkipping.classify(spark, snap.schema, condition, Some(targetAlias))
     val targetOnly = classified.all.filter { c =>
       c.references.nonEmpty &&
       c.references.forall(r => targetCols.exists(_.equalsIgnoreCase(stripAlias(r.name))))
@@ -266,15 +269,8 @@ object GraftMerge {
       // are exactly the ones the merge condition does NOT select, so
       // condition-derived file skipping would hide them — every file is a
       // candidate (Delta's by-source merges scan the full table likewise)
-      val candidates =
-        if (bySourceN.nonEmpty) {
-          lazyHead match {
-            case Some(head) => graft.tables.DistributedSnapshot.prunedFilesByExprs(
-              spark, table.log, head, Nil) // full set — inherent to by-source
-            case None => snap.files
-          }
-        }
-        else TableOps.dmlCandidates(table, snap, lazyHead, targetOnly ++ dynamicPreds)
+      val candidates = TableOps.dmlCandidates(table, read,
+        if (bySourceN.nonEmpty) Nil else targetOnly ++ dynamicPreds)
       val scanTime = System.currentTimeMillis() - t0
 
       // source is always aliased so UpdateAll/InsertAll can reference its
@@ -328,7 +324,7 @@ object GraftMerge {
           // files — a winner rewriting one of them invalidates those
           // decisions, so the read footprint makes this NOT a blind append
           readFiles = candidates.map(_.path),
-          readVersion = Some(snap.version),
+          read = Some(read),
           skipDataWrite = nIns == 0)
       }
 
@@ -488,7 +484,7 @@ object GraftMerge {
         // read footprint: every candidate file (superset of touched) — a
         // winner removing a candidate may change which rows match
         readFiles = candidates.map(_.path),
-        readVersion = Some(snap.version),
+        read = Some(read),
         skipDataWrite = touched.isEmpty && nIns == 0
       )
     } finally freeNewBlocks(spark, persistedBefore)

@@ -15,31 +15,22 @@ import graft.tables._
   */
 object TableOps {
 
-  /** The snapshot a predicate-scoped DML plans from: a full driver fold
-    * below `spark.graft.snapshot.driverFileLimit`; past it, the HEAD —
-    * candidate selection then runs as executor-side skipping
-    * ([[dmlCandidates]]) and the driver holds only O(matching) files.
-    * Every downstream consumer reads metadata-plane fields (schema,
-    * properties, transactions, version) plus the candidate subset — never
-    * the full file list.
-    */
-  private[operators] def dmlSnap(table: GraftTable): (Snapshot, Option[SegmentHead]) =
-    table.resolveRead(-1L) match {
-      case Right(head) => (head.snapshot, Some(head))
-      case Left(snap)  => (snap, None)
-    }
-
-  /** Predicate-matched candidate files under the [[dmlSnap]] regime: the
-    * driver walk with bloom probes below the limit, executor-side skipping
-    * (no bloom — sidecar loads stay a driver-path feature) past it.
+  /** Predicate-matched candidate files of a predicate-scoped DML's one
+    * resolution ([[GraftTable.resolveRead]]): a full driver fold below
+    * `spark.graft.snapshot.driverFileLimit` is walked on the driver with
+    * bloom probes; past it, the HEAD — executor-side skipping (no bloom —
+    * sidecar loads stay a driver-path feature) and the driver holds only
+    * O(matching) files. Every other consumer of the resolution reads
+    * metadata-plane fields (schema, properties, transactions, version) plus
+    * the candidate subset — never the full file list.
     */
   private[operators] def dmlCandidates(
-      table: GraftTable, snap: Snapshot, lazyHead: Option[SegmentHead],
+      table: GraftTable, read: Either[Snapshot, SegmentHead],
       preds: Seq[org.apache.spark.sql.catalyst.expressions.Expression]): Seq[AddFile] =
-    lazyHead match {
-      case Some(head) =>
+    read match {
+      case Right(head) =>
         graft.tables.DistributedSnapshot.prunedFilesByExprs(table.spark, table.log, head, preds)
-      case None =>
+      case Left(snap) =>
         FileSkipping.filesMatching(snap, preds,
           Some(BloomIndex.ProbeContext(table.spark, table.path)))
     }
@@ -77,8 +68,7 @@ object TableOps {
 
   private def deleteWhere(table: GraftTable, cond: BoundExpr): Long = {
     val t0 = System.currentTimeMillis()
-    val (snap, lazyHead) = dmlSnap(table)
-    new PredicateRewrite(table, snap, lazyHead, t0, cond,
+    new PredicateRewrite(table, table.resolveRead(-1L), t0, cond,
       RowRewrite("DELETE", Map("predicate" -> s"""["${cond.display}"]"""))).run()
   }
 
@@ -118,7 +108,8 @@ object TableOps {
   private[graft] def updateMixed(
       table: GraftTable, cond: BoundExpr, set: Map[String, BoundExpr]): Long = {
     val t0 = System.currentTimeMillis()
-    val (snap, lazyHead) = dmlSnap(table)
+    val read = table.resolveRead(-1L)
+    val snap = read.fold(identity, _.snapshot)
     require(set.nonEmpty, "UPDATE needs at least one SET assignment")
     // a SET on an unknown column must fail, not silently no-op (SQL UPDATE
     // semantics — and the silent form reports numUpdatedRows > 0 for rows
@@ -126,7 +117,7 @@ object TableOps {
     val unknown = set.keys.filterNot(k => snap.schema.fieldNames.exists(_.equalsIgnoreCase(k)))
     require(unknown.isEmpty,
       s"UPDATE SET references column(s) not in the table schema: ${unknown.mkString(", ")}")
-    new PredicateRewrite(table, snap, lazyHead, t0, cond,
+    new PredicateRewrite(table, read, t0, cond,
       RowRewrite("UPDATE", Map("predicate" -> s"[${cond.display}]"), set = Some(set))).run()
   }
 
@@ -144,16 +135,18 @@ object TableOps {
       extraActions: Seq[Action] = Nil)
 
   /** The one predicate-scoped rewrite behind DELETE, UPDATE and
-    * replaceWhere, planned from `snap` (read at `t0`): candidate files by
+    * replaceWhere, planned from the table's one resolution `read` (at
+    * `t0`) — the commit is built from it too: candidate files by
     * stats+bloom pruning on the condition, then merge-on-read on a
     * deletion-vector table ([[dv]]), copy-on-write otherwise ([[cow]]) —
     * and always for replaceWhere.
     */
-  private final class PredicateRewrite(table: GraftTable, snap: Snapshot,
-      lazyHead: Option[SegmentHead], t0: Long, cond: BoundExpr, rw: RowRewrite) {
+  private final class PredicateRewrite(table: GraftTable, read: Either[Snapshot, SegmentHead],
+      t0: Long, cond: BoundExpr, rw: RowRewrite) {
     private val spark = table.spark
-    private val candidates = dmlCandidates(table, snap, lazyHead,
-      FileSkipping.classify(spark, table.toDF, cond.skippingText).all)
+    private val snap = read.fold(identity, _.snapshot)
+    private val candidates = dmlCandidates(table, read,
+      FileSkipping.classify(spark, snap.schema, cond.skippingText).all)
     private val scanTime = System.currentTimeMillis() - t0
     private val fields = snap.schema.fieldNames.toSeq
     private val dropped = rw.set.isEmpty
@@ -311,7 +304,7 @@ object TableOps {
         removeFiles = removed.map(_.path),
         extraActions = readds ++ rw.extraActions,
         readFiles = candidates.map(_.path),
-        readVersion = Some(snap.version),
+        read = Some(read),
         skipDataWrite = skipDataWrite)
   }
 
@@ -384,7 +377,8 @@ object TableOps {
     val spark = table.spark
     // metadata-plane only (version, schema, transactions) — the head past
     // the driver-file limit, like every other non-overwrite write path
-    val (snap, _) = dmlSnap(table)
+    val read = table.resolveRead(-1L)
+    val snap = read.fold(identity, _.snapshot)
     val fmt = format.toLowerCase(java.util.Locale.ROOT)
     require(Set("parquet", "csv", "json").contains(fmt),
       s"COPY INTO supports FILEFORMAT = PARQUET | CSV | JSON, got '$format'")
@@ -487,7 +481,7 @@ object TableOps {
         "numCopiedFiles" -> toLoad.size.toString,
         "numSkippedFiles" -> skipped.toString),
       extraActions = Seq(SetTransaction(CopyIntoTxnApp, nextTxn)),
-      readVersion = Some(snap.version))
+      read = Some(read))
     val rows = table.log.actionsAt(v)
       .collectFirst { case c: CommitInfo => c.operationMetrics }
       .flatMap(_.get("numOutputRows")).map(_.toLong).getOrElse(0L)
@@ -534,7 +528,7 @@ object TableOps {
       s"partition column $c is not a table column (have ${fields.mkString(", ")})"))
     require(partitionColumns.map(_.toLowerCase) != snap.metadata.partitionColumns.map(_.toLowerCase),
       s"table is already partitioned by ${partitionColumns.mkString(", ")}")
-    TableWriter.write(table.spark, table.path, table.toDF,
+    TableWriter.write(table.spark, table.path, table.dfForSnapshot(snap),
       TableWriter.Overwrite,
       partitionColumns = partitionColumns,
       explicitPartitioning = true, // empty target = evolve to unpartitioned
@@ -543,7 +537,7 @@ object TableOps {
       // the rewrite read the whole current table: a concurrent writer
       // landing first must conflict, not be silently clobbered
       readFiles = snap.files.map(_.path),
-      readVersion = Some(snap.version))
+      read = Some(Left(snap)))
   }
 
   /** Selective transactional overwrite — Delta's `replaceWhere`
@@ -570,13 +564,14 @@ object TableOps {
       predicate: String,
       extraActions: Seq[Action] = Nil): Long = {
     val t0 = System.currentTimeMillis()
-    val (snap, lazyHead) = dmlSnap(table)
+    val read = table.resolveRead(-1L)
+    val snap = read.fold(identity, _.snapshot)
     val fields = snap.schema.fieldNames.toSeq
 
     // idempotent-write replay guard re-checked against THIS snapshot — the
     // caller's earlier probe and our snap straddle a window where a
-    // concurrent same-appId commit could land; readVersion below only
-    // catches commits after snap, so the watermark must be read from snap
+    // concurrent same-appId commit could land; the commit's verdict only
+    // judges commits after snap, so the watermark must be read from snap
     // itself (same discipline as the append path)
     extraActions.collectFirst {
       case SetTransaction(app, v) if snap.transactions.get(app).exists(_ >= v) =>
@@ -604,7 +599,7 @@ object TableOps {
         lit(s"replaceWhere: written row does not match the predicate [$predicate]")).isNull)
       .select(fields.map(col): _*)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    try new PredicateRewrite(table, snap, lazyHead, t0, BoundExpr.Text(predicate),
+    try new PredicateRewrite(table, read, t0, BoundExpr.Text(predicate),
       RowRewrite("WRITE", Map("mode" -> "Overwrite", "predicate" -> s"""["$predicate"]"""),
         incoming = Some(newRows), extraActions = extraActions)).run()
     finally newRows.unpersist()
@@ -618,7 +613,7 @@ object TableOps {
       where: Option[String]): Seq[graft.tables.AddFile] = where match {
     case None => snap.files
     case Some(cond) =>
-      val classified = FileSkipping.classify(table.spark, table.toDF, cond)
+      val classified = FileSkipping.classify(table.spark, snap.schema, cond)
       FileSkipping.filesMatching(snap, classified.all,
         Some(BloomIndex.ProbeContext(table.spark, table.path)))
   }
@@ -640,7 +635,7 @@ object TableOps {
       extraMetrics = Map("numRemovedFiles" -> selected.size.toString,
         "numRemovedBytes" -> totalBytes.toString) ++ extraMetrics,
       removeFiles = selected.map(_.path),
-      readVersion = Some(snap.version))
+      read = Some(Left(snap)))
   }
 
   /** OPTIMIZE (compaction): rewrite the selected files into
@@ -750,7 +745,7 @@ object TableOps {
     val selected = where match {
       case None => snap.files
       case Some(cond) =>
-        val classified = FileSkipping.classify(spark, table.toDF, cond)
+        val classified = FileSkipping.classify(spark, schema, cond)
         FileSkipping.filesMatching(snap, classified.all,
           Some(BloomIndex.ProbeContext(spark, table.path)))
     }
@@ -830,7 +825,7 @@ object TableOps {
       extraMetrics = Map("numRemovedFiles" -> selected.size.toString,
         "numRemovedBytes" -> totalBytes.toString),
       removeFiles = selected.map(_.path),
-      readVersion = Some(snap.version))
+      read = Some(Left(snap)))
   }
 
   /** FSCK REPAIR TABLE (Delta's shape): drop snapshot references to data
@@ -867,7 +862,7 @@ object TableOps {
         // the decision read the whole file list: a concurrent winner
         // re-adding or rewriting one of these files invalidates it
         readFiles = snap.files.map(_.path),
-        readVersion = Some(snap.version),
+        read = Some(Left(snap)),
         skipDataWrite = true)
     }
     missing.map(_.path)
@@ -924,7 +919,7 @@ object TableOps {
       // the backfill read these files' footers and the decision read the
       // current file list: concurrent rewrites of them must conflict
       readFiles = missing.map(_.path),
-      readVersion = Some(snap.version),
+      read = Some(Left(snap)),
       skipDataWrite = true)
     readd.size
   }
@@ -1026,7 +1021,7 @@ object TableOps {
       // the decision read the WHOLE current table: any concurrent winner
       // conflicts (no silent clobbering of a commit that landed mid-restore)
       readFiles = cur.files.map(_.path),
-      readVersion = Some(cur.version),
+      read = Some(Left(cur)),
       skipDataWrite = true,
       metadataOverride = Some(target.metadata))
   }
@@ -1092,7 +1087,7 @@ object TableOps {
       operation = operation,
       extraMetrics = Map("numRemovedFiles" -> cur.files.size.toString),
       readFiles = cur.files.map(_.path),
-      readVersion = Some(cur.version),
+      read = Some(Left(cur)),
       skipDataWrite = data.isEmpty)
   }
 

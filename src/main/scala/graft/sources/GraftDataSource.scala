@@ -74,7 +74,7 @@ class GraftDataSource extends RelationProvider with SchemaRelationProvider
       GraftTable.createEmpty(spark, path, schema, partitions)
       ()
     } else {
-      val actual = GraftTable.forPath(spark, path).snapshot.schema
+      val actual = GraftTable.forPath(spark, path).schemaOnly
       // order-INSENSITIVE compare: DDL column order legitimately differs
       // from the log's write order (e.g. partition-columns-last relation
       // order), so match on the (name → type) mapping, not field position
@@ -119,7 +119,7 @@ class GraftDataSource extends RelationProvider with SchemaRelationProvider
     (shortName(),
       schema.getOrElse {
         if (parameters.get("dropChangeColumns").exists(_.trim.equalsIgnoreCase("true")))
-          GraftTable.forPath(sqlContext.sparkSession, pathOf(parameters)).snapshot.schema
+          GraftTable.forPath(sqlContext.sparkSession, pathOf(parameters)).schemaOnly
         else GraftStreamSource.schemaOf(sqlContext.sparkSession, pathOf(parameters))
       })
 
@@ -214,18 +214,17 @@ class GraftDataSource extends RelationProvider with SchemaRelationProvider
           "txnAppId and txnVersion must be set together (idempotent-write options)")
       }
     // ONE snapshot read serves the watermark probe, the partition lookup and
-    // — via readVersion — the commit's conflict validation: a concurrent
-    // same-appId writer landing between this read and the commit is then
-    // caught by the SetTransaction check even WITHOUT a version-number
-    // collision (the window GraftSink.writeEpoch closes the same way; an
-    // uncollided clean commit would otherwise double-append)
+    // the commit, which is built from it: a concurrent same-appId writer
+    // landing between this read and the commit makes the commit's claim
+    // lose, and the SetTransaction check aborts it (the window
+    // GraftSink.writeEpoch closes the same way; a rebase would otherwise
+    // double-append)
     val snapBefore = if (exists) Some(GraftTable.forPath(spark, path).snapshot) else None
     val alreadyApplied = txn.exists { case (app, v) =>
       snapBefore.exists(_.transactions.get(app).exists(_ >= v))
     }
     val txnActions: Seq[graft.tables.Action] =
       txn.map { case (app, v) => graft.tables.SetTransaction(app, v) }.toSeq
-    val txnReadVersion = if (txn.isDefined) snapBefore.map(_.version) else None
     val replaceWhere = parameters.get("replaceWhere").map(_.trim)
     // a PRESENT-but-blank predicate is a caller bug (e.g. a templating slip),
     // not an absent option — treating it as absent would silently escalate a
@@ -269,7 +268,7 @@ class GraftDataSource extends RelationProvider with SchemaRelationProvider
       case SaveMode.Ignore if exists => ()
       case SaveMode.Append if exists =>
         TableWriter.write(spark, path, data, TableWriter.Append,
-          extraActions = txnActions, readVersion = txnReadVersion)
+          extraActions = txnActions, read = snapBefore.map(Left(_)))
       case SaveMode.Overwrite if exists && replaceWhere.isDefined =>
         graft.operators.TableOps.overwriteWhere(
           GraftTable.forPath(spark, path), data, replaceWhere.get,
@@ -282,7 +281,7 @@ class GraftDataSource extends RelationProvider with SchemaRelationProvider
             if (dynamic) Map("mode" -> "Overwrite", "partitionOverwriteMode" -> "dynamic")
             else Map.empty,
           dynamicPartitionOverwrite = dynamic,
-          extraActions = txnActions, readVersion = txnReadVersion)
+          extraActions = txnActions, read = snapBefore.map(Left(_)))
       case _ =>
         val partitions = parameters.get("partitionColumns")
           .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
@@ -566,30 +565,30 @@ object GraftScanRewrite extends Rule[LogicalPlan] {
             val table = GraftTable.forPath(spark, g.path)
             graftUnder(table.dfForFiles(snap, snap.files).queryExecution.optimizedPlan)
           } else {
-            // a time-travel relation pins its snapshot; the file index then
-            // never follows the log past the pinned version
-            l.copy(relation = nativeRelation(spark, g.path,
-              g.versionAsOf.map(_ => snap)))
+            // the rule's one resolution seeds the file index; a time-travel
+            // relation pins it, a latest read follows the log from it
+            l.copy(relation = nativeRelation(spark, g.path, snap,
+              followsLog = g.versionAsOf.isEmpty))
           }
       }
   }
 
-  /** The physical-read shape of the table at `path`: partition columns land
-    * in `partitionSchema` (values come from the log, typed via cast), all
-    * other columns in `dataSchema`. With `pinned` the relation reads
-    * exactly that snapshot's file set (time travel / explicit candidate
-    * subsets); without it the file index follows the log.
+  /** The physical-read shape of `snap`, a resolved snapshot of the table at
+    * `path`: partition columns land in `partitionSchema` (values come from
+    * the log, typed via cast), all other columns in `dataSchema`. The
+    * relation reads exactly `snap`'s file set (time travel / explicit
+    * candidate subsets) unless `followsLog`, when the file index starts
+    * from `snap` and follows the log (see [[GraftFileIndex]]).
     */
   def nativeRelation(
       spark: SparkSession,
       path: String,
-      pinned: Option[Snapshot] = None): HadoopFsRelation = {
-    val snap = pinned.getOrElse(GraftTable.forPath(spark, path).snapshot)
+      snap: Snapshot, followsLog: Boolean = false): HadoopFsRelation = {
     val schema = snap.schema
     val partCols = snap.metadata.partitionColumns
     val partitionSchema = StructType(partCols.flatMap(c => schema.fields.find(_.name == c)))
     val dataSchema = StructType(schema.fields.filterNot(f => partCols.contains(f.name)))
-    val index = new GraftFileIndex(spark, path, partitionSchema, pinned)
+    val index = new GraftFileIndex(spark, path, partitionSchema, snap, followsLog)
     // column mapping: the FileFormat translates requested logical names to
     // the files' physical columns, at any nesting depth (None = identity
     // for unmapped tables — byte-identical stock path)
@@ -1121,31 +1120,31 @@ class GraftParquetFileFormat(
   *   ([[FileSkipping.filesMatching]] — conservative, a file is only dropped
   *   when its stats PROVE no row can match).
   *
-  * The snapshot is re-resolved on every `listFiles`, so a cached relation
-  * always reads current data.
+  * The index serves `resolved`, the snapshot its query resolved. One that
+  * `followsLog` lists the log on every `listFiles` and folds again only
+  * when a commit has landed since, so a
+  * cached relation still reads current data; the others (time travel,
+  * explicit file subsets) never move.
   */
 class GraftFileIndex(
     @transient private val spark: SparkSession,
     val tablePath: String,
     override val partitionSchema: StructType,
-    pinned: Option[Snapshot] = None)
+    resolved: Snapshot, val followsLog: Boolean = false)
   extends FileIndex {
 
   private val sessionTz = spark.sessionState.conf.sessionLocalTimeZone
   private val caseSensitive = spark.sessionState.conf.caseSensitiveAnalysis
 
-  @volatile private var cachedSnap: Snapshot = pinned.getOrElse(currentSnapshot())
-
-  private def currentSnapshot(): Snapshot =
-    GraftTable.forPath(spark, tablePath).snapshot
+  @volatile private var cachedSnap: Snapshot = resolved
 
   override def rootPaths: Seq[Path] = Seq(graft.tables.Fs.toHadoopPath(tablePath))
 
-  /** Pinned indexes (time travel, explicit file subsets) never move. */
-  override def refresh(): Unit = if (pinned.isEmpty) cachedSnap = currentSnapshot()
-
-  /** True when this index serves one frozen snapshot (never re-resolves). */
-  private[graft] def isPinned: Boolean = pinned.isDefined
+  override def refresh(): Unit = if (followsLog) {
+    val log = new GraftLog(tablePath)
+    val seg = log.segment()
+    if (seg.version != cachedSnap.version) cachedSnap = log.fold(log.replayHead(seg))
+  }
 
   /** The snapshot the next scan will read (pinned, or cached latest) —
     * what [[GraftMetadataOnlyAggregate]] answers from.
@@ -1242,9 +1241,9 @@ object GraftSourcePin {
     plan transform {
       case lr: LogicalRelation => lr.relation match {
         case h: HadoopFsRelation => h.location match {
-          case gi: GraftFileIndex if !gi.isPinned =>
+          case gi: GraftFileIndex if gi.followsLog =>
             lr.copy(relation = h.copy(location = new GraftFileIndex(
-              spark, gi.tablePath, gi.partitionSchema, Some(gi.snapshotNow)))(spark))
+              spark, gi.tablePath, gi.partitionSchema, gi.snapshotNow))(spark))
           case _ => lr
         }
         // the pre-rewrite V1 relation follows the latest snapshot on every

@@ -47,10 +47,11 @@ object GraftSink {
       operation = "STREAMING UPDATE",
       operationParameters = Map("queryId" -> appId, "epochId" -> batchId.toString),
       extraActions = Seq(SetTransaction(appId, batchId)),
-      // validates every commit that lands between the watermark read above
-      // and this commit: a winner advancing OUR appId in that window is a
-      // zombie instance of the same stream — abort instead of double-append
-      readVersion = snap.map(_.version)))
+      // the commit is built from the watermark read above, so every commit
+      // landing after it is judged: a winner advancing OUR appId in that
+      // window is a zombie instance of the same stream — abort instead of
+      // double-append
+      read = snap.map(Left(_))))
   }
 
   /** `df.writeStream` wired to the exactly-once epoch writer. `appId`

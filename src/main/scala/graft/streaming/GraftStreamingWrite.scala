@@ -183,7 +183,7 @@ class GraftStreamingWrite(
           operation = "STREAMING UPDATE",
           operationParameters = Map("queryId" -> appId, "epochId" -> epochId.toString),
           extraActions = Seq(graft.tables.SetTransaction(appId, epochId)),
-          readVersion = snap.map(_.version),
+          read = snap.map(Left(_)),
           skipDataWrite = staging.isEmpty,
           preStagedDir = staging)
         ()

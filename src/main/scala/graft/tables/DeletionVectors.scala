@@ -99,7 +99,7 @@ object DeletionVectors {
       if (taskPerFile) org.apache.spark.sql.graft.SparkBridge.onePartitionPerFile(spark)
       else spark
     val rel = graft.sources.GraftScanRewrite.nativeRelation(
-      relSession, table.path, pinned = Some(snap.copy(files = files)))
+      relSession, table.path, snap.copy(files = files))
     val cols = snap.schema.fieldNames.map(col).toIndexedSeq ++
       Seq(col("_metadata.file_path").as("__graft_uri"),
         col("_metadata.row_index").as("__graft_pos"))

@@ -186,11 +186,7 @@ object DistributedSnapshot {
     val log = new GraftLog(tablePath)
     requireFilesystemLog(log)
     val head = log.replayHead(log.segment(version))
-    val schema = head.snapshot.schema
-
-    val emptyDf = spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-    val classified = FileSkipping.classify(spark, emptyDf, condition)
+    val classified = FileSkipping.classify(spark, head.snapshot.schema, condition)
     require(classified.unresolvedColumns.isEmpty,
       s"condition references unknown columns: ${classified.unresolvedColumns.mkString(", ")}")
     prunedFilesByExprs(spark, log, head, classified.all)

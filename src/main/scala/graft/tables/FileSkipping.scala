@@ -3,6 +3,8 @@ package graft.tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -40,9 +42,21 @@ object FileSkipping {
   )
 
   /** Parse + resolve `condition` against `df`'s plan and classify conjuncts. */
-  def classify(spark: SparkSession, df: DataFrame, condition: String): ClassifiedCondition = {
+  def classify(spark: SparkSession, df: DataFrame, condition: String): ClassifiedCondition =
+    classify(spark, df.queryExecution.analyzed, condition)
+
+  /** [[classify]] against a table `schema` — the one an operation already
+    * resolved, so classifying needs no DataFrame of the table (and no
+    * second resolution of it). `alias` qualifies the columns, as a MERGE
+    * target's `t.col` references need.
+    */
+  def classify(spark: SparkSession, schema: StructType, condition: String,
+      alias: Option[String] = None): ClassifiedCondition =
+    classify(spark, LocalRelation(DataTypeUtils.toAttributes(schema)
+      .map(_.withQualifier(alias.toSeq))), condition)
+
+  private def classify(spark: SparkSession, plan: LogicalPlan, condition: String): ClassifiedCondition = {
     val parsed = spark.sessionState.sqlParser.parseExpression(condition)
-    val plan = df.queryExecution.analyzed
     val resolved0 = spark.sessionState.analyzer.resolveExpressionByPlanOutput(parsed, plan)
     // CONSTANT-FOLD foldable subtrees (CAST('0.1' AS FLOAT), literal
     // arithmetic, typed-literal coercions): the band extractors match bare

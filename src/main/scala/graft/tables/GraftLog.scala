@@ -107,15 +107,19 @@ class GraftLog(val tablePath: String, val store: LogStore) {
     * [[LogStore]] the format falls back to JSON (self-describing per
     * version — readers check which sidecar exists).
     */
-  def writeCheckpoint(version: Long): Unit = {
-    val snap = snapshot(version)
+  def writeCheckpoint(version: Long): Unit = writeCheckpoint(snapshot(version))
+
+  /** [[writeCheckpoint]] of a full snapshot already in hand — a commit's
+    * post-state, a retention horizon — at `snap.version`.
+    */
+  private[tables] def writeCheckpoint(snap: Snapshot): Unit = {
     val txnActions = snap.transactions.toSeq.sortBy(_._1)
       .map { case (app, v) => SetTransaction(app, v) }
     val head: Seq[Action] = Seq(snap.metadata, snap.protocol) ++ txnActions
     val parquetFmt = declaresParquetCheckpoints(snap.metadata) && store.filesystemBacked
     if (parquetFmt) {
-      CheckpointParquet.write(checkpointParquetDir(version), snap.files)
-      store.overwrite(checkpointFile(version),
+      CheckpointParquet.write(checkpointParquetDir(snap.version), snap.files)
+      store.overwrite(checkpointFile(snap.version),
         head.map(renderAction).mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
     } else {
       // the PARQUET-PROPERTY fallback on a non-filesystem store writes a
@@ -133,7 +137,7 @@ class GraftLog(val tablePath: String, val store: LogStore) {
         else Nil
       val body = (head ++ snap.files ++ stamp)
         .map(renderAction).mkString("", "\n", "\n")
-      store.overwrite(checkpointFile(version), body.getBytes(StandardCharsets.UTF_8))
+      store.overwrite(checkpointFile(snap.version), body.getBytes(StandardCharsets.UTF_8))
     }
   }
 
@@ -421,7 +425,7 @@ class GraftLog(val tablePath: String, val store: LogStore) {
     // checkpoint at-or-after the horizon minus one covers (ckpt, target];
     // the horizon version itself is the natural anchor
     if (!checkpointVersions().exists(cv => cv >= retainVersion - 1 && cv <= retainVersion))
-      writeCheckpoint(retainVersion)
+      writeCheckpoint(scan.horizon)
     dead.foreach(rel => Fs.deleteIfExists(Fs.child(tablePath, rel)))
     val staleCkpts = checkpointVersions().filter(_ < retainVersion - 1)
     var deleted = 0
@@ -493,8 +497,13 @@ class GraftLog(val tablePath: String, val store: LogStore) {
     * Every [[GraftLog.CheckpointInterval]]th version also materializes a
     * checkpoint sidecar (best-effort: a failed checkpoint never fails the
     * commit — it is reported on stderr and the next interval retries).
+    * With `pre`, the full snapshot at `version - 1` the actions were built
+    * on, the checkpoint is written from `pre.advance(version, actions)` —
+    * the committed post-state — instead of listing and folding the log
+    * again; without it (or when `pre` is at another version) the
+    * checkpoint folds `version`.
     */
-  def commit(version: Long, actions: Seq[Action]): Unit = {
+  def commit(version: Long, actions: Seq[Action], pre: Option[Snapshot] = None): Unit = {
     store.createDirectories(logDir)
     val target = versionFile(version)
     val body = actions.map(renderAction).mkString("", "\n", "\n")
@@ -504,7 +513,8 @@ class GraftLog(val tablePath: String, val store: LogStore) {
         throw new CommitConflictException(tablePath, version)
     }
     if (version > 0 && version % CheckpointInterval == 0)
-      try writeCheckpoint(version)
+      try writeCheckpoint(pre.filter(_.version == version - 1)
+        .fold(snapshot(version))(_.advance(version, actions)))
       catch { case scala.util.control.NonFatal(e) =>
         Console.err.println(s"graft checkpoint of $tablePath at version $version skipped: ${e.getMessage}")
       }

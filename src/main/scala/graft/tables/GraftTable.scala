@@ -47,7 +47,10 @@ class GraftTable private (val spark: SparkSession, val path: String) {
   /** One read resolution of `version` (latest when negative): one log
     * segment, its head pass, and the driver-file-limit verdict on it —
     * Right(head) reads through the Dataset-backed path, Left(snapshot) is
-    * the driver fold of that same segment.
+    * the driver fold of that same segment. An operation resolves once and
+    * hands the result down: DML plans, skips and commits from it
+    * ([[TableWriter.write]]'s `read`), and a query plan's scan relation and
+    * file index are built from it.
     */
   private[graft] def resolveRead(version: Long): Either[Snapshot, SegmentHead] = {
     val head = log.replayHead(log.segment(version))
@@ -104,7 +107,7 @@ class GraftTable private (val spark: SparkSession, val path: String) {
         spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
       } else {
         val rel = graft.sources.GraftScanRewrite.nativeRelation(
-          spark, path, pinned = Some(snap.copy(files = fs)))
+          spark, path, snap.copy(files = fs))
         org.apache.spark.sql.graft.SparkBridge.ofRelation(spark, rel)
           .select(schema.fieldNames.map(org.apache.spark.sql.functions.col).toIndexedSeq: _*)
       }

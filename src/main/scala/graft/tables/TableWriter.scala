@@ -32,14 +32,6 @@ object TableWriter {
   case object Overwrite extends WriteMode
   case object Append extends WriteMode
 
-  /** Write `df` as a new commit of the table at `tablePath`.
-    *
-    * @return the committed version
-    */
-  /** Whether [[write]] may register pre-staged parquet directly (see the
-    * `preStagedDir` parameter): true when no row-altering write feature
-    * would be skipped by bypassing the write projection.
-    */
   /** Dotted paths of every NOT NULL field in `schema`: non-nullable
     * top-level columns and non-nullable STRUCT leaves at any depth (array/
     * map element nullability is not a per-row invariant — Delta's posture).
@@ -77,6 +69,10 @@ object TableWriter {
       }
     })
 
+  /** Whether [[write]] may register pre-staged parquet directly (see the
+    * `preStagedDir` parameter): true when no row-altering write feature
+    * would be skipped by bypassing the write projection.
+    */
   def canRegisterPreStaged(props: Map[String, String], schema: StructType): Boolean =
     GraftTable.constraintsOf(props).isEmpty &&
       GraftTable.generatedColumnsOf(props).isEmpty &&
@@ -84,6 +80,15 @@ object TableWriter {
       GraftTable.identityColumnsOf(props).isEmpty &&
       !ColumnMapping.isMapped(schema)
 
+  /** Write `df` as a new commit of the table at `tablePath`, through
+    * [[Transaction.run]]. The commit is built from `read`, the state the
+    * caller planned from, when given — else from the write's own one
+    * resolution of the table — and a commit landing on a checkpoint
+    * version writes the checkpoint from its post-state when that state is
+    * a full snapshot.
+    *
+    * @return the committed version
+    */
   def write(
       spark: SparkSession,
       tablePath: String,
@@ -102,7 +107,12 @@ object TableWriter {
       extraActions: Seq[Action] = Nil,
       removeFiles: Seq[String] = Nil,
       readFiles: Seq[String] = Nil,
-      readVersion: Option[Long] = None,
+      // the table state the caller planned from (its one resolution — Left
+      // a full snapshot, Right the head past the driver-file limit): the
+      // commit's first attempt is built from it, so every winner since the
+      // caller's read goes through the conflict verdict. None: the write
+      // resolves the table itself
+      read: Option[Either[Snapshot, SegmentHead]] = None,
       skipDataWrite: Boolean = false,
       // exact Metadata to commit (RESTORE reverting schema/properties to a
       // past version's) — bypasses the append-merge schema computation
@@ -137,7 +147,6 @@ object TableWriter {
   ): Long = {
     ensureWriteConfs(spark)
     val log = new GraftLog(tablePath)
-    val exists = log.tableExists
     // APPEND consumes only the snapshot's metadata plane (schema merge,
     // properties, protocol, version) — commit removes are Nil or caller-
     // supplied. Past the driver-file limit the head alone loads, so
@@ -145,19 +154,22 @@ object TableWriter {
     // 10⁶-entry file list the commit would not read. Overwrite modes keep
     // the full fold: their remove actions ARE the file list. One segment
     // decides and loads, so a concurrent commit cannot split the two.
-    def loadSnapshot(): Snapshot = {
-      val head = log.replayHead(log.segment())
-      if (mode == Append && GraftTable.lazyReadEligible(spark, log, head)) head.snapshot
-      else log.fold(head)
+    def load(seg: LogSegment): Either[Snapshot, SegmentHead] = {
+      val head = log.replayHead(seg)
+      if (mode == Append && GraftTable.lazyReadEligible(spark, log, head)) Right(head)
+      else Left(log.fold(head))
     }
-    val prevSnapshot = if (exists) Some(loadSnapshot()) else None
-    // writer gate (snapshot() above already gated READER features): a
+    require(mode == Append || read.forall(_.isLeft),
+      s"an overwrite of $tablePath must plan from a full snapshot, not a head")
+    val prevState = read.orElse(Option.when(log.tableExists)(load(log.segment())))
+    val prevSnapshot = prevState.map(_.fold(identity, _.snapshot))
+    // writer gate (the head pass above already gated READER features): a
     // writer missing a declared writer feature could corrupt invariants it
     // does not know exist — fail before anything is staged
     prevSnapshot.foreach(Transaction.gate(_, tablePath))
 
     val partCols =
-      if (exists && partitionColumns.isEmpty && !explicitPartitioning)
+      if (prevSnapshot.isDefined && partitionColumns.isEmpty && !explicitPartitioning)
         prevSnapshot.get.metadata.partitionColumns
       else partitionColumns
     prevSnapshot.foreach { s =>
@@ -479,8 +491,9 @@ object TableWriter {
       // only when every winner is file-disjoint from BOTH its removes AND
       // its read footprint (`readFiles` — e.g. a merge's candidate files,
       // a superset of the files it rewrites) and changed no table metadata.
-      // Two writers deleting different partitions both succeed. With
-      // `readVersion` the winners since that version are checked too.
+      // Two writers deleting different partitions both succeed. The first
+      // attempt is built from the caller's `read`, so the winners since the
+      // caller planned are judged by the same verdict.
       // operation-specific file-count keys are computed here (the caller
       // can't know them before the write); the Delta metric vocabulary is
       // what the metric helpers parse (graft.log.OperationMetric)
@@ -501,8 +514,7 @@ object TableWriter {
       ) ++ extraMetrics ++ opSpecific
       val staged = Option.when(!skipDataWrite)(
         Transaction.Staged(constraints, Option.when(idProps.nonEmpty)(writeProps)))
-      val committed = Transaction.run(log, operation, prevSnapshot, () => loadSnapshot(),
-          readVersion) { attemptSnap =>
+      val committed = Transaction.run(log, operation, prevState, load) { attemptSnap =>
         // appends re-merge onto the attempt's schema; so does a dynamic
         // overwrite, which keeps non-replaced partitions readable (the
         // schema evolves by the append MERGE rule, never narrows)
@@ -541,7 +553,13 @@ object TableWriter {
           Some(Transaction.Footprint(removeFiles.toSet, readFiles.toSet, meta,
             extraActions.collect { case t: SetTransaction => t.appId }.toSet,
             commutable = mode == Append && removeFiles.isEmpty && readFiles.isEmpty,
-            staged, rebased.map(_.path).toSet)))
+            staged,
+            // an overwrite's removes derived from the caller's own read are
+            // judged like those of a winner before the commit's snapshot:
+            // not at all (a rebase re-derives them); only removes derived
+            // from a snapshot reloaded after a lost race conflict
+            if (read.flatMap(_.left.toOption).exists(r => attemptSnap.exists(_ eq r))) Set.empty
+            else rebased.map(_.path).toSet)))
       }
       if (operation != "OPTIMIZE" && !skipDataWrite)
         autoCompact(spark, tablePath, log, committed, effectiveProps,
@@ -669,7 +687,7 @@ object TableWriter {
           "numRemovedFiles" -> candidates.size.toString,
           "numRemovedBytes" -> totalBytes.toString),
         removeFiles = candidates.map(_.path),
-        readVersion = Some(committedVersion))
+        read = Some(Left(snap)))
       ()
     } catch {
       // best-effort by contract: the triggering write has ALREADY committed,

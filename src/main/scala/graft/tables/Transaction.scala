@@ -16,9 +16,10 @@ import scala.util.control.NonFatal
   *  - [[verdict]]: whether a commit that lost the version race may rebase
   *    past the winning commits, from one pass over their actions;
   *  - [[run]]: the bounded retry loop — gate, build the attempt's actions
-  *    from a fresh snapshot, claim the version ([[GraftLog.commit]]), and on
-  *    a lost race read the winners once and ask the verdict. After a commit
-  *    lands, the checkpoint-cadence hook (expired-log cleanup) runs.
+  *    from the caller's snapshot (then from the rebased one), claim the
+  *    version ([[GraftLog.commit]]), and on a lost race list the log once,
+  *    read the winners once and ask the verdict. After a commit lands, the
+  *    checkpoint-cadence hook (expired-log cleanup) runs.
   *
   * [[TableWriter.write]] (every data commit), the GraftTable DDL
   * ([[alter]]) and the version-0 creators ([[create]]) all commit here.
@@ -176,49 +177,53 @@ private[graft] object Transaction {
     */
   final case class Attempt(actions: Seq[Action], footprint: Option[Footprint])
 
-  /** Commit through the bounded optimistic loop. `first` is the snapshot
-    * the commit was prepared from (None: the table does not exist yet);
-    * `reload` loads the snapshot a rebased attempt builds from. With
-    * `readVersion`, the caller decided its writes from that earlier version:
-    * the first attempt also checks every winner that landed between it and
-    * `first` (Delta validates from txn.readVersion for the same reason).
+  /** Commit through the bounded optimistic loop. `first` is the state the
+    * commit was prepared from — Left a full snapshot, Right the head past
+    * the driver-file limit, None: the table does not exist yet — and the
+    * first attempt is built from it, however old: every winner since the
+    * caller's read shows up as a lost claim and goes through the one
+    * verdict (Delta validates from txn.readVersion for the same reason). On
+    * a lost race ONE listing (`log.segment()`) names the winners and is the
+    * segment `reload` builds the rebased attempt's state from. An attempt
+    * built from a full snapshot hands it to [[GraftLog.commit]], so a
+    * cadence checkpoint is written from the committed post-state; a head
+    * has no file list, and its checkpoint folds.
     *
     * @return the committed version
     */
   def run(
       log: GraftLog,
       operation: String,
-      first: Option[Snapshot],
-      reload: () => Snapshot,
-      readVersion: Option[Long] = None)(build: Option[Snapshot] => Attempt): Long = {
-    def check(winners: Seq[Long], fp: Footprint): Unit = verdict(log, winners, fp) match {
-      case Abort(rule, w) =>
-        throw new ConcurrentModificationException(
-          s"commit of $operation to ${log.tablePath} conflicts with a concurrent writer: " +
-            s"version $w $rule; re-run the operation")
-      case Rebase => ()
-    }
+      first: Option[Either[Snapshot, SegmentHead]],
+      reload: LogSegment => Either[Snapshot, SegmentHead])(
+      build: Option[Snapshot] => Attempt): Long = {
     @annotation.tailrec
-    def attempt(n: Int, snap: Option[Snapshot]): Long = {
+    def attempt(n: Int, state: Option[Either[Snapshot, SegmentHead]]): Long = {
+      val snap = state.map(_.fold(identity, _.snapshot))
       snap.foreach(gate(_, log.tablePath))
       val a = build(snap)
       val v = snap.fold(0L)(_.version + 1)
-      if (n == 1) for (rv <- readVersion; fp <- a.footprint)
-        check(rv + 1 until v, fp.copy(rebased = Set.empty))
       val landed =
-        try { log.commit(v, a.actions); true }
+        try { log.commit(v, a.actions, state.flatMap(_.left.toOption)); true }
         catch { case _: CommitConflictException => false }
       if (landed) {
         expireLogs(log, v, a.actions.collectFirst { case m: Metadata => m }
           .orElse(snap.map(_.metadata)).fold(Map.empty[String, String])(_.properties))
         v
       } else {
-        a.footprint.foreach(fp => check(log.versions().filter(_ >= v), fp))
+        val seg = log.segment()
+        a.footprint.map(verdict(log, v to seg.version, _)).foreach {
+          case Abort(rule, w) =>
+            throw new ConcurrentModificationException(
+              s"commit of $operation to ${log.tablePath} conflicts with a concurrent writer: " +
+                s"version $w $rule; re-run the operation")
+          case Rebase => ()
+        }
         if (n >= MaxAttempts)
           throw new ConcurrentModificationException(
             s"$operation on ${log.tablePath} lost $MaxAttempts version races in a row " +
               s"(last at version $v); re-run the operation")
-        attempt(n + 1, Some(reload()))
+        attempt(n + 1, Some(reload(seg)))
       }
     }
     attempt(1, first)
@@ -233,8 +238,8 @@ private[graft] object Transaction {
     */
   def alter(log: GraftLog, operation: String)(
       mk: Snapshot => (Metadata, Map[String, String])): Long = {
-    val load = () => log.snapshot()
-    run(log, operation, Some(load()), load) { snap =>
+    val load: LogSegment => Either[Snapshot, SegmentHead] = seg => Left(log.fold(log.replayHead(seg)))
+    run(log, operation, Some(load(log.segment())), load) { snap =>
       val s = snap.get
       val (m, params) = mk(s)
       Attempt(Seq(m, CommitInfo(System.currentTimeMillis(), operation, operationParameters = params)) ++
@@ -249,7 +254,7 @@ private[graft] object Transaction {
     */
   def create(log: GraftLog, metadata: Metadata, files: Seq[Action], commitInfo: CommitInfo,
       protocol: Option[Protocol] = None): Long =
-    run(log, commitInfo.operation, None, () => log.head()) {
+    run(log, commitInfo.operation, None, seg => Right(log.replayHead(seg))) {
       case Some(_) => throw new IllegalArgumentException(s"${log.tablePath} already exists")
       case None =>
         val proto = upgrade(protocol.getOrElse(Protocol()), metadata.properties).orElse(protocol)

@@ -10,12 +10,13 @@ package graft.tables
   *
   * Log layout: `<table>/_graft_log/<%020d>.json`, one JSON document per line,
   * each line an object with exactly one of the keys
-  * `metadata | add | remove | cdc | commitInfo`.
+  * `metadata | protocol | txn | add | remove | cdc | commitInfo`.
   *
   * Scale note: the log holds *metadata only* (O(files) per commit, no data).
-  * Snapshot reconstruction is a driver-side fold over log files; at very large
-  * version counts a checkpoint (materialized snapshot every N commits) bounds
-  * replay cost — see [[GraftLog.snapshot]].
+  * Snapshot reconstruction is a fold over log files — on the driver, or on
+  * executors past the driver-file limit; a checkpoint (the materialized
+  * snapshot, every N commits) bounds replay cost — see [[GraftLog.snapshot]]
+  * and [[DistributedSnapshot]].
   */
 sealed trait Action
 
@@ -59,8 +60,8 @@ case class AddFile(
   */
 case class DvDescriptor(path: String, cardinality: Long)
 
-/** A data file logically removed at this version (file stays on disk for
-  * time travel / CDF until a vacuum, which this substrate does not implement).
+/** A data file logically removed at this version (the file stays on disk
+  * for time travel / CDF until a vacuum past its retention deletes it).
   */
 case class RemoveFile(path: String) extends Action
 
@@ -79,8 +80,13 @@ case class AddCDCFile(path: String, size: Long = 0L) extends Action
   */
 case class SetTransaction(appId: String, version: Long) extends Action
 
-/** Commit provenance. `operation` ∈ {WRITE, MERGE, DELETE, UPDATE, OPTIMIZE,
-  * CREATE TABLE}; `operationParameters` may carry a `predicate` string;
+/** Commit provenance. `operation` names what committed: a data write
+  * (WRITE, STREAMING UPDATE, COPY INTO, MERGE, DELETE, UPDATE, RESTORE,
+  * REPARTITION, FSCK, COMPUTE STATS, CREATE OR REPLACE TABLE [AS SELECT]),
+  * a layout-only OPTIMIZE, DDL (SET/UNSET TBLPROPERTIES, ADD/DROP/RENAME
+  * COLUMN(S), ALTER COLUMN TYPE, ADD/DROP CONSTRAINT, ...) or a version-0
+  * creator (CREATE TABLE, CONVERT, CLONE); `operationParameters` may carry a
+  * `predicate` string;
   * `operationMetrics` uses Delta's metric key names (numTargetRowsInserted,
   * numOutputRows, ...) so the metric helpers match the reference
   * (`delta/OperationMetric.scala:4-43`).

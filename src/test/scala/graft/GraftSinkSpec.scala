@@ -157,7 +157,8 @@ class GraftSinkSpec extends AnyFunSpec with SparkSessionTestWrapper {
     // epoch 1) at version v0, then the healthy instance committed epoch 1 —
     // the zombie's commit lands later at a FRESH version number (no version
     // collision!), so only read-version validation can catch it
-    val v0 = log.latestVersion()
+    val read = log.snapshot()
+    val v0 = read.version
     log.commit(v0 + 1, Seq(
       SetTransaction("appA", 1L),
       graft.tables.CommitInfo(System.currentTimeMillis(), "STREAMING UPDATE")))
@@ -166,7 +167,7 @@ class GraftSinkSpec extends AnyFunSpec with SparkSessionTestWrapper {
         spark, dir, Seq((1L, "dup")).toDF("id", "v"), graft.tables.TableWriter.Append,
         operation = "STREAMING UPDATE",
         extraActions = Seq(SetTransaction("appA", 1L)),
-        readVersion = Some(v0))
+        read = Some(Left(read)))
     }
     // the abort names the watermark's appId and the winning version
     assert(e.getMessage.contains("appId appA") &&
@@ -176,7 +177,7 @@ class GraftSinkSpec extends AnyFunSpec with SparkSessionTestWrapper {
       spark, dir, Seq((7L, "ok")).toDF("id", "v"), graft.tables.TableWriter.Append,
       operation = "STREAMING UPDATE",
       extraActions = Seq(SetTransaction("appB", 0L)),
-      readVersion = Some(v0))
+      read = Some(Left(read)))
     val rows = GraftTable.forPath(spark, dir).toDF
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
     assert(rows == Set((0L, "seed"), (7L, "ok")))

@@ -682,7 +682,8 @@ class GraftTableSpec extends AnyFunSpec with SparkSessionTestWrapper {
     it("a commit removing a path a winner re-added aborts (restore-revival guard)") {
       val t = GraftTable.create(spark, tmpTableDir("graft-readd-conflict"),
         Seq((1, "a")).toDF("id", "name").repartition(1))
-      val victim = t.snapshot.files.head.path
+      val read = t.snapshot
+      val victim = read.files.head.path
       // winner at v1 re-adds the same path — what a concurrent RESTORE does
       // when it revives a previously-removed file
       t.log.commit(1L, Seq(AddFile(victim),
@@ -690,7 +691,7 @@ class GraftTableSpec extends AnyFunSpec with SparkSessionTestWrapper {
       val e = intercept[java.util.ConcurrentModificationException] {
         TableWriter.write(spark, t.path, t.toDF.limit(0), TableWriter.Append,
           operation = "FSCK", removeFiles = Seq(victim),
-          readVersion = Some(0L), skipDataWrite = true)
+          read = Some(Left(read)), skipDataWrite = true)
       }
       assert(e.getMessage.contains("conflict"), e.getMessage)
       // ... and names the re-added path and the winning version
@@ -999,7 +1000,8 @@ class GraftTableSpec extends AnyFunSpec with SparkSessionTestWrapper {
       import org.apache.spark.sql.types.IntegerType
       val snap = GraftTable.forPath(spark, dir).snapshot
       val index = new graft.sources.GraftFileIndex(spark, dir,
-        org.apache.spark.sql.types.StructType(snap.schema.fields.filter(_.name == "seg")))
+        org.apache.spark.sql.types.StructType(snap.schema.fields.filter(_.name == "seg")),
+        snap, followsLog = true)
       val all = index.listFiles(Nil, Nil).flatMap(_.files)
       val pruned = index.listFiles(
         Seq(EqualTo(AttributeReference("seg", IntegerType)(), Literal(2))), Nil).flatMap(_.files)
